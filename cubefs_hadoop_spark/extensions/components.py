@@ -2,25 +2,25 @@
 "connected components via iterative self-join").
 
 After LSH emits candidate pairs, dedup groups are the connected components
-of the pair graph: keep one doc per component.  Algorithm: iterative
-min-label propagation — every vertex repeatedly adopts the smallest label
-among itself and its neighbors.  Converges in O(diameter) rounds (NOT
-O(log d) — that bound belongs to the alternating large/small-star
-algorithm); each round is one join + one aggregate, both plain shuffles on
-doc_id, so the pattern runs unchanged on a 1000-executor cluster.  Near-dup
-clusters are dense and shallow (diameter is small in practice), which is
-why plain propagation is the default; a chain-shaped graph needs max_iter
->= its diameter.  Deterministic (labels are doc_ids; no RNG).
+of the pair graph: keep one doc per component, labelled by its minimum
+doc_id.  Two tiers, chosen on the measured pair count by
+:func:`connected_components_auto`:
 
-The loop is driver-side but each iteration is fully distributed; the only
-driver-visible value per round is the convergence count.
+- driver union-find (:func:`connected_components_driver`) for pair sets
+  under ``cfspark.cc.driver.threshold`` — near-dup graphs are
+  duplicate-sized, not corpus-sized, so this is the common case;
+- alternating large/small-star rounds (:func:`connected_components_star`,
+  Kiveris et al. SoCC'14) above it: O(log^2 n) rounds independent of the
+  graph diameter, each round plain shuffles on doc ids, so the pattern runs
+  unchanged on a 1000-executor cluster.
 
-Durability (round-2): per-round materialization goes through
-``plans.materialize.barrier`` — ``reliable=True`` checkpoints iteration
-state to the warehouse checkpoint dir so an executor loss mid-round does
-not kill the job (VERDICT r01 "What's wrong" #3).  Exhausting ``max_iter``
-without converging RAISES ``UnconvergedError`` instead of silently
-returning wrong labels (ADVICE r01).
+Deterministic (labels are doc_ids; no RNG).  Durability (round-2):
+per-round materialization goes through ``plans.materialize.barrier`` —
+``reliable=True`` checkpoints iteration state to the warehouse checkpoint
+dir so an executor loss mid-round does not kill the job (VERDICT r01
+"What's wrong" #3).  Exhausting ``max_iter`` without converging RAISES
+``UnconvergedError`` instead of silently returning wrong labels (ADVICE
+r01).
 """
 
 from __future__ import annotations
@@ -32,69 +32,8 @@ from cubefs_hadoop_spark.plans.materialize import barrier
 
 
 class UnconvergedError(RuntimeError):
-    """Label propagation exhausted max_iter with labels still changing —
+    """Star rounds exhausted max_iter with the edge set still changing —
     the returned labels would be wrong (some components split)."""
-
-
-def connected_components(
-    pairs: DataFrame, max_iter: int = 20, reliable: bool = False
-) -> DataFrame:
-    """(da, db) undirected edges -> (doc_id, component) with component =
-    min doc_id reachable.  Isolated vertices are absent (a doc with no
-    near-dup pair is its own trivial component).
-
-    ``reliable=True`` uses fault-tolerant checkpoints for per-round state
-    (required on a real cluster; local mode works either way).  Raises
-    :class:`UnconvergedError` if ``max_iter`` rounds don't converge —
-    raise ``max_iter`` to at least the expected graph diameter.
-    """
-    edges = (
-        pairs.select(F.col("da").alias("src"), F.col("db").alias("dst"))
-        .union(pairs.select(F.col("db").alias("src"), F.col("da").alias("dst")))
-        .distinct()
-    )
-    # initial label: min neighbor (or self if smaller)
-    labels = edges.groupBy("src").agg(
-        F.least(F.min("dst"), F.first("src")).alias("comp")
-    ).select(F.col("src").alias("doc_id"), "comp")
-
-    changed = -1
-    for _ in range(max_iter):
-        # propagate: my new label = min(my label, labels of my neighbors)
-        neighbor_labels = (
-            edges.join(labels, edges.dst == labels.doc_id)
-            .groupBy("src")
-            .agg(F.min("comp").alias("ncomp"))
-        )
-        new_labels = (
-            labels.join(neighbor_labels, labels.doc_id == neighbor_labels.src, "left")
-            .select(
-                "doc_id",
-                F.least(
-                    F.col("comp"), F.coalesce(F.col("ncomp"), F.col("comp"))
-                ).alias("comp"),
-            )
-        )
-        # materialize FIRST (lineage cut), then count convergence against
-        # the old labels — counting the un-checkpointed frame would compute
-        # the whole propagation join twice per round
-        new_labels = barrier(new_labels, eager=True, reliable=reliable)
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "doc_id")
-            .filter(F.col("n.comp") != F.col("o.comp"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    if changed != 0:
-        raise UnconvergedError(
-            f"label propagation still changing after {max_iter} rounds "
-            f"({changed} labels moved last round); raise max_iter to >= the "
-            "graph diameter"
-        )
-    return labels
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -142,8 +81,8 @@ def connected_components_star(
     MapReduce and Beyond", SoCC'14 — public algorithm): converges in
     O(log^2 n) rounds INDEPENDENT OF GRAPH DIAMETER, each round two
     groupBy+join shuffles.  This is the 100 TB path for chain-shaped or
-    high-diameter graphs where plain min-label propagation
-    (:func:`connected_components`) would need O(diameter) rounds.
+    high-diameter graphs, where min-label propagation would need
+    O(diameter) rounds.
 
     Convergence is detected by an order-insensitive edge-set signature
     (count + sum of per-edge hashes) going stable — no driver-side edge
@@ -199,29 +138,12 @@ def connected_components_star(
 
 
 def dedup_keep_list(
-    docs: DataFrame,
-    pairs: DataFrame,
-    reliable: bool = False,
-    algorithm: str = "auto",
+    docs: DataFrame, pairs: DataFrame, reliable: bool = False
 ) -> DataFrame:
     """Final near-dup dedup decision: for every doc, keep=True unless it is
     a non-representative member of a component (representative = min doc_id).
-    ``algorithm``: "auto" (default) size-tiers between driver union-find
-    and large/small-star on the measured pair count; "star" forces the
-    diameter-independent rounds; "propagation" forces min-label
-    propagation (O(diameter) rounds — dense shallow graphs only).  All
-    three produce identical labels (tests pin the equality)."""
-    algos = {
-        "auto": connected_components_auto,
-        "star": connected_components_star,
-        "propagation": connected_components,
-    }
-    if algorithm not in algos:
-        raise ValueError(
-            f"dedup_keep_list: unknown algorithm {algorithm!r}; "
-            f"expected one of {sorted(algos)}"
-        )
-    comps = algos[algorithm](pairs, reliable=reliable)
+    Components come from the size-tiered :func:`connected_components_auto`."""
+    comps = connected_components_auto(pairs, reliable=reliable)
     drop = comps.filter(F.col("doc_id") != F.col("comp")).select("doc_id")
     return docs.join(drop, "doc_id", "left_anti")
 

@@ -25,11 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from cubefs_hadoop_spark.catalog import load
-from cubefs_hadoop_spark.plans.materialize import (
-    barrier,
-    is_materialized,
-    materialize_async,
-)
+from cubefs_hadoop_spark.plans.materialize import barrier, materialize_async
 from cubefs_hadoop_spark.plans.parallelism import widen_for_cpu
 from cubefs_hadoop_spark.registry import register
 from cubefs_hadoop_spark.oracle_compat import r2d
@@ -2284,12 +2280,6 @@ def centrality_canonical(docs: DataFrame) -> DataFrame:
     both frames are deterministic and the join order is unchanged."""
     pairs = barrier(lsh_candidate_pairs(docs), eager=True)  # feeds CC + pr
     score = neardup_pagerank_from_pairs(pairs)
-    if not is_materialized(pairs):
-        # barriers disabled (audit escape hatch): the overlap contract
-        # ("threads only read checkpointed blocks") cannot hold, and the
-        # background thread would recompute the whole LSH pipeline in
-        # parallel with the main thread (ADVICE r14) — run sequentially.
-        return elect_canonical(docs, pairs, score=score)
     bg = materialize_async(score)
     try:
         out = elect_canonical(docs, pairs, score=score)

@@ -9,9 +9,10 @@ assert them instead of a human eyeballing explain output.
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, fields
+from typing import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 
 @dataclass
@@ -40,27 +41,85 @@ class PlanAudit:
 
 
 def audit_plan(df: DataFrame, executed: bool = False) -> PlanAudit:
-    """Parse the formatted physical plan into assertable facts.
+    """Audit the formatted physical plan of ``df`` itself.
 
     ``executed=True`` runs the query first and audits the FINAL adaptive
     plan — AQE's initial plan carries no codegen annotations and may still
     show exchanges that runtime re-planning (broadcast demotion, partition
-    coalescing) removes."""
+    coalescing) removes.  Work ``df`` was built from (construction-time
+    actions, pipelines behind a barrier) is invisible here; see
+    :func:`audit_run`."""
     if executed:
         df.collect()
     je = df._jdf.queryExecution()
     mode = df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
         "formatted"
     )
-    text = je.explainString(mode)
+    return audit_text(je.explainString(mode))
+
+
+def audit_run(spark: SparkSession, action: Callable[[], object]) -> list[PlanAudit]:
+    """Run ``action`` and audit every SQL execution it started, one audit
+    per execution, in execution order.
+
+    The plans come from Spark's SQL status store, which records each
+    action — every eager ``localCheckpoint``, count and collect a query
+    runs while it is being built — with the formatted plan that actually
+    ran (the AQE final plan once the execution finished).  So a query that
+    does its work behind lineage cuts and returns a driver-sized literal
+    is audited on the pipelines it executed, not on the literal."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    first = _last_execution_id(spark, store) + 1
+    action()
+    last = _last_execution_id(spark, store)
+    out = []
+    for i in range(first, last + 1):
+        e = store.execution(i)
+        if not e.isEmpty():
+            out.append(audit_text(e.get().physicalPlanDescription()))
+    return out
+
+
+def _last_execution_id(spark: SparkSession, store) -> int:
+    # drain the listener bus first: the store is filled from its events.
+    # Ids, not counts: the store evicts old executions past
+    # spark.sql.ui.retainedExecutions, so its count stops growing.
+    spark._jsc.sc().listenerBus().waitUntilEmpty()
+    n = store.executionsCount()
+    return store.executionsList(n - 1, 1).head().executionId() if n else -1
+
+
+def combine(audits: list[PlanAudit]) -> PlanAudit:
+    """One audit over several executions: facts lists concatenate,
+    operator counts add, flags OR."""
+    zero = PlanAudit()
+    merged = {}
+    for f in fields(PlanAudit):
+        vals = [getattr(a, f.name) for a in audits]
+        z = getattr(zero, f.name)
+        if isinstance(z, bool):
+            merged[f.name] = any(vals)
+        elif isinstance(z, str):
+            merged[f.name] = "\n".join(vals)
+        else:
+            merged[f.name] = sum(vals, z)
+    return PlanAudit(**merged)
+
+
+def audit_text(text: str) -> PlanAudit:
+    """Parse a formatted physical plan into assertable facts."""
     a = PlanAudit(text=text)
 
     # An executed adaptive plan prints the final tree AND the pre-AQE
     # "Initial Plan" tree, with detail blocks for the nodes of both.
     # Audit the final tree only, and keep only detail blocks whose node id
-    # appears in it — otherwise every operator counts twice.
+    # appears in it — otherwise every operator counts twice.  The status
+    # store may hold the last update AQE posted before it flagged the plan
+    # final; that tree is headed "Current Plan" and is audited the same way.
     tree = text
-    m = re.search(r"== Final Plan ==(.*?)== Initial Plan ==", text, re.DOTALL)
+    m = re.search(
+        r"== (?:Final|Current) Plan ==(.*?)== Initial Plan ==", text, re.DOTALL
+    )
     if m:
         tree = m.group(1)
         final_ids = set(re.findall(r"\((\d+)\)", tree))

@@ -90,23 +90,6 @@ def barrier(
     """
     if is_materialized(df):
         return df
-    try:
-        # audit-only escape hatch (VERDICT r13 #5): with barriers
-        # disabled the probed frame exposes its FULL pipeline to
-        # explain/audit_plan — a lineage cut hides every upstream
-        # operator from the plan gate.  Semantics are unchanged
-        # (barriers only pick execution strategy); never set this for
-        # production runs — the barriered pipelines re-execute per
-        # downstream action without it.
-        if (
-            str(
-                df.sparkSession.conf.get("cfspark.barriers.disabled", "false")
-            ).lower()
-            == "true"
-        ):
-            return df
-    except Exception:
-        pass
     if reliable is None:
         try:
             reliable = (

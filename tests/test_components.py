@@ -2,42 +2,47 @@
 
 from __future__ import annotations
 
-import pytest
-
 from pyspark.sql import functions as F
 
 from cubefs_hadoop_spark.extensions.components import (
-    connected_components,
+    connected_components_driver,
+    connected_components_star,
     dedup_keep_list,
 )
 from cubefs_hadoop_spark.extensions.dedup import x02_minhash_lsh
 from tests.conftest import SF_SMOKE
 
 
+def _labels(comps):
+    return {r.doc_id: r.comp for r in comps.collect()}
+
+
 def test_components_on_crafted_graph(spark):
-    # two chains {1-2-3}, {10-11}, one isolate implied by absence (99)
+    # chains {1-2-3}, {5-7, 5-9} (edge listed high-to-low), pair {10-11};
+    # an isolate is implied by absence (99)
     pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11)], "da bigint, db bigint"
+        [(1, 2), (2, 3), (10, 11), (7, 5), (5, 9)], "da bigint, db bigint"
     )
-    comps = {r.doc_id: r.comp for r in connected_components(pairs).collect()}
-    assert comps == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
+    want = {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 5: 5, 7: 5, 9: 5}
+    assert _labels(connected_components_star(pairs)) == want
+    assert _labels(connected_components_driver(pairs)) == want
 
 
-def test_components_chain_needs_propagation(spark):
-    # a long path 0-1-2-...-9 exercises multi-round label propagation
+def test_components_chain_converges(spark):
+    # a long path 0-1-2-...-9: one component whatever the diameter
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(9)], "da bigint, db bigint"
     )
-    comps = {r.doc_id: r.comp for r in connected_components(pairs).collect()}
-    assert set(comps.values()) == {0}
-    assert len(comps) == 10
+    want = {i: 0 for i in range(10)}
+    assert _labels(connected_components_star(pairs)) == want
+    assert _labels(connected_components_driver(pairs)) == want
 
 
 def test_dedup_keep_list_on_fixture(spark):
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
     pairs = x02_minhash_lsh(spark, SF_SMOKE)
     kept = dedup_keep_list(docs, pairs)
-    comps = connected_components(pairs)
+    comps = connected_components_star(pairs)
     n_drop = comps.filter(F.col("doc_id") != F.col("comp")).count()
     assert kept.count() == docs.count() - n_drop
     # representatives (min doc_id of each component) are all kept
@@ -46,67 +51,28 @@ def test_dedup_keep_list_on_fixture(spark):
     assert reps <= kept_ids
 
 
-def test_star_components_match_propagation_on_crafted_graph(spark):
-    from cubefs_hadoop_spark.extensions.components import connected_components_star
-
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11), (7, 5), (5, 9)], "da bigint, db bigint"
-    )
-    star = {r.doc_id: r.comp for r in connected_components_star(pairs).collect()}
-    plain = {r.doc_id: r.comp for r in connected_components(pairs).collect()}
-    assert star == plain == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 5: 5, 7: 5, 9: 5}
-
-
 def test_star_components_beat_diameter_bound(spark):
-    """A 64-hop chain: plain propagation needs ~64 rounds (raises at
-    max_iter=20); large/small-star converges in O(log^2 n) rounds."""
-    from cubefs_hadoop_spark.extensions.components import (
-        UnconvergedError,
-        connected_components_star,
-    )
-
+    """A 64-hop chain: min-label propagation would need ~64 rounds;
+    large/small-star converges in O(log^2 n) rounds."""
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(63)], "da bigint, db bigint"
     )
-    with pytest.raises(UnconvergedError):
-        connected_components(pairs, max_iter=20)
-    comps = {r.doc_id: r.comp for r in connected_components_star(pairs, max_iter=15).collect()}
+    comps = _labels(connected_components_star(pairs, max_iter=15))
     assert set(comps.values()) == {0} and len(comps) == 64
 
 
-def test_star_components_on_fixture_pairs(spark):
-    from cubefs_hadoop_spark.extensions.components import connected_components_star
-
-    pairs = x02_minhash_lsh(spark, SF_SMOKE)
-    star = {r.doc_id: r.comp for r in connected_components_star(pairs).collect()}
-    plain = {r.doc_id: r.comp for r in connected_components(pairs).collect()}
-    assert star == plain
-
-
 def test_driver_tier_matches_distributed_on_fixture_pairs(spark):
-    """Union-find driver tier vs star vs propagation: identical labels on
-    the fixture pair graph and on a crafted graph with chains + isolated
-    pairs — the tier choice can never change the answer."""
-    from cubefs_hadoop_spark.extensions.components import (
-        connected_components_driver,
-        connected_components_star,
-    )
-
+    """Union-find driver tier vs star: identical labels on the fixture
+    pair graph and on a crafted graph with chains + isolated pairs — the
+    tier choice can never change the answer."""
     crafted = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11), (7, 5), (5, 9), (20, 21)],
         "da bigint, db bigint",
     )
     fixture = x02_minhash_lsh(spark, SF_SMOKE)
     for pairs in (crafted, fixture):
-        drv = {
-            r.doc_id: r.comp
-            for r in connected_components_driver(pairs).collect()
-        }
-        star = {
-            r.doc_id: r.comp
-            for r in connected_components_star(pairs).collect()
-        }
-        assert drv == star
+        drv = _labels(connected_components_driver(pairs))
+        assert drv and drv == _labels(connected_components_star(pairs))
 
 
 def test_auto_tier_gates_on_threshold_and_conf(spark):

@@ -13,7 +13,7 @@ from cubefs_hadoop_spark.engine import Engine
 from cubefs_hadoop_spark.errors import EngineIOError
 from cubefs_hadoop_spark.extensions.components import (
     UnconvergedError,
-    connected_components,
+    connected_components_star,
 )
 from cubefs_hadoop_spark.plans.materialize import barrier, ensure_checkpoint_dir
 from tests.conftest import SF_SMOKE
@@ -72,7 +72,7 @@ def test_components_reliable_checkpoint(spark, tmp_path):
     )
     comps = {
         r.doc_id: r.comp
-        for r in connected_components(pairs, reliable=True).collect()
+        for r in connected_components_star(pairs, reliable=True).collect()
     }
     assert comps == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
     # checkpoint files actually landed in the reliable dir
@@ -96,12 +96,12 @@ def test_ensure_checkpoint_dir_is_idempotent(spark):
 
 
 def test_components_unconverged_raises(spark):
-    # a 10-hop chain cannot converge in 2 rounds of min-label propagation
+    # a 10-hop chain cannot converge in 2 large/small-star rounds
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(9)], "da bigint, db bigint"
     )
     with pytest.raises(UnconvergedError):
-        connected_components(pairs, max_iter=2)
+        connected_components_star(pairs, max_iter=2)
 
 
 # -- background materialization (guide §2.6 job overlap) ---------------------

@@ -7,7 +7,12 @@ import re
 
 import pytest
 
-from cubefs_hadoop_spark.plans.audit import audit_plan
+from cubefs_hadoop_spark.plans.audit import (
+    audit_plan,
+    audit_run,
+    audit_text,
+    combine,
+)
 from cubefs_hadoop_spark.queries import QUERIES
 from tests.conftest import SF_SMOKE
 
@@ -1195,49 +1200,91 @@ def test_x113_catalog_turnover_shape(spark):
     assert "SinglePartition" not in a.text
 
 
-def test_x61_candidate_pipeline_gate(spark):
-    """VERDICT r13 #5: the plan gate must see x61's REAL pipelines, not
-    the 1-row literal it returns.  Probe the internal candidate/truth
-    frames (plans/probes.py, barriers disabled): the LSH candidate side
-    is the bucketed (band, key) equi-join — no NLJ, no Python, and the
-    distinct runs on skinny id pairs; the truth side is the
-    inverted-index join — equi-join on the shingle, never pairwise sets.
-    """
-    from cubefs_hadoop_spark.plans.probes import (
-        PLAN_PROBES,
-        barriers_disabled,
+def _audit_executions(spark, name):
+    """Every execution the query ran — its construction-time actions and
+    eager barriers included — summed into one audit."""
+    spark.catalog.clearCache()
+    return combine(
+        audit_run(spark, lambda: QUERIES[name](spark, SF_SMOKE).collect())
     )
 
-    spark.catalog.clearCache()
-    with barriers_disabled(spark):
-        frames = PLAN_PROBES["x61_lsh_quality_audit"](spark, SF_SMOKE)
-        cand = audit_plan(frames["candidates"])
-        truth = audit_plan(frames["truth"])
-    assert cand.nested_loop_joins == 0
-    assert not cand.has_python_eval
-    assert cand.shuffles >= 1  # the (band, key) bucket join is real
-    assert truth.nested_loop_joins == 0
-    assert not truth.has_python_eval
+
+def test_x61_candidate_pipeline_gate(spark):
+    """VERDICT r13 #5: the plan gate must see x61's REAL pipelines, not
+    the 1-row literal it returns.  Audit the executions that ran: the
+    LSH candidate side is the bucketed (band, key) equi-join and the
+    truth side the inverted-index join on the shingle — no NLJ, no
+    Python, never pairwise sets."""
+    a = _audit_executions(spark, "x61_lsh_quality_audit")
+    assert a.nested_loop_joins == 0
+    assert not a.has_python_eval
+    assert a.broadcast_joins + a.sort_merge_joins >= 2  # candidates + truth
+    assert a.shuffles >= 1  # the (band, key) bucket join is real
     # both pipelines prune the documents scan to (doc_id, text)
-    for a in (cand, truth):
-        assert all(cols <= {"doc_id", "text"} for cols in a.scan_columns())
+    assert a.read_schemas
+    assert all(cols <= {"doc_id", "text"} for cols in a.scan_columns())
 
 
 def test_x97_funnel_pipeline_gate(spark):
     """x97's scale path is the per-user funnel frame: one user-keyed
-    exchange family, no NLJ, no Python (probed — the registered query
-    returns a 3-row literal)."""
-    from cubefs_hadoop_spark.plans.probes import (
-        PLAN_PROBES,
-        barriers_disabled,
-    )
-
-    spark.catalog.clearCache()
-    with barriers_disabled(spark):
-        frames = PLAN_PROBES["x97_funnel_rates"](spark, SF_SMOKE)
-        a = audit_plan(frames["per_user_funnel"])
+    exchange family, no NLJ, no Python (audited on the executions that
+    ran — the registered query returns a 3-row literal)."""
+    a = _audit_executions(spark, "x97_funnel_rates")
+    assert a.read_schemas
     assert a.nested_loop_joins == 0
     assert not a.has_python_eval
+
+
+def test_audit_run_sees_through_barriers(spark):
+    """A Python UDF and a cross join behind an eager barrier, returned as
+    a driver-sized literal: the literal's own plan shows neither, the
+    executions that ran show both.  Every barrier cuts lineage — there is
+    no mode in which it hands back the uncut frame."""
+    from pyspark.sql import functions as F
+
+    from cubefs_hadoop_spark.plans.materialize import barrier, is_materialized
+
+    plus_one = F.udf(lambda v: v + 1, "long")
+    built = []
+
+    def build():
+        pipe = spark.range(20).crossJoin(
+            spark.range(3).withColumnRenamed("id", "k")
+        )
+        cut = barrier(pipe.select(plus_one("id").alias("v"), "k"), eager=True)
+        assert is_materialized(cut)
+        built.append(spark.createDataFrame([(cut.count(),)], "n long"))
+
+    audits = audit_run(spark, build)
+    lit = audit_plan(built[0])
+    assert not lit.has_python_eval and lit.nested_loop_joins == 0
+    ran = combine(audits)
+    assert ran.has_python_eval and ran.nested_loop_joins >= 1
+    assert is_materialized(barrier(spark.range(5), eager=False))
+    assert is_materialized(barrier(spark.range(5), eager=True, reliable=True))
+
+
+def test_audit_text_reads_current_plan_once():
+    """The status store can hold AQE's last update from before the plan
+    was flagged final ("Current Plan"): its operators count once, not
+    once per tree."""
+    a = audit_text(
+        "== Physical Plan ==\n"
+        "AdaptiveSparkPlan (5)\n"
+        "+- == Current Plan ==\n"
+        "   ShuffleQueryStage (3)\n"
+        "   +- Exchange (2)\n"
+        "      +- Scan parquet  (1)\n"
+        "+- == Initial Plan ==\n"
+        "   Exchange (4)\n"
+        "   +- Scan parquet  (1)\n\n\n"
+        "(1) Scan parquet\nReadSchema: struct<a:int>\n\n"
+        "(2) Exchange\nArguments: hashpartitioning(a#1, 8)\n\n"
+        "(3) ShuffleQueryStage\nOutput [1]: [a#1]\n\n"
+        "(4) Exchange\nArguments: hashpartitioning(a#1, 8)\n"
+    )
+    assert a.shuffles == 1
+    assert a.read_schemas == ["struct<a:int>"]
 
 
 def test_x114_discount_bands_shape(spark):

@@ -182,31 +182,9 @@ REPORT_QUERIES = [
 ]
 
 
-# queries whose audited plan intentionally starts at an optimizer
-# barrier (plans/materialize.barrier): the upstream pipeline's pushdown
-# ran in its own job and is invisible to the final explain — say so in
-# the detail section instead of printing a suspicious empty block
-BARRIER_NOTES = {
-    "x28_canonical_dedup": (
-        "input is the CONVERGED component labels (the LSH pair pipeline "
-        "materializes behind an eager barrier and the size-tiered CC ran "
-        "its own jobs — driver union-find under the threshold, star "
-        "rounds above); this plan covers the final label-join back over "
-        "the corpus only"
-    ),
-    "x27_series_similarity": (
-        "input is BARRIERED (localCheckpoint): the gapfill+vector "
-        "pipeline — incl. its pushed ts/user_id filters — runs once in "
-        "a prior job so BOTH join sides reuse it; this plan covers the "
-        "broadcast-probe distance + WindowGroupLimit top-k only"
-    ),
-}
-
-
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    from cubefs_hadoop_spark.plans.audit import audit_plan
-    from cubefs_hadoop_spark.plans.probes import PLAN_PROBES, barriers_disabled
+    from cubefs_hadoop_spark.plans.audit import audit_run, combine
     from cubefs_hadoop_spark.queries import QUERIES
     from cubefs_hadoop_spark.session import get_spark
 
@@ -218,15 +196,20 @@ def main() -> None:
         "",
         f"Generated by `python tools/plan_report.py {sf_dir}`.",
         "Facts extracted with `plans/audit.py` (the same parser the",
-        "plan-quality test gate uses, tests/test_plan_quality.py).",
+        "plan-quality test gate uses, tests/test_plan_quality.py) from every",
+        "SQL execution the query ran — construction-time actions and eager",
+        "barriers included — as Spark's SQL status store recorded them; each",
+        "row sums its query's executions.",
         "",
         "| query | joins (BHJ/SMJ/NLJ) | shuffles | pushed filters | scan cols | codegen | top-k / window-limit | python |",
         "|---|---|---|---|---|---|---|---|",
     ]
     details: list[str] = []
     for name in REPORT_QUERIES:
-        df = QUERIES[name](spark, sf_dir)
-        a = audit_plan(df, executed=True)
+        spark.catalog.clearCache()
+        a = combine(
+            audit_run(spark, lambda: QUERIES[name](spark, sf_dir).collect())
+        )
         pushed = sum(
             0 if f in ("[]", "") else len(f.strip("[]").split(","))
             for f in a.pushed_filters
@@ -247,56 +230,10 @@ def main() -> None:
         )
         # per-query detail: the scan lines that prove pushdown/pruning
         det = [f"### {name}", "```"]
-        if name in BARRIER_NOTES:
-            det.append(f"NOTE: {BARRIER_NOTES[name]}")
-        for f in a.pushed_filters:
-            det.append(f"PushedFilters: {f}")
-        for rs in a.read_schemas:
-            det.append(f"ReadSchema: {rs}")
+        det += dict.fromkeys(f"PushedFilters: {f}" for f in a.pushed_filters)
+        det += dict.fromkeys(f"ReadSchema: {rs}" for rs in a.read_schemas)
         det.append("```")
         details.append("\n".join(det))
-
-    # Audit-family internal pipelines (VERDICT r13 #5): these queries
-    # compute their work in construction-time actions and return a
-    # driver-sized literal, so the rows above are blind to the real
-    # pipelines.  Audit the internal frames via plans/probes.py, with
-    # barriers disabled so lineage cuts don't hide upstream operators.
-    probe_lines = [
-        "",
-        "## Audit-family internal pipelines",
-        "",
-        "The queries above marked 0 joins / 0 scan cols do their work in",
-        "construction-time actions; these rows audit the internal frames",
-        "those actions consume (`plans/probes.py`, barriers disabled so",
-        "the full pipeline is visible to explain).",
-        "",
-        "| query[frame] | joins (BHJ/SMJ/NLJ) | shuffles | pushed filters | scan cols | codegen | top-k / window-limit | python |",
-        "|---|---|---|---|---|---|---|---|",
-    ]
-    with barriers_disabled(spark):
-        for name, probe_fn in PLAN_PROBES.items():
-            spark.catalog.clearCache()
-            for label, frame in probe_fn(spark, sf_dir).items():
-                a = audit_plan(frame, executed=True)
-                pushed = sum(
-                    0 if f in ("[]", "") else len(f.strip("[]").split(","))
-                    for f in a.pushed_filters
-                )
-                cols = sorted({c for s in a.scan_columns() for c in s})
-                topk = []
-                if a.has_take_ordered:
-                    topk.append("TakeOrdered")
-                if a.has_window_group_limit:
-                    topk.append("WindowGroupLimit")
-                probe_lines.append(
-                    f"| {name}[{label}] | {a.broadcast_joins}/"
-                    f"{a.sort_merge_joins}/{a.nested_loop_joins} | "
-                    f"{a.shuffles} | {pushed} | {len(cols)} | "
-                    f"{'y' if a.has_codegen else 'n'} | "
-                    f"{'+'.join(topk) or '—'} | "
-                    f"{'y' if a.has_python_eval else '—'} |"
-                )
-    lines += probe_lines
 
     lines += [
         "",
