@@ -7,7 +7,9 @@ median is just a mean, which let one noisy sample inflate x02/t21 in the
 r03 record; see BASELINE.md), and prints ONE JSON line:
 
     {"metric": "bench_total_sec", "value": N, "unit": "sec",
-     "queries": {...}, "sf": 0.1}
+     "queries": {...}, "sf": 0.1, "cpus": 32}
+
+and writes the same object to BENCH_out_c{cpus}_sf{sf}.json.
 """
 
 from __future__ import annotations
@@ -310,6 +312,7 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "sf": sf,
+        "cpus": spark.sparkContext.defaultParallelism,
         "load_1min_start": round(load_start, 2),
         "load_1min_end": round(os.getloadavg()[0], 2),
         "adjudicated": adjudicated,
@@ -318,10 +321,9 @@ def main() -> None:
     print(line)
     # also persist the full object: the driver captures only a stdout
     # tail, which truncated BENCH_r11.json past parseability (VERDICT
-    # r11 item 5) — the file artifact is always complete
-    out_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_out.json"
-    )
+    # r11 item 5) — the file artifact is always complete.  Stamped with
+    # cpus and sf so runs at other core counts or scales keep their own.
+    out_path = os.path.join(repo_dir, f"BENCH_out_c{out['cpus']}_sf{sf:g}.json")
     with open(out_path, "w") as f:
         f.write(line + "\n")
     spark.stop()

@@ -67,13 +67,6 @@ KEYS: dict[str, tuple[str | None, str]] = {
         "comma list: write parquet bloom filters for these columns on "
         "versioned commits (row-group skipping for point lookups)",
     ),
-    "cfspark.ann.centroids": (
-        "auto",
-        "IVF/SemDeDup centroid count: an integer, or 'auto' = "
-        "max(8, ceil(sqrt(N))) from a cheap count — keeps the "
-        "cluster-quadratic pair space linear in N (consulted when "
-        "n_centroids=None is passed to the IVF/SemDeDup builders)",
-    ),
 }
 
 

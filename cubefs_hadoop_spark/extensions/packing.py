@@ -15,8 +15,8 @@ implementation is the classic two-level distributed scan instead:
 2. per-bucket token totals (one tiny row per bucket);
 3. bucket prefix offsets via a window over the TOTALS frame only — P =
    N/B rows, driver-scale by construction (the same size argument as the
-   IVF centroid set, similarity.py:177): at 100 TB pick B so P stays in
-   the thousands, and that window costs nothing;
+   IVF centroid set, ``similarity._seeded_centroids``): at 100 TB pick
+   B so P stays in the thousands, and that window costs nothing;
 4. within-bucket cumulative sums under ``partitionBy(pid)`` — fully
    parallel — plus the broadcast bucket offset give every document its
    exact global token offset;

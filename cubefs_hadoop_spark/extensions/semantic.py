@@ -13,7 +13,7 @@ verify/topk tiers in ``similarity.py``:
   seeding (first C vectors) so the full pipeline — assignment included —
   is hash-checkable against a DuckDB oracle; production swaps the seeding
   for ``similarity.kmeans_refine`` (orthogonal to the plan shape, exactly
-  as with IVF, see similarity.py:177).
+  as with IVF, see ``similarity._seeded_centroids``).
 
 - **x13 SRP-LSH near-dup pairs** — signed-random-projection LSH (Charikar
   STOC'02): per-vector bit signature b_h = sign(dot(v, r_h)), banded into
@@ -46,6 +46,7 @@ from cubefs_hadoop_spark.extensions.similarity import (
     _cosine_with_norms,
     _DOT,
     _DOT_DUCK,
+    _nearest_centroids,
     _norm_expr,
 )
 from cubefs_hadoop_spark.plans.materialize import barrier
@@ -88,15 +89,9 @@ def assign_clusters(
     """Nearest-centroid assignment (cosine, ties -> lowest cid) plus a
     precomputed norm column: one broadcast map-side corpus pass — the
     embedding column never shuffles to get its cluster id."""
-    w = Window.partitionBy(id_col).orderBy(F.col("d").desc(), "cid")
-    return (
-        widen_for_cpu(emb, id_col)
-        .crossJoin(F.broadcast(centroids))
-        .withColumn("d", _cosine_expr(vec_col, "cent"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(id_col, vec_col, "cid", _norm_expr(vec_col).alias("nrm"))
-    )
+    return _nearest_centroids(
+        widen_for_cpu(emb, id_col), centroids, id_col, vec_col, 1
+    ).select(id_col, vec_col, "cid", _norm_expr(vec_col).alias("nrm"))
 
 
 def semantic_dedup(
@@ -125,7 +120,7 @@ def semantic_dedup(
     self-join is keyed on cid, so the shuffle co-locates clusters and the
     quadratic term is per-cluster, never global.  A production run
     persists the assignment partitioned by cid instead (exactly
-    ivf_build_index's layout, similarity.py:336) so the self-join reads
+    ``similarity.ivf_build_index``'s layout) so the self-join reads
     co-located buckets."""
     if centroids is None:
         from cubefs_hadoop_spark.extensions.similarity import (
@@ -168,7 +163,7 @@ def x12_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     for any vector whose cluster holds a lower-id vector with cosine >=
     0.4.  The whole pipeline — assignment tie-breaks included — is
     bit-replicated by the DuckDB oracle (same dot/sqrt op sequence as
-    x03, see the FP contract at similarity.py:40)."""
+    x03, see the FP contract at ``similarity._cosine_expr``)."""
     emb = load(spark, sf_dir, "embeddings")
     cents = emb.filter(F.col("vec_id") < _X12_C).select(
         F.col("vec_id").alias("cid"), F.col("embedding").alias("cent")
@@ -336,8 +331,8 @@ def srp_neardup_pairs(
     space is per-bucket, never N^2; band-duplicate candidates dedupe AFTER
     the cosine gate on the skinny (da, db, c) survivors, so neither the
     wide vectors nor the ~1e6-row candidate stream ever ride a distinct's
-    shuffle — the same shuffle-width discipline as ivf_topk_indexed
-    (similarity.py:406).
+    shuffle — the same shuffle-width discipline as the IVF probe
+    (``similarity._ivf_probe_topk``).
     Signatures are referenced by both self-join sides, so they
     materialize behind a ``barrier`` — one signing pass, not two."""
     if hyperplanes is None:

@@ -21,6 +21,7 @@ IVF layout here is the same idea expressed as a Spark bucket join.
 from __future__ import annotations
 
 import math
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -250,21 +251,11 @@ def auto_nprobe(n_centroids: int, floor: int = 4) -> int:
     return max(int(floor), math.isqrt(max(n_centroids, 1) - 1) + 1)
 
 
-def resolve_centroid_count(
-    emb: DataFrame, n_centroids: "int | str | None"
-) -> int:
+def resolve_centroid_count(emb: DataFrame, n_centroids: "int | str") -> int:
     """Resolve an ``n_centroids`` argument: an int passes through;
-    ``"auto"`` applies :func:`auto_centroid_count`; ``None`` consults
-    the session conf key ``cfspark.ann.centroids`` (default "auto") so
-    deployments can pin a fleet-wide C without code changes."""
-    if n_centroids is None:
-        n_centroids = (
-            emb.sparkSession.conf.get("cfspark.ann.centroids", "auto")
-        )
-    if isinstance(n_centroids, str):
-        if n_centroids == "auto":
-            return auto_centroid_count(emb)
-        n_centroids = int(n_centroids)
+    ``"auto"`` applies :func:`auto_centroid_count`."""
+    if n_centroids == "auto":
+        return auto_centroid_count(emb)
     if n_centroids < 1:
         raise ValueError(f"n_centroids must be >= 1, got {n_centroids}")
     return n_centroids
@@ -308,13 +299,11 @@ def _seeded_centroids(emb: DataFrame, n_centroids: int) -> DataFrame:
     return emb.sparkSession.createDataFrame(data, schema)
 
 
-def seeded_centroids(
-    emb: DataFrame, n_centroids: "int | str | None" = None
-) -> DataFrame:
+def seeded_centroids(emb: DataFrame, n_centroids: "int | str" = "auto") -> DataFrame:
     """Public centroid builder with auto-sizing: resolve ``n_centroids``
-    (int / "auto" / None -> ``cfspark.ann.centroids``) and return the
-    (cid, cent) frame.  SemDeDup callers feed this straight into
-    ``semantic.semantic_dedup``; IVF callers into ``kmeans_refine``."""
+    (int or "auto") and return the (cid, cent) frame.  SemDeDup callers
+    feed this straight into ``semantic.semantic_dedup``; IVF callers into
+    ``kmeans_refine``."""
     return _seeded_centroids(emb, resolve_centroid_count(emb, n_centroids))
 
 
@@ -373,6 +362,25 @@ def kmeans_refine(
     return centroids
 
 
+def _nearest_centroids(
+    pts: DataFrame, cents: DataFrame, key: str, vec: str, r: int, cid: str = "cid"
+) -> DataFrame:
+    """The ``r`` nearest centroids of every ``key`` row of ``pts`` by
+    cosine (ties -> lowest ``cid``): ``cents`` (``cid``, cent) broadcast
+    into a cross join, one per-key rank kept by WindowGroupLimit.  Every
+    IVF/SemDeDup assignment and probe ranks through here.  Callers
+    choose how ``pts`` is distributed (``widen_for_cpu`` or a broadcast)
+    and select what they need: ``pts``' columns, ``cid``, ``cent`` and
+    ``d`` all ride along."""
+    w = Window.partitionBy(key).orderBy(F.col("d").desc(), cid)
+    return (
+        pts.crossJoin(F.broadcast(cents))
+        .withColumn("d", _cosine_expr(vec, "cent"))
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= r)
+    )
+
+
 def ivf_assign(
     emb: DataFrame, centroids: DataFrame, replication: int = 1
 ) -> DataFrame:
@@ -387,59 +395,47 @@ def ivf_assign(
     clustered (near-uniform) corpora where Lloyd sweeps alone plateau —
     index size grows by the replication factor, probe cost per query is
     unchanged."""
-    w = Window.partitionBy("vec_id").orderBy(F.col("d").desc(), "cid")
-    return (
-        widen_for_cpu(emb, "vec_id")
-        .crossJoin(F.broadcast(centroids))
-        .withColumn("d", _cosine_expr("embedding", "cent"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= replication)
-        .select("vec_id", "embedding", "cid")
+    return _nearest_centroids(
+        widen_for_cpu(emb, "vec_id"), centroids, "vec_id", "embedding", replication
+    ).select("vec_id", "embedding", "cid")
+
+
+def _query_vectors(
+    emb: DataFrame, n_queries: int, vec: str = "embedding"
+) -> DataFrame:
+    """(q_id, q_emb): the first ``n_queries`` vectors as the query set."""
+    return emb.filter(F.col("vec_id") < n_queries).select(
+        F.col("vec_id").alias("q_id"), F.col(vec).alias("q_emb")
     )
 
 
-def ivf_topk(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = 5,
-    n_queries: int = 5,
-    n_centroids: int | str | None = 8,
-    nprobe: int | str = 4,
-    kmeans_sweeps: int = 1,
-    replication: int = 2,
+def _ivf_probe_topk(
+    queries: DataFrame,
+    cents: DataFrame,
+    k: int,
+    nprobe: int,
+    assigned: DataFrame | Callable[[list[int]], DataFrame],
 ) -> DataFrame:
-    """IVF ANN top-k: queries probe only their nprobe nearest centroid
-    buckets; exact cosine within the probed buckets.  Work per query is
-    (nprobe/n_centroids) of brute force (times the index replication
-    factor in bucket size); recall vs x03 asserted in tests (>= 0.8 at
-    nprobe=4/8 with one Lloyd sweep + multi-assignment, VERDICT r04 #3).
+    """Probe, score and rank: each query visits its ``nprobe`` nearest
+    centroid buckets, candidates dedupe on (q_id, vec_id), exact cosine
+    ranks them, top ``k`` kept.  ``assigned`` is the (cid, vec_id,
+    embedding) assignment frame, or a function from the sorted probed
+    cids to it — the persisted index builds its static ``cid IN (...)``
+    partition filter from them.
 
     A multi-assigned vector can surface through several probed buckets,
-    so candidates dedupe on (q_id, vec_id) before scoring — also what
-    makes the full-probe configuration (x03d) exactly reproduce brute
-    force regardless of replication."""
-    emb = load(spark, sf_dir, "embeddings")
-    n_centroids = resolve_centroid_count(emb, n_centroids)
-    if nprobe == "auto":
-        nprobe = auto_nprobe(n_centroids)
-    cents = kmeans_refine(
-        emb, _seeded_centroids(emb, n_centroids), sweeps=kmeans_sweeps
-    )
-    assigned = ivf_assign(emb, cents, replication=replication)
-    queries = emb.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-    wp = Window.partitionBy("q_id").orderBy(F.col("d").desc(), "cid")
-    probes = (
-        F.broadcast(queries)
-        .crossJoin(F.broadcast(cents))
-        .withColumn("d", _cosine_expr("q_emb", "cent"))
-        .withColumn("rn", F.row_number().over(wp))
-        .filter(F.col("rn") <= nprobe)
-        .select("q_id", "q_emb", "cid")
-    )
+    hence the dedupe — also what makes a full probe reproduce brute force
+    exactly whatever the replication (x03d).  It runs WITHOUT q_emb in
+    the shuffle (as wide as ``embedding``, it would double the distinct's
+    bytes); the broadcast-small query set is re-attached after."""
+    probes = _nearest_centroids(
+        F.broadcast(queries), cents, "q_id", "q_emb", nprobe
+    ).select("q_id", "cid")
+    if callable(assigned):
+        assigned = assigned(
+            sorted({r.cid for r in probes.select("cid").distinct().collect()})
+        )
     wk = Window.partitionBy("q_id").orderBy(F.col("c").desc(), "vec_id")
-    # same shuffle-width trick as ivf_topk: dedupe without q_emb
     cand = (
         probes.join(assigned, "cid")
         .filter(F.col("vec_id") != F.col("q_id"))
@@ -455,11 +451,37 @@ def ivf_topk(
     )
 
 
+def ivf_topk(
+    spark: SparkSession,
+    sf_dir: str,
+    k: int = 5,
+    n_queries: int = 5,
+    n_centroids: int | str = 8,
+    nprobe: int | str = 4,
+    kmeans_sweeps: int = 1,
+    replication: int = 2,
+) -> DataFrame:
+    """IVF ANN top-k: queries probe only their nprobe nearest centroid
+    buckets; exact cosine within the probed buckets.  Work per query is
+    (nprobe/n_centroids) of brute force (times the index replication
+    factor in bucket size); recall vs x03 asserted in tests (>= 0.8 at
+    nprobe=4/8 with one Lloyd sweep + multi-assignment, VERDICT r04 #3)."""
+    emb = load(spark, sf_dir, "embeddings")
+    n_centroids = resolve_centroid_count(emb, n_centroids)
+    if nprobe == "auto":
+        nprobe = auto_nprobe(n_centroids)
+    cents = kmeans_refine(
+        emb, _seeded_centroids(emb, n_centroids), sweeps=kmeans_sweeps
+    )
+    assigned = ivf_assign(emb, cents, replication=replication)
+    return _ivf_probe_topk(_query_vectors(emb, n_queries), cents, k, nprobe, assigned)
+
+
 def ivf_build_index(
     spark: SparkSession,
     sf_dir: str,
     index_path: str,
-    n_centroids: int | str | None = 8,
+    n_centroids: int | str = 8,
     kmeans_sweeps: int = 1,
     replication: int = 2,
 ) -> None:
@@ -470,9 +492,8 @@ def ivf_build_index(
     partitioned scan).  This is the at-scale form of ivf_topk's inline
     assignment — build once, probe many."""
     emb = load(spark, sf_dir, "embeddings")
-    n_centroids = resolve_centroid_count(emb, n_centroids)
     cents = kmeans_refine(
-        emb, _seeded_centroids(emb, n_centroids), sweeps=kmeans_sweeps
+        emb, seeded_centroids(emb, n_centroids), sweeps=kmeans_sweeps
     )
     # repartition by cid first: each output task holds whole buckets, so
     # the partitioned write emits ONE file per bucket instead of
@@ -503,41 +524,13 @@ def ivf_topk_indexed(
     restriction is then the (broadcast) probe join, and exact cosine +
     top-k runs only inside probed buckets."""
     cents = spark.read.parquet(index_path + "/_centroids")
-    emb = load(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-    wp = Window.partitionBy("q_id").orderBy(F.col("d").desc(), "cid")
-    probes = (
-        F.broadcast(queries)
-        .crossJoin(F.broadcast(cents))
-        .withColumn("d", _cosine_expr("q_emb", "cent"))
-        .withColumn("rn", F.row_number().over(wp))
-        .filter(F.col("rn") <= nprobe)
-        .select("q_id", "q_emb", "cid")
-    )
-    probed_cids = sorted(
-        {r.cid for r in probes.select("cid").distinct().collect()}
-    )
-    assigned = spark.read.parquet(index_path).filter(
-        F.col("cid").isin(probed_cids)
-    )
-    wk = Window.partitionBy("q_id").orderBy(F.col("c").desc(), "vec_id")
-    # dedupe WITHOUT q_emb in the shuffle (it matches `embedding` in
-    # width, so carrying it doubles the distinct's bytes); re-attach from
-    # the broadcast-small query set after
-    cand = (
-        probes.join(assigned, "cid")
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select("q_id", "vec_id", "embedding")
-        .distinct()
-        .join(F.broadcast(queries), "q_id")
-    )
-    return (
-        cand.withColumn("c", _cosine_expr("q_emb", "embedding"))
-        .withColumn("rk", F.row_number().over(wk))
-        .filter(F.col("rk") <= k)
-        .select("q_id", F.col("vec_id").alias("n_id"), r2d(F.col("c")).alias("cos"))
+    queries = _query_vectors(load(spark, sf_dir, "embeddings"), n_queries)
+    return _ivf_probe_topk(
+        queries,
+        cents,
+        k,
+        nprobe,
+        lambda cids: spark.read.parquet(index_path).filter(F.col("cid").isin(cids)),
     )
 
 
@@ -549,6 +542,49 @@ def _micro(c: F.Column) -> F.Column:
     scaled = c * F.lit(1000000.0)
     sign = F.when(scaled < 0, F.lit(-1)).otherwise(F.lit(1))
     return (sign * F.floor(F.abs(scaled) + F.lit(0.5))).cast("long")
+
+
+def _md5_seeds(emb: DataFrame, vec: str, n: int) -> list[list[float]]:
+    """The first ``n`` vectors of ``vec`` in md5(vec_id-as-string) hex
+    order (DuckDB has md5, not xxhash64) — a TakeOrderedAndProject, so
+    no global sort; the pinned trainers' seeds."""
+    rows = (
+        emb.select("vec_id", vec, F.md5(F.col("vec_id").cast("string")).alias("h"))
+        .orderBy("h", "vec_id")
+        .limit(n)
+        .collect()
+    )
+    return [r[vec] for r in rows]
+
+
+def _pinned_lloyd(
+    seeds: DataFrame, assigned: DataFrame, keys: list[str], vec: str
+) -> DataFrame:
+    """One order-free Lloyd step: per (keys..., pos) the SUM of
+    micro-quantized BIGINTs over ``assigned``, then one double division
+    — integer addition commutes, so partial-agg shuffle order cannot
+    wobble the mean, and the oracle's sequential sum lands on the same
+    bits.  Groups nobody was assigned to keep their seed ``cent``.  The
+    result is collected and rebuilt with ``seeds``' schema (driver-sized
+    by definition: one row per centroid)."""
+    means = (
+        assigned.select(*keys, F.posexplode(vec).alias("pos", "v"))
+        .withColumn("u", _micro(F.col("v")))
+        .groupBy(*keys, "pos")
+        .agg(F.sum("u").alias("s"), F.count("*").alias("n"))
+        .withColumn(
+            "m", F.col("s").cast("double") / F.col("n") / F.lit(1000000.0)
+        )
+        .groupBy(*keys)
+        .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
+        .select(*keys, F.expr("transform(pm, x -> x.m)").alias("mean"))
+    )
+    rows = (
+        seeds.join(means, keys, "left")
+        .select(*keys, F.coalesce("mean", "cent").alias("cent"))
+        .collect()
+    )
+    return seeds.sparkSession.createDataFrame(rows, seeds.schema)
 
 
 def _pinned_ivf_assignment(
@@ -567,16 +603,6 @@ def _pinned_ivf_assignment(
             "embedding"
         ),
     )
-    seed_rows = (
-        emb.select(
-            "vec_id",
-            "embedding",
-            F.md5(F.col("vec_id").cast("string")).alias("h"),
-        )
-        .orderBy("h", "vec_id")
-        .limit(n_centroids)
-        .collect()
-    )
     cent_schema = T.StructType(
         [
             T.StructField("cid", T.IntegerType(), False),
@@ -584,34 +610,11 @@ def _pinned_ivf_assignment(
         ]
     )
     seeds = spark.createDataFrame(
-        [(i + 1, r["embedding"]) for i, r in enumerate(seed_rows)],
+        list(enumerate(_md5_seeds(emb, "embedding", n_centroids), start=1)),
         cent_schema,
     )
-    # one Lloyd sweep, order-free integer arithmetic
-    assigned0 = ivf_assign(emb, seeds, replication=1)
-    means = (
-        assigned0.select(
-            "cid", F.posexplode("embedding").alias("pos", "v")
-        )
-        .withColumn("u", _micro(F.col("v")))
-        .groupBy("cid", "pos")
-        .agg(F.sum("u").alias("s"), F.count("*").alias("n"))
-        .withColumn(
-            "m",
-            F.col("s").cast("double") / F.col("n") / F.lit(1000000.0),
-        )
-        .groupBy("cid")
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
-        .select("cid", F.expr("transform(pm, x -> x.m)").alias("mean"))
-    )
-    cent_rows = (
-        seeds.withColumnRenamed("cent", "seed")
-        .join(means, "cid", "left")
-        .select("cid", F.coalesce("mean", "seed").alias("cent"))
-        .collect()
-    )
-    cents = spark.createDataFrame(
-        [(r["cid"], r["cent"]) for r in cent_rows], cent_schema
+    cents = _pinned_lloyd(
+        seeds, ivf_assign(emb, seeds, replication=1), ["cid"], "embedding"
     )
     assigned = ivf_assign(emb, cents, replication=replication)
     return emb, cents, assigned
@@ -634,47 +637,15 @@ def ivf_topk_pinned(
 
     Three determinism substitutions vs ivf_topk, none changing the plan
     shape or the 100 TB story:
-    - seeds: first C vectors by md5(vec_id-as-string) hex order (DuckDB
-      has md5; xxhash64 it does not) — still TakeOrderedAndProject;
-    - Lloyd mean: per-(cid, dim) SUM of micro-quantized BIGINTs, then
-      one double division — integer addition commutes, so partial-agg
-      shuffle order cannot wobble the centroid, and the oracle's
-      sequential sum lands on the same bits;
+    - seeds: first C vectors by md5 order (``_md5_seeds``) — still
+      TakeOrderedAndProject;
+    - Lloyd mean: micro-integer sums (``_pinned_lloyd``);
     - every ranking window carries a total-order tiebreak.
     Cosine itself already bit-matches (the _DOT FP-contract above)."""
     emb, cents, assigned = _pinned_ivf_assignment(
         spark, sf_dir, n_centroids=n_centroids, replication=replication
     )
-    queries = emb.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-    wp = Window.partitionBy("q_id").orderBy(F.col("d").desc(), "cid")
-    probes = (
-        F.broadcast(queries)
-        .crossJoin(F.broadcast(cents))
-        .withColumn("d", _cosine_expr("q_emb", "cent"))
-        .withColumn("rn", F.row_number().over(wp))
-        .filter(F.col("rn") <= nprobe)
-        .select("q_id", "cid")
-    )
-    wk = Window.partitionBy("q_id").orderBy(F.col("c").desc(), "vec_id")
-    cand = (
-        probes.join(assigned, "cid")
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select("q_id", "vec_id", "embedding")
-        .distinct()
-        .join(F.broadcast(queries), "q_id")
-    )
-    return (
-        cand.withColumn("c", _cosine_expr("q_emb", "embedding"))
-        .withColumn("rk", F.row_number().over(wk))
-        .filter(F.col("rk") <= k)
-        .select(
-            "q_id",
-            F.col("vec_id").alias("n_id"),
-            r2d(F.col("c")).alias("cos"),
-        )
-    )
+    return _ivf_probe_topk(_query_vectors(emb, n_queries), cents, k, nprobe, assigned)
 
 
 # The micro-quantized term both engines sum: half away from zero.
@@ -1018,9 +989,13 @@ def auto_pq_shortlist(n: int, frac: int = 10, floor: int = 25, cap: int = 200) -
     return max(int(floor), min(int(cap), -(-n // frac)))
 
 
-def _pq_micro(c: F.Column) -> F.Column:
-    """_micro under its PQ alias — see _micro's determinism note."""
-    return _micro(c)
+def _subvectors(df: DataFrame, keys: list[str], vec: str, out: str) -> DataFrame:
+    """One row per (keys..., sub): the ``_PQ_D``-wide slice ``sub`` of
+    ``vec`` as ``out``, for every one of the ``_PQ_M`` subspaces."""
+    sv = F.expr(f"slice({vec}, (sub - 1) * {_PQ_D} + 1, {_PQ_D})")
+    return df.select(
+        *keys, F.explode(F.sequence(F.lit(1), F.lit(_PQ_M))).alias("sub"), vec
+    ).select(*keys, "sub", sv.alias(out))
 
 
 def pq_train_encode(
@@ -1037,21 +1012,7 @@ def pq_train_encode(
     md5(vec_id) hex order (each contributing its M subvectors), then
     ONE Lloyd sweep with order-free micro-integer means; empty clusters
     keep their seed."""
-    sub_expr = F.expr(f"slice(emb, (sub - 1) * {_PQ_D} + 1, {_PQ_D})")
-    subs = emb.select(
-        "vec_id",
-        F.explode(F.sequence(F.lit(1), F.lit(_PQ_M))).alias("sub"),
-        "emb",
-    ).select("vec_id", "sub", sub_expr.alias("sv"))
-
-    seed_rows = (
-        emb.select(
-            "vec_id", "emb", F.md5(F.col("vec_id").cast("string")).alias("h")
-        )
-        .orderBy("h", "vec_id")
-        .limit(n_codes)
-        .collect()
-    )
+    subs = _subvectors(emb, ["vec_id"], "emb", "sv")
     cent_schema = T.StructType(
         [
             T.StructField("sub", T.IntegerType(), False),
@@ -1061,8 +1022,8 @@ def pq_train_encode(
     )
     seeds = spark.createDataFrame(
         [
-            (s, cid, r["emb"][(s - 1) * _PQ_D : s * _PQ_D])
-            for cid, r in enumerate(seed_rows, start=1)
+            (s, cid, v[(s - 1) * _PQ_D : s * _PQ_D])
+            for cid, v in enumerate(_md5_seeds(emb, "emb", n_codes), start=1)
             for s in range(1, _PQ_M + 1)
         ],
         cent_schema,
@@ -1073,33 +1034,71 @@ def pq_train_encode(
         return (
             subs.join(F.broadcast(cents), "sub")
             .withColumn(
-                "dm", _pq_micro(F.expr(_L2SQ.format(a="sv", b="cent")))
+                "dm", _micro(F.expr(_L2SQ.format(a="sv", b="cent")))
             )
             .withColumn("rn", F.row_number().over(w))
             .filter("rn = 1")
             .select("vec_id", "sub", "cid", "sv")
         )
 
-    means = (
-        assign(seeds)
-        .select("sub", "cid", F.posexplode("sv").alias("pos", "v"))
-        .withColumn("u", _pq_micro(F.col("v")))
-        .groupBy("sub", "cid", "pos")
-        .agg(F.sum("u").alias("s"), F.count("*").alias("n"))
-        .withColumn(
-            "m", F.col("s").cast("double") / F.col("n") / F.lit(1000000.0)
-        )
-        .groupBy("sub", "cid")
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
-        .select("sub", "cid", F.expr("transform(pm, x -> x.m)").alias("mean"))
-    )
-    cents_df = (
-        seeds.join(means, ["sub", "cid"], "left")
-        .select("sub", "cid", F.coalesce("mean", "cent").alias("cent"))
-    )
-    cents = spark.createDataFrame(cents_df.collect(), cent_schema)
+    cents = _pinned_lloyd(seeds, assign(seeds), ["sub", "cid"], "sv")
     codes = assign(cents).select("vec_id", "sub", "cid")
     return cents, codes
+
+
+def _adc_topk(
+    codes: DataFrame,
+    qsubs: DataFrame,
+    cents: DataFrame,
+    keys: list[str],
+    emb: DataFrame,
+    queries: DataFrame,
+    k: int,
+    rerank: bool,
+    shortlist: int,
+) -> DataFrame:
+    """The PQ query tail shared by pq_topk and ivfpq_topk.  The per-query
+    distance table (q_id, keys..., sub, cid, dm) — micro-integer L2² from
+    each query subvector ``qv`` of ``qsubs`` to every codeword — is
+    broadcast into ``codes`` on (keys..., sub, cid); a candidate's ADC
+    distance is the order-free SUM of its M BIGINTs, ranked per query
+    (ties -> lowest n_id).  Raw: top ``k`` as (q_id, n_id, adc_micro).
+    ``rerank``: the top ``shortlist`` re-rank by exact micro-L2² between
+    their ``emb`` vectors and the ``queries`` (q_id, q_emb), top ``k`` as
+    (q_id, n_id, d2_micro) — full vectors are touched
+    shortlist-per-query times only."""
+    dtab = (
+        qsubs.join(F.broadcast(cents), "sub")
+        .withColumn("dm", _micro(F.expr(_L2SQ.format(a="qv", b="cent"))))
+        .select("q_id", *keys, "sub", "cid", "dm")
+    )
+    ws = Window.partitionBy("q_id").orderBy("d", "n_id")
+    adc = (
+        codes.join(F.broadcast(dtab), [*keys, "sub", "cid"])
+        .filter(F.col("vec_id") != F.col("q_id"))
+        .groupBy("q_id", F.col("vec_id").alias("n_id"))
+        .agg(F.sum("dm").alias("d"))
+        .withColumn("rk", F.row_number().over(ws))
+        .filter(F.col("rk") <= (shortlist if rerank else k))
+    )
+    if not rerank:
+        return adc.select(
+            "q_id", "n_id", F.col("d").alias("adc_micro")
+        ).orderBy("q_id", "adc_micro", "n_id")
+    wr = Window.partitionBy("q_id").orderBy("d2", "n_id")
+    return (
+        F.broadcast(adc.select("q_id", "n_id"))
+        .join(
+            emb.select(F.col("vec_id").alias("n_id"), F.col("emb").alias("n_emb")),
+            "n_id",
+        )
+        .join(F.broadcast(queries), "q_id")
+        .withColumn("d2", _micro(F.expr(_L2SQ.format(a="q_emb", b="n_emb"))))
+        .withColumn("rk", F.row_number().over(wr))
+        .filter(F.col("rk") <= k)
+        .select("q_id", "n_id", F.col("d2").alias("d2_micro"))
+        .orderBy("q_id", "d2_micro", "n_id")
+    )
 
 
 def pq_topk(
@@ -1125,52 +1124,9 @@ def pq_topk(
         F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("emb"),
     )
     cents, codes = pq_train_encode(spark, emb, n_codes)
-
-    sub_expr = F.expr(f"slice(emb, (sub - 1) * {_PQ_D} + 1, {_PQ_D})")
-    qsubs = (
-        emb.filter(F.col("vec_id") < n_queries)
-        .select(
-            F.col("vec_id").alias("q_id"),
-            F.explode(F.sequence(F.lit(1), F.lit(_PQ_M))).alias("sub"),
-            "emb",
-        )
-        .select("q_id", "sub", sub_expr.alias("qv"))
-    )
-    dtab = (
-        qsubs.join(F.broadcast(cents), "sub")
-        .withColumn("dm", _pq_micro(F.expr(_L2SQ.format(a="qv", b="cent"))))
-        .select("q_id", "sub", "cid", "dm")
-    )
-    stage1_k = shortlist if rerank else k
-    ws = Window.partitionBy("q_id").orderBy("d", "n_id")
-    adc = (
-        codes.join(F.broadcast(dtab), ["sub", "cid"])
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .groupBy("q_id", F.col("vec_id").alias("n_id"))
-        .agg(F.sum("dm").alias("d"))
-        .withColumn("rk", F.row_number().over(ws))
-        .filter(F.col("rk") <= stage1_k)
-    )
-    if not rerank:
-        return adc.select(
-            "q_id", "n_id", F.col("d").alias("adc_micro")
-        ).orderBy("q_id", "adc_micro", "n_id")
-    queries = emb.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("q_id"), F.col("emb").alias("q_emb")
-    )
-    wr = Window.partitionBy("q_id").orderBy("d2", "n_id")
-    return (
-        F.broadcast(adc.select("q_id", "n_id"))
-        .join(emb.select(F.col("vec_id").alias("n_id"), F.col("emb").alias("n_emb")), "n_id")
-        .join(F.broadcast(queries), "q_id")
-        .withColumn(
-            "d2", _pq_micro(F.expr(_L2SQ.format(a="q_emb", b="n_emb")))
-        )
-        .withColumn("rk", F.row_number().over(wr))
-        .filter(F.col("rk") <= k)
-        .select("q_id", "n_id", F.col("d2").alias("d2_micro"))
-        .orderBy("q_id", "d2_micro", "n_id")
-    )
+    queries = _query_vectors(emb, n_queries, "emb")
+    qsubs = _subvectors(queries, ["q_id"], "q_emb", "qv")
+    return _adc_topk(codes, qsubs, cents, [], emb, queries, k, rerank, shortlist)
 
 
 def _pq_cte() -> str:
@@ -1408,17 +1364,10 @@ def ivfpq_topk(
     cc = emb.filter(F.col("vec_id") < n_coarse).select(
         F.col("vec_id").alias("ccid"), F.col("emb").alias("cent")
     )
-    wa = Window.partitionBy("vec_id").orderBy(F.col("d").desc(), "ccid")
-    asg = (
-        emb.crossJoin(F.broadcast(cc))
-        .withColumn("d", _cosine_expr("emb", "cent"))
-        .withColumn("rn", F.row_number().over(wa))
-        .filter("rn = 1")
-        .select(
-            "vec_id",
-            "ccid",
-            F.zip_with("emb", "cent", lambda x, y: x - y).alias("emb"),
-        )
+    asg = _nearest_centroids(emb, cc, "vec_id", "emb", 1, cid="ccid").select(
+        "vec_id",
+        "ccid",
+        F.zip_with("emb", "cent", lambda x, y: x - y).alias("emb"),
     )
     from cubefs_hadoop_spark.plans.materialize import barrier
 
@@ -1428,66 +1377,24 @@ def ivfpq_topk(
     cents, codes = pq_train_encode(
         spark, res.select("vec_id", "emb"), n_codes
     )
-
-    wp = Window.partitionBy("q_id").orderBy(F.col("d").desc(), "ccid")
-    probes = (
-        emb.filter(F.col("vec_id") < n_queries)
-        .select(F.col("vec_id").alias("q_id"), "emb")
-        .crossJoin(F.broadcast(cc))
-        .withColumn("d", _cosine_expr("emb", "cent"))
-        .withColumn("rn", F.row_number().over(wp))
-        .filter(F.col("rn") <= nprobe)
-        .select(
-            "q_id",
-            "ccid",
-            F.zip_with("emb", "cent", lambda x, y: x - y).alias("qr"),
-        )
-    )
-    sub_expr = F.expr(f"slice(qr, (sub - 1) * {_PQ_D} + 1, {_PQ_D})")
-    qsubs = probes.select(
+    queries = _query_vectors(emb, n_queries, "emb")
+    probes = _nearest_centroids(
+        queries, cc, "q_id", "q_emb", nprobe, cid="ccid"
+    ).select(
         "q_id",
         "ccid",
-        F.explode(F.sequence(F.lit(1), F.lit(_PQ_M))).alias("sub"),
-        "qr",
-    ).select("q_id", "ccid", "sub", sub_expr.alias("qv"))
-    dtab = (
-        qsubs.join(F.broadcast(cents), "sub")
-        .withColumn("dm", _pq_micro(F.expr(_L2SQ.format(a="qv", b="cent"))))
-        .select("q_id", "ccid", "sub", "cid", "dm")
+        F.zip_with("q_emb", "cent", lambda x, y: x - y).alias("qr"),
     )
-    ws = Window.partitionBy("q_id").orderBy("d", "n_id")
-    stage1_k = shortlist if rerank else k
-    adc = (
-        codes.join(res.select("vec_id", "ccid"), "vec_id")
-        .join(F.broadcast(dtab), ["ccid", "sub", "cid"])
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .groupBy("q_id", F.col("vec_id").alias("n_id"))
-        .agg(F.sum("dm").cast("long").alias("d"))
-        .withColumn("rk", F.row_number().over(ws))
-        .filter(F.col("rk") <= stage1_k)
-    )
-    if not rerank:
-        return adc.select(
-            "q_id", "n_id", F.col("d").alias("adc_micro")
-        ).orderBy("q_id", "adc_micro", "n_id")
-    queries = emb.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("q_id"), F.col("emb").alias("q_emb")
-    )
-    wr = Window.partitionBy("q_id").orderBy("d2", "n_id")
-    return (
-        F.broadcast(adc.select("q_id", "n_id"))
-        .join(
-            emb.select(F.col("vec_id").alias("n_id"), F.col("emb").alias("n_emb")),
-            "n_id",
-        )
-        .join(F.broadcast(queries), "q_id")
-        .withColumn(
-            "d2", _pq_micro(F.expr(_L2SQ.format(a="q_emb", b="n_emb")))
-        )
-        .withColumn("rk", F.row_number().over(wr))
-        .filter(F.col("rk") <= k)
-        .select("q_id", "n_id", F.col("d2").alias("d2_micro"))
-        .orderBy("q_id", "d2_micro", "n_id")
+    return _adc_topk(
+        codes.join(res.select("vec_id", "ccid"), "vec_id"),
+        _subvectors(probes, ["q_id", "ccid"], "qr", "qv"),
+        cents,
+        ["ccid"],
+        emb,
+        queries,
+        k,
+        rerank,
+        shortlist,
     )
 
 

@@ -602,6 +602,22 @@ def test_ivf_persisted_index_prunes_partitions(spark, tmp_path):
     assert total >= 0.8, f"indexed IVF recall: {total}"
 
 
+def test_ivf_persisted_index_exact_at_full_probe(spark, tmp_path):
+    """nprobe == C probes every bucket of the persisted index, so the
+    indexed path must return x03's exact brute-force rows (x03d's check,
+    applied to the partition-filtered probe)."""
+    from cubefs_hadoop_spark.extensions.similarity import (
+        ivf_build_index,
+        ivf_topk_indexed,
+    )
+
+    idx = str(tmp_path / "ivf_index")
+    ivf_build_index(spark, SF_SMOKE, idx)
+    got = ivf_topk_indexed(spark, SF_SMOKE, idx, nprobe=8).collect()
+    want = x03_topk_cosine(spark, SF_SMOKE).collect()
+    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
+
+
 def test_lsh_incremental_index_matches_full_run(spark, tmp_path):
     """Incremental dedup: probing the persisted band index with a new
     batch yields EXACTLY the candidate pairs the full-corpus run would
@@ -1122,10 +1138,9 @@ def test_ncm_classify_crafted_and_heldout_state(spark):
 
 
 def test_auto_centroid_count_rule(spark):
-    """auto-C is max(floor, ceil(sqrt(N))) from a cheap count; the
-    conf-key path (n_centroids=None) resolves through
-    cfspark.ann.centroids (default 'auto'), and explicit ints/strings
-    pass through."""
+    """auto-C is max(floor, ceil(sqrt(N))) from a cheap count; "auto"
+    resolves through it, explicit ints pass through, and C < 1 is
+    refused."""
     from cubefs_hadoop_spark.extensions.similarity import (
         auto_centroid_count,
         resolve_centroid_count,
@@ -1136,14 +1151,7 @@ def test_auto_centroid_count_rule(spark):
     c = auto_centroid_count(emb)
     assert c == max(8, min(math.isqrt(n - 1) + 1, n // 64))
     assert resolve_centroid_count(emb, "auto") == c
-    assert resolve_centroid_count(emb, None) == c  # conf default 'auto'
     assert resolve_centroid_count(emb, 13) == 13
-    assert resolve_centroid_count(emb, "13") == 13
-    spark.conf.set("cfspark.ann.centroids", "21")
-    try:
-        assert resolve_centroid_count(emb, None) == 21
-    finally:
-        spark.conf.set("cfspark.ann.centroids", "auto")
     with pytest.raises(ValueError):
         resolve_centroid_count(emb, 0)
 
