@@ -180,6 +180,55 @@ def lsh_bands(sig: DataFrame, band_rows: int = BAND_ROWS) -> DataFrame:
     )
 
 
+def _bucket_pairs(sig: DataFrame, id_col: str) -> DataFrame:
+    """Same-bucket pairs (da, db), da < db, of a (id, band, key) bucket
+    table: the bucket-local self-join every banded candidate generator
+    (MinHash-LSH, SRP) shares — an equi-join on (band, key), never
+    all-pairs.  A pair colliding in k bands appears k times; each
+    caller places its own ``distinct``."""
+    return (
+        sig.alias("a")
+        .join(
+            sig.alias("b"),
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.key") == F.col("b.key"))
+            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+        )
+        .select(
+            F.col(f"a.{id_col}").alias("da"), F.col(f"b.{id_col}").alias("db")
+        )
+    )
+
+
+def _probe_delta(
+    new_sig: DataFrame, id_col: str, index: DataFrame | None = None
+) -> DataFrame:
+    """Candidate pairs a batch's bucket rows ``new_sig`` add to a
+    persisted bucket ``index``: (index, new) collisions plus (new, new)
+    same-bucket pairs, as distinct (da, db) with da < db.  The cross
+    join uses ``!=`` then ``least``/``greatest``, so a batch row already
+    folded into the index yields neither a self-pair nor a reversed
+    duplicate.  ``index=None`` (nothing persisted yet) probes the batch
+    against itself only."""
+    within = _bucket_pairs(new_sig, id_col)
+    if index is None:
+        return within.distinct()
+    cross = (
+        index.alias("a")
+        .join(
+            new_sig.alias("b"),
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.key") == F.col("b.key"))
+            & (F.col(f"a.{id_col}") != F.col(f"b.{id_col}")),
+        )
+        .select(
+            F.least(f"a.{id_col}", f"b.{id_col}").alias("da"),
+            F.greatest(f"a.{id_col}", f"b.{id_col}").alias("db"),
+        )
+    )
+    return cross.unionByName(within).distinct()
+
+
 _X02_ORACLE = (
     """
 WITH sh AS (
@@ -226,19 +275,9 @@ def lsh_candidate_pairs(docs: DataFrame) -> DataFrame:
             prev.unpersist()
         except Exception:
             pass
-    bands = lsh_bands(minhash_signature(docs)).cache().alias("a")
+    bands = lsh_bands(minhash_signature(docs)).cache()
     _BANDS_CACHE[session] = bands
-    other = bands.alias("b")
-    return (
-        bands.join(
-            other,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("da"), F.col("b.doc_id").alias("db"))
-        .distinct()
-    )
+    return _bucket_pairs(bands, "doc_id").distinct()
 
 
 def lsh_build_index(docs: DataFrame, index_path: str) -> None:
@@ -269,35 +308,11 @@ def lsh_incremental_candidates(
     delta that full-corpus ``lsh_candidate_pairs`` would add for these
     docs, at the cost of signing only the batch.  The corpus-side work
     is one scan of the (small) band index, not the corpus."""
-    spark = new_docs.sparkSession
     new_bands = barrier(
         lsh_bands(minhash_signature(new_docs)), eager=False
     )
-    idx = spark.read.parquet(index_path)
-    cross = (
-        idx.alias("a")
-        .join(
-            new_bands.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc_id") != F.col("b.doc_id")),
-        )
-        .select(
-            F.least("a.doc_id", "b.doc_id").alias("da"),
-            F.greatest("a.doc_id", "b.doc_id").alias("db"),
-        )
-    )
-    within = (
-        new_bands.alias("a")
-        .join(
-            new_bands.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("da"), F.col("b.doc_id").alias("db"))
-    )
-    return cross.unionByName(within).distinct()
+    index = new_docs.sparkSession.read.parquet(index_path)
+    return _probe_delta(new_bands, "doc_id", index)
 
 
 @register("x02_minhash_lsh", _X02_ORACLE)
@@ -1159,17 +1174,7 @@ def x51_dedup_yield(spark: SparkSession, sf_dir: str) -> DataFrame:
     Composition of x28's labels + two metadata-scale rollups, oracle
     hash-checked through the whole pipeline."""
     docs = load(spark, sf_dir, "documents")
-    pairs = lsh_candidate_pairs(docs)
-    from cubefs_hadoop_spark.extensions.components import (
-        connected_components_auto,
-    )
-
-    comps = connected_components_auto(pairs)
-    canon = (
-        docs.select("doc_id")
-        .join(comps, "doc_id", "left")
-        .select(F.coalesce("comp", F.col("doc_id")).alias("canonical"))
-    )
+    canon = elect_canonical(docs, lsh_candidate_pairs(docs), keep_flag=False)
     sizes = canon.groupBy("canonical").agg(
         F.count(F.lit(1)).cast("long").alias("sz")
     )
@@ -1411,24 +1416,11 @@ def x69_dedup_token_yield(spark: SparkSession, sf_dir: str) -> DataFrame:
     Σ tokens_removable is the exact token budget a keep-canonical pass
     refunds; read next to x51 (doc counts) and x17/x54 (budgets spent
     in tokens)."""
-    from cubefs_hadoop_spark.extensions.components import (
-        connected_components_auto,
-    )
-
     docs = load(spark, sf_dir, "documents")
     tk = docs.select(
         "doc_id", F.size(F.split("text", " ")).cast("long").alias("tk")
     )
-    pairs = lsh_candidate_pairs(docs)
-    comps = connected_components_auto(pairs)
-    canon = (
-        docs.select("doc_id")
-        .join(comps, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("comp", F.col("doc_id")).alias("canonical"),
-        )
-    )
+    canon = elect_canonical(docs, lsh_candidate_pairs(docs), keep_flag=False)
     cl = (
         canon.join(tk, "doc_id")
         .groupBy("canonical")
@@ -2062,22 +2054,10 @@ def cluster_source_purity(docs: DataFrame) -> DataFrame:
     """(n_sources, n_clusters, n_docs): multi-doc near-dup clusters
     (x28's components) distributed by how many distinct sources they
     span — 1 = within-source boilerplate, >= 2 = mirror networks."""
-    from cubefs_hadoop_spark.extensions.components import (
-        connected_components_auto,
-    )
-
-    pairs = lsh_candidate_pairs(docs)
-    comps = connected_components_auto(pairs)
     src = docs.select(
         "doc_id", F.coalesce("source", F.lit("(null)")).alias("source")
     )
-    canon = (
-        docs.select("doc_id")
-        .join(comps, "doc_id", "left")
-        .select(
-            "doc_id", F.coalesce("comp", F.col("doc_id")).alias("canonical")
-        )
-    )
+    canon = elect_canonical(docs, lsh_candidate_pairs(docs), keep_flag=False)
     cl = (
         canon.join(src, "doc_id")
         .groupBy("canonical")

@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from cubefs_hadoop_spark.catalog import load
+from cubefs_hadoop_spark.extensions.dedup import _bucket_pairs, _probe_delta
 from cubefs_hadoop_spark.extensions.similarity import (
     _cosine_duck,
     _cosine_expr,
@@ -218,9 +219,6 @@ def srp_keys_expr(bands: int, bits: int, vec_col: str = "embedding") -> str:
     )
 
 
-_SRP_KEYS = srp_keys_expr(_X13_BANDS, _X13_BITS)
-
-
 def auto_srp_bits(n: int, target_bucket: int = 64, floor: int = 4) -> int:
     """Bits-per-band sized to the corpus (the documented SRP knob,
     SCALE.md "Semantic dedup & SRP-LSH"): 2^bits ≈ N/target_bucket, so
@@ -246,42 +244,32 @@ def srp_neardup_pairs_auto(
     emb: DataFrame,
     tau: float = _X13_TAU,
     bands: int = _X13_BANDS,
-    bits: "int | str | None" = None,
+    bits: "int | str" = "auto",
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Production-config SRP near-dup pairs: bits-per-band auto-sized
-    from a cheap count (``bits=None``/"auto"), hyperplanes = the first
-    bands*bits corpus vectors (deterministic, like the pinned x13).
-    Same bucket-join + exact-verify plan at any (bands, bits)."""
-    if bits is None or bits == "auto":
+    from a cheap count (``bits="auto"``, or a pinned int), hyperplanes =
+    the first bands*bits corpus vectors (deterministic, like the pinned
+    x13).  Same sign -> bucket-join -> exact-verify body as the pinned
+    :func:`srp_neardup_pairs`, at any (bands, bits)."""
+    if bits == "auto":
         bits = auto_srp_bits(emb.count())
     hp = emb.orderBy(id_col).limit(bands * int(bits)).select(
         (F.row_number().over(Window.orderBy(id_col)) - 1).alias("h"),
         F.col(vec_col).alias("hv"),
     )
-    hps = hp.select(F.struct("h", "hv").alias("s")).agg(
-        F.array_sort(F.collect_list("s")).alias("hps")
-    )
     sig = barrier(
-        widen_for_cpu(emb, id_col)
-        .crossJoin(F.broadcast(hps))
-        .select(id_col, F.expr(srp_keys_expr(bands, int(bits), vec_col)).alias("keys"))
-        .select(id_col, F.posexplode("keys").alias("band", "key"))
-    )
-    a = sig.select(F.col(id_col).alias("da"), "band", "key")
-    b = sig.select(F.col(id_col).alias("db"), "band", "key")
-    cand = (
-        a.join(b, ["band", "key"])
-        .filter(F.col("da") < F.col("db"))
-        .select("da", "db")
+        srp_signatures(
+            emb, hp, id_col=id_col, vec_col=vec_col, bands=bands, bits=int(bits)
+        )
     )
     # Band-duplicate candidates dedupe AFTER the cosine gate: a pair that
     # collides in k bands yields k bit-identical (da, db, c) rows, so the
     # distinct's shuffle now carries only the tau-survivors (~1e3 rows)
     # instead of the full candidate stream (~1e6) — guide §2.2.
     return verify_pairs(
-        cand, emb, tau, id_col=id_col, vec_col=vec_col
+        _bucket_pairs(sig, id_col), emb, tau, id_col=id_col, vec_col=vec_col
     ).distinct()
 
 
@@ -290,20 +278,23 @@ def srp_signatures(
     hyperplanes: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
+    bands: int = _X13_BANDS,
+    bits: int = _X13_BITS,
 ) -> DataFrame:
     """(id, band, key) SRP bucket rows for every vector.
 
-    ``hyperplanes`` is (h, hv) with h in [0, H).  It is aggregated to a
-    single array row and broadcast, so signing is one map-side corpus
-    pass — no shuffle touches the embedding column; the posexplode emits
-    only the skinny (id, band, key) rows that feed the bucket join."""
+    ``hyperplanes`` is (h, hv) with h in [0, bands*bits); the default
+    geometry is the pinned x13 family's.  It is aggregated to a single
+    array row and broadcast, so signing is one map-side corpus pass — no
+    shuffle touches the embedding column; the posexplode emits only the
+    skinny (id, band, key) rows that feed the bucket join."""
     hp = hyperplanes.select(
         F.struct(F.col("h"), F.col("hv")).alias("s")
     ).agg(F.array_sort(F.collect_list("s")).alias("hps"))
     sig = (
         widen_for_cpu(emb, id_col)
         .crossJoin(F.broadcast(hp))
-        .select(id_col, F.expr(_SRP_KEYS).alias("keys"))
+        .select(id_col, F.expr(srp_keys_expr(bands, bits, vec_col)).alias("keys"))
     )
     return sig.select(id_col, F.posexplode("keys").alias("band", "key"))
 
@@ -342,16 +333,9 @@ def srp_neardup_pairs(
     sig = barrier(
         srp_signatures(emb, hyperplanes, id_col=id_col, vec_col=vec_col)
     )
-    a = sig.select(F.col(id_col).alias("da"), "band", "key")
-    b = sig.select(F.col(id_col).alias("db"), "band", "key")
-    cand = (
-        a.join(b, ["band", "key"])
-        .filter(F.col("da") < F.col("db"))
-        .select("da", "db")
-    )
     # distinct after the cosine gate — see srp_neardup_pairs_auto.
     return verify_pairs(
-        cand, emb, tau, id_col=id_col, vec_col=vec_col
+        _bucket_pairs(sig, id_col), emb, tau, id_col=id_col, vec_col=vec_col
     ).distinct()
 
 
@@ -405,7 +389,7 @@ def x13_srp_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 #
 # The vector-side steady-state ingest loop (the embedding analog of the
-# x02e text-side incremental LSH index, dedup.py:225): the corpus's SRP
+# x02e text-side incremental LSH index, ``lsh_incremental_candidates``): the corpus's SRP
 # bucket rows (vec_id, band, key) persist as a parquet index — a few
 # skinny rows per vector, a fraction of corpus bytes — and each arriving
 # batch signs ONLY itself, probes the index for (corpus, new) bucket
@@ -463,38 +447,12 @@ def srp_incremental_candidates(
     full-corpus srp run would add for these vectors, at the cost of
     signing only the batch; the corpus-side work is one scan of the
     skinny index, never of the corpus embeddings."""
-    spark = new_emb.sparkSession
     new_sig = barrier(
         srp_signatures(new_emb, hyperplanes, id_col=id_col, vec_col=vec_col),
         eager=False,
     )
-    idx = spark.read.parquet(index_path)
-    cross = (
-        idx.alias("a")
-        .join(
-            new_sig.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col(f"a.{id_col}") != F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.least(f"a.{id_col}", f"b.{id_col}").alias("da"),
-            F.greatest(f"a.{id_col}", f"b.{id_col}").alias("db"),
-        )
-    )
-    within = (
-        new_sig.alias("a")
-        .join(
-            new_sig.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("da"), F.col(f"b.{id_col}").alias("db")
-        )
-    )
-    return cross.unionByName(within).distinct()
+    index = new_emb.sparkSession.read.parquet(index_path)
+    return _probe_delta(new_sig, id_col, index)
 
 
 @register("x13b_incremental_srp", _X13B_ORACLE)

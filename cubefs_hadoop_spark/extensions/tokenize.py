@@ -22,11 +22,10 @@ delegated surface, like the rest of the x-family.
 
 Two execution tiers, same semantics (twin-equivalence test-pinned);
 ``subword_tokenize``/``subword_counts`` DISPATCH between them — the
-Arrow tier is the default (``tier="auto"``, override per session via
-``cfspark.tokenize.tier`` the way x12b/x13c auto-size): r7 SCALING
-measured the JVM tier at 43.7 s vs Arrow's 1.5 s at sf0.1 and 11.1x on
-10x data, so scale-safe-by-default means Arrow (VERDICT r7 item 3).
-The JVM tier stays reachable (``tier="jvm"`` / ``subword_tokenize_jvm``)
+Arrow tier is the default (``tier="arrow"``): r7 SCALING measured the
+JVM tier at 43.7 s vs Arrow's 1.5 s at sf0.1 and 11.1x on 10x data, so
+scale-safe-by-default means Arrow (VERDICT r7 item 3).  The JVM tier
+stays reachable per call (``tier="jvm"`` / ``subword_tokenize_jvm``)
 and is what the x37 oracle entry pins:
 
 * **JVM tier** (oracle-checked under x37): the tokenize loop is a single
@@ -182,43 +181,30 @@ def _subword_count_word(w: Column) -> Column:
     )
 
 
-def _resolve_tier(docs: DataFrame, tier: str) -> str:
-    """Tier dispatch shared by tokenize/counts: an explicit ``tier``
-    wins; ``"auto"`` reads ``cfspark.tokenize.tier`` (session-wide
-    override, the x12b/x13c auto-config pattern) and falls back to
-    ``"arrow"`` — the scale-safe default (r7 SCALING: JVM 43.7 s vs
-    Arrow 1.5 s at sf0.1, 11.1x on 10x data)."""
-    t = tier
-    if t == "auto":
-        try:
-            t = str(
-                docs.sparkSession.conf.get("cfspark.tokenize.tier", "arrow")
-            ).lower()
-        except Exception:
-            t = "arrow"
-        if t == "auto":
-            t = "arrow"
-    if t not in ("arrow", "jvm"):
+def _check_tier(tier: str) -> None:
+    """Tier rule shared by tokenize/counts/fertility: ``"arrow"`` (the
+    scale-safe default — r7 SCALING: JVM 43.7 s vs Arrow 1.5 s at sf0.1,
+    11.1x on 10x data) or ``"jvm"``."""
+    if tier not in ("arrow", "jvm"):
         raise ValueError(
-            f"subword tokenizer tier must be 'arrow', 'jvm' or 'auto'; got {t!r}"
+            f"subword tokenizer tier must be 'arrow' or 'jvm'; got {tier!r}"
         )
-    return t
 
 
 def subword_tokenize(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    tier: str = "auto",
+    tier: str = "arrow",
     vocab: tuple[str, ...] | list[str] = SUBWORD_VOCAB,
 ) -> DataFrame:
     """Greedy-MaxMatch subword tokenization — the tier dispatcher.
 
-    Returns (id, n_words, n_subwords, toks); see :func:`_resolve_tier`
+    Returns (id, n_words, n_subwords, toks); see :func:`_check_tier`
     for the tier rule (default: Arrow).  The JVM tier's vocab is a
     frozen plan literal, so a custom ``vocab`` requires the Arrow tier."""
-    t = _resolve_tier(docs, tier)
-    if t == "arrow":
+    _check_tier(tier)
+    if tier == "arrow":
         return subword_tokenize_arrow(docs, vocab, id_col, text_col)
     if tuple(vocab) != tuple(SUBWORD_VOCAB):
         raise ValueError(
@@ -259,15 +245,15 @@ def subword_counts(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    tier: str = "auto",
+    tier: str = "arrow",
     vocab: tuple[str, ...] | list[str] = SUBWORD_VOCAB,
 ) -> DataFrame:
     """(id, n_subwords) — the tier dispatcher for the counting-only
     path that feeds token budgeting / packing in subword units.  Same
     tier rule as :func:`subword_tokenize` (default: Arrow); the x17b/
     x14b oracle entries pin the JVM counting loop explicitly."""
-    t = _resolve_tier(docs, tier)
-    if t == "arrow":
+    _check_tier(tier)
+    if tier == "arrow":
         return subword_counts_arrow(docs, vocab, id_col, text_col)
     if tuple(vocab) != tuple(SUBWORD_VOCAB):
         raise ValueError(
@@ -1051,7 +1037,7 @@ def fertility_stats(
     docs: DataFrame,
     group_col: str = "source",
     text_col: str = "text",
-    tier: str = "auto",
+    tier: str = "arrow",
 ) -> DataFrame:
     """(source, n_docs, n_words, n_subwords, n_chars): the ADDITIVE
     sufficient statistics behind the fertility audit — associative+
@@ -1064,7 +1050,8 @@ def fertility_stats(
     data vs Arrow's batch loop, the same economics that made Arrow the
     x37 default in r8); the tiers count identically (MaxMatch twin
     equivalence is test-pinned), so the oracle hash holds for both."""
-    if _resolve_tier(docs, tier) == "arrow":
+    _check_tier(tier)
+    if tier == "arrow":
         return fertility_stats_arrow(docs, group_col, text_col)
     return fertility_stats_jvm(docs, group_col, text_col)
 

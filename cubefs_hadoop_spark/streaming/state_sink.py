@@ -547,6 +547,7 @@ def _mirror_batch_cells(
     import os as _os
 
     from cubefs_hadoop_spark.extensions.dedup import (
+        _probe_delta,
         lsh_bands,
         minhash_signature,
         mirror_pair_cells,
@@ -563,19 +564,8 @@ def _mirror_batch_cells(
     new_src = batch.select(
         "doc_id", F.coalesce(source_col, F.lit("(null)")).alias("source")
     )
-
-    within = (
-        new_bands.alias("a")
-        .join(
-            new_bands.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("da"), F.col("b.doc_id").alias("db"))
-    )
+    idx = None
     src_all = new_src
-    pairs = within
     if _os.path.exists(bands_dir):
         # read only PRIOR batches' files: on a crash-replay (died after
         # publishing attempt 1's batch=N files but before the ledger
@@ -587,20 +577,6 @@ def _mirror_batch_cells(
             .filter(F.col("batch") < F.lit(int(batch_id)))
             .select("band", "key", "doc_id")
         )
-        cross = (
-            idx.alias("a")
-            .join(
-                new_bands.alias("b"),
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.key") == F.col("b.key"))
-                & (F.col("a.doc_id") != F.col("b.doc_id")),
-            )
-            .select(
-                F.least("a.doc_id", "b.doc_id").alias("da"),
-                F.greatest("a.doc_id", "b.doc_id").alias("db"),
-            )
-        )
-        pairs = cross.unionByName(within)
         src_all = (
             spark.read.parquet(src_dir)
             # same crash-replay partition prune as the band index: the
@@ -616,7 +592,7 @@ def _mirror_batch_cells(
     # otherwise the lazy cross join could list the just-written files at
     # execution time (the union-distinct would still dedupe them, but
     # the ordering should not rely on that)
-    pairs = barrier(pairs.distinct(), eager=True)
+    pairs = barrier(_probe_delta(new_bands, "doc_id", idx), eager=True)
     cells = mirror_pair_cells(pairs, src_all)
     new_bands.write.mode("overwrite").parquet(
         _os.path.join(bands_dir, f"batch={batch_id}")

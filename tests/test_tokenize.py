@@ -441,9 +441,8 @@ def test_bpe_train_property_matches_reference(spark, words, n_merges):
 def test_tier_dispatch_defaults_to_arrow(spark):
     """VERDICT r7 item 3: the scale-safe tier IS the default.  The
     dispatcher's default plan carries the Arrow mapInPandas node;
-    tier='jvm' carries none; cfspark.tokenize.tier=jvm flips the
-    session default; a custom vocab on the JVM tier refuses loudly
-    (its vocab is a frozen plan literal)."""
+    tier='jvm' carries none; a custom vocab on the JVM tier refuses
+    loudly (its vocab is a frozen plan literal)."""
     from cubefs_hadoop_spark.extensions.tokenize import (
         subword_counts,
         subword_tokenize,
@@ -457,13 +456,6 @@ def test_tier_dispatch_defaults_to_arrow(spark):
     assert audit_plan(subword_counts(docs)).has_pandas_map
     assert not audit_plan(subword_tokenize(docs, tier="jvm")).has_pandas_map
     assert not audit_plan(subword_counts(docs, tier="jvm")).has_pandas_map
-
-    spark.conf.set("cfspark.tokenize.tier", "jvm")
-    try:
-        assert not audit_plan(subword_tokenize(docs)).has_pandas_map
-        assert not audit_plan(subword_counts(docs)).has_pandas_map
-    finally:
-        spark.conf.unset("cfspark.tokenize.tier")
 
     with pytest.raises(ValueError, match="frozen SUBWORD_VOCAB"):
         subword_tokenize(docs, tier="jvm", vocab=("ab",))
