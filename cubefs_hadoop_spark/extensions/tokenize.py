@@ -20,37 +20,24 @@ Reference parity: the reference connector moves opaque bytes
 the engine above it; this module is part of the natively-implemented
 delegated surface, like the rest of the x-family.
 
-Two execution tiers, same semantics (twin-equivalence test-pinned);
-``subword_tokenize``/``subword_counts`` DISPATCH between them — the
-Arrow tier is the default (``tier="arrow"``): r7 SCALING measured the
-JVM tier at 43.7 s vs Arrow's 1.5 s at sf0.1 and 11.1x on 10x data, so
-scale-safe-by-default means Arrow (VERDICT r7 item 3).  The JVM tier
-stays reachable per call (``tier="jvm"`` / ``subword_tokenize_jvm``)
-and is what the x37 oracle entry pins:
+One MaxMatch kernel, :func:`_maxmatch`, runs inside ``mapInPandas``
+for tokenize, counts and fertility: a hash-set vocab, O(maxlen) set
+probes per character independent of |V| — the path for production
+30k+-entry BPE/WordPiece vocabs.  The vocab is a driver-scale list (the
+caller collects it from a vocab table — driver-sized by contract, like
+x32's centroid frames).  There is no JVM tokenizer: a literal-array
+``aggregate`` HOF scans O(|V|) literals per character (33.4 s against
+this kernel's 1.27 s at sf0.1).  Only a JVM COUNT, :func:`_subword_count`,
+exists, for the consumers that need the count as a ``Column`` inside a
+zero-Python plan (x14b packing and x17b's ``token_budget_sample``).
 
-* **JVM tier** (oracle-checked under x37): the tokenize loop is a single
-  ``aggregate`` higher-order function over character positions — all
-  whole-stage-codegen, zero Python, zero shuffles (map-only; the
-  registered query's final ORDER BY is presentation only).  The vocab
-  rides the plan as a literal array (driver-scale, equivalent to a
-  broadcast scalar frame).  Per-character cost is O(L * |V|) literal
-  string compares (L = distinct vocab lengths) — right for the frozen
-  double-digit..few-hundred-entry vocabs of a curation heuristic.
-* **Arrow tier** (``subword_tokenize_arrow``): ``mapInPandas`` with a
-  hash-set vocab — O(maxlen) dict probes per character, independent of
-  |V|; the tier for production 30k+-entry BPE/WordPiece vocabs where a
-  literal-array scan would dominate.  Vocab arrives as a driver-scale
-  list (the caller collects it from a vocab table — driver-sized by
-  contract, like x32's centroid frames).
-
-Scale (100 TB): both tiers are MAP-ONLY — tokenization rides the
-parquet scan with zero shuffles and inherits the scan partitioning, so
-a downstream pack/budget stage repartitions once on its own key and
-nothing funnels.  x17b reuses x17's two-level distributed prefix sum
-(range-bucketed md5 order, per-bucket cumulative sums, 256-row
-bucket-totals window) so no source's documents serialize through one
-task.  State is O(1) per row; the vocab is the only shared state and it
-is driver-scale by contract.
+Scale (100 TB): tokenization is MAP-ONLY — it rides the parquet scan
+with zero shuffles and inherits the scan partitioning, so a downstream
+pack/budget stage repartitions once on its own key and nothing funnels.
+x17b reuses x17's two-level distributed prefix sum (range-bucketed md5
+order, per-bucket cumulative sums, 256-row bucket-totals window) so no
+source's documents serialize through one task.  State is O(1) per row;
+the vocab is the only shared state and it is driver-scale by contract.
 
 Determinism: the vocab is a frozen list, greedy MaxMatch is a pure
 function of (word, vocab), and there is no floating arithmetic anywhere
@@ -60,7 +47,7 @@ DuckDB recursive-CTE oracle that replays the same greedy loop in SQL.
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Callable, Iterator
 
 import pandas as pd
 
@@ -108,51 +95,14 @@ _MAXLEN = _VLENS[0]
 _VOCAB_SQL = ", ".join(f"('{t}')" for t in SUBWORD_VOCAB)
 
 
-def _tokenize_word(w: Column) -> Column:
-    """array<string> of greedy longest-match subwords for one word.
-
-    One ``aggregate`` pass over character positions: the accumulator is
-    (pos, toks); each step finds the LONGEST vocab entry matching at
-    pos (lengths tried descending), else consumes one character
+def _subword_count_word(w: Column) -> Column:
+    """Number of greedy subwords for one word as a JVM ``aggregate`` HOF
+    over character positions: the accumulator is (pos, cnt); each step
+    advances by the LONGEST vocab entry matching at pos (lengths tried
+    descending, the vocab a plan literal), else by one character
     (byte-fallback).  Iterating length(w) times is always enough since
     every step consumes >= 1 char; exhausted steps pass the accumulator
-    through untouched.  Pure JVM codegen — no Python, no shuffle."""
-    vocab_arr = F.array(*[F.lit(t) for t in SUBWORD_VOCAB])
-    lens_desc = F.array(*[F.lit(n) for n in _VLENS])
-
-    def step(acc: Column, _: Column) -> Column:
-        pos = acc["pos"]
-        # longest matching vocab length at pos, else 1 (byte-fallback)
-        ml = F.coalesce(
-            F.try_element_at(
-                F.filter(
-                    lens_desc,
-                    lambda n: F.array_contains(vocab_arr, w.substr(pos, n)),
-                ),
-                F.lit(1),
-            ),
-            F.lit(1),
-        )
-        advanced = F.struct(
-            (pos + ml).alias("pos"),
-            F.concat(acc["toks"], F.array(w.substr(pos, ml))).alias("toks"),
-        )
-        return F.when(pos > F.length(w), acc).otherwise(advanced)
-
-    return F.aggregate(
-        F.sequence(F.lit(1), F.greatest(F.length(w), F.lit(1))),
-        F.struct(
-            F.lit(1).alias("pos"),
-            F.array().cast("array<string>").alias("toks"),
-        ),
-        step,
-        lambda acc: acc["toks"],
-    )
-
-
-def _subword_count_word(w: Column) -> Column:
-    """Number of greedy subwords for one word — the counting-only loop
-    (same MaxMatch rule, no token strings materialized)."""
+    through untouched."""
     vocab_arr = F.array(*[F.lit(t) for t in SUBWORD_VOCAB])
     lens_desc = F.array(*[F.lit(n) for n in _VLENS])
 
@@ -181,63 +131,97 @@ def _subword_count_word(w: Column) -> Column:
     )
 
 
-def _check_tier(tier: str) -> None:
-    """Tier rule shared by tokenize/counts/fertility: ``"arrow"`` (the
-    scale-safe default — r7 SCALING: JVM 43.7 s vs Arrow 1.5 s at sf0.1,
-    11.1x on 10x data) or ``"jvm"``."""
-    if tier not in ("arrow", "jvm"):
-        raise ValueError(
-            f"subword tokenizer tier must be 'arrow' or 'jvm'; got {tier!r}"
-        )
+def _subword_count(text: Column) -> Column:
+    """Per-document subword count of ``text`` as a long ``Column`` (null
+    for a null text), against the frozen :data:`SUBWORD_VOCAB` — the
+    zero-Python twin of :func:`subword_counts` for plans that must stay
+    codegen-only (x14b, x17b) or take the count as a ``Column``
+    (``token_budget_sample``'s ``tokens``)."""
+    return F.aggregate(
+        F.transform(F.split(text, " "), _subword_count_word),
+        F.lit(0),
+        lambda acc, c: acc + c,
+    ).cast("long")
+
+
+def _probe_set(
+    vocab: tuple[str, ...] | list[str],
+) -> tuple[frozenset, list[int]]:
+    """(hash-set vocab, distinct entry lengths descending) for
+    :func:`_maxmatch`."""
+    vset = frozenset(vocab)
+    return vset, sorted({len(t) for t in vset}, reverse=True)
+
+
+def _maxmatch(w: str, vset: frozenset, lens: list[int]) -> list[str]:
+    """Greedy longest-match subwords of one word: at each position the
+    longest vocab entry matching there (lengths ``lens`` tried
+    descending), else the single character (byte-fallback) — O(maxlen)
+    set probes per character, independent of |V|."""
+    toks, pos, n = [], 0, len(w)
+    while pos < n:
+        for L in lens:
+            if pos + L <= n and w[pos : pos + L] in vset:
+                break
+        else:
+            L = 1
+        toks.append(w[pos : pos + L])
+        pos += L
+    return toks
+
+
+def _per_doc(
+    docs: DataFrame,
+    id_col: str,
+    text_col: str,
+    schema: str,
+    fn: Callable[[str], tuple],
+) -> DataFrame:
+    """(id, *fn(text)) per row in one map-only ``mapInPandas`` pass; a
+    null text maps to nulls.  ``schema`` declares fn's columns."""
+    names = [c.split()[0] for c in schema.split(",")]
+    nulls = (None,) * len(names)
+
+    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            rows = [
+                (str(did), *(nulls if text is None else fn(text)))
+                for did, text in zip(pdf[id_col], pdf[text_col])
+            ]
+            yield pd.DataFrame(rows, columns=[id_col, *names])
+
+    out = docs.select(id_col, text_col).mapInPandas(
+        _batches, f"{id_col} string, {schema}"
+    )
+    # mapInPandas schemas are strings; restore the id column's real type
+    id_dtype = dict(docs.dtypes)[id_col]
+    return out.withColumn(id_col, F.col(id_col).cast(id_dtype))
 
 
 def subword_tokenize(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    tier: str = "arrow",
     vocab: tuple[str, ...] | list[str] = SUBWORD_VOCAB,
 ) -> DataFrame:
-    """Greedy-MaxMatch subword tokenization — the tier dispatcher.
-
-    Returns (id, n_words, n_subwords, toks); see :func:`_check_tier`
-    for the tier rule (default: Arrow).  The JVM tier's vocab is a
-    frozen plan literal, so a custom ``vocab`` requires the Arrow tier."""
-    _check_tier(tier)
-    if tier == "arrow":
-        return subword_tokenize_arrow(docs, vocab, id_col, text_col)
-    if tuple(vocab) != tuple(SUBWORD_VOCAB):
-        raise ValueError(
-            "the JVM tier tokenizes against the frozen SUBWORD_VOCAB plan "
-            "literal; pass tier='arrow' (the default) for a custom vocab"
-        )
-    return subword_tokenize_jvm(docs, id_col, text_col)
-
-
-def subword_tokenize_jvm(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Greedy-MaxMatch subword tokenization, JVM tier.
+    """Greedy-MaxMatch subword tokenization.
 
     Returns (id, n_words, n_subwords, toks) where ``toks`` renders each
     word's subwords joined by '|' and words joined by ' ' — e.g.
-    "window scan" -> "win|dow sca|n".  Map-only: zero shuffles, zero
-    Python (plan-gated)."""
-    words = F.split(F.col(text_col), " ")
-    per_word = F.transform(words, _tokenize_word)
-    return docs.select(
-        id_col,
-        F.size(words).cast("long").alias("n_words"),
-        F.aggregate(
-            per_word,
-            F.lit(0),
-            lambda acc, t: acc + F.size(t),
-        )
-        .cast("long")
-        .alias("n_subwords"),
-        F.array_join(
-            F.transform(per_word, lambda t: F.array_join(t, "|")), " "
-        ).alias("toks"),
+    "window scan" -> "win|dow sca|n"; a null text gives nulls.
+    ``vocab`` is a driver-scale list by contract (collect it from a
+    vocab table the way x32 collects centroid frames).  Map-only: the
+    Arrow exchange is per-batch, no shuffle (plan-gated)."""
+    vset, lens = _probe_set(vocab)
+
+    def _tok(text: str) -> tuple[int, int, str]:
+        per = [_maxmatch(w, vset, lens) for w in text.split(" ")]
+        toks = " ".join("|".join(t) for t in per)
+        return len(per), sum(map(len, per)), toks
+
+    return _per_doc(
+        docs, id_col, text_col,
+        "n_words long, n_subwords long, toks string", _tok,
     )
 
 
@@ -245,139 +229,18 @@ def subword_counts(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    tier: str = "arrow",
     vocab: tuple[str, ...] | list[str] = SUBWORD_VOCAB,
 ) -> DataFrame:
-    """(id, n_subwords) — the tier dispatcher for the counting-only
-    path that feeds token budgeting / packing in subword units.  Same
-    tier rule as :func:`subword_tokenize` (default: Arrow); the x17b/
-    x14b oracle entries pin the JVM counting loop explicitly."""
-    _check_tier(tier)
-    if tier == "arrow":
-        return subword_counts_arrow(docs, vocab, id_col, text_col)
-    if tuple(vocab) != tuple(SUBWORD_VOCAB):
-        raise ValueError(
-            "the JVM tier counts against the frozen SUBWORD_VOCAB plan "
-            "literal; pass tier='arrow' (the default) for a custom vocab"
-        )
-    return subword_counts_jvm(docs, id_col, text_col)
-
-
-def subword_counts_jvm(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """(id, n_subwords) via the counting-only loop — the cheap input to
-    token budgeting / packing in subword units."""
-    words = F.split(F.col(text_col), " ")
-    return docs.select(
-        id_col,
-        F.aggregate(
-            F.transform(words, _subword_count_word),
-            F.lit(0),
-            lambda acc, c: acc + c,
-        )
-        .cast("long")
-        .alias("n_subwords"),
+    """(id, n_subwords) — the counting-only path that feeds token
+    budgeting / packing in subword units; a null text counts as null,
+    like :func:`_subword_count`.  Map-only."""
+    vset, lens = _probe_set(vocab)
+    return _per_doc(
+        docs, id_col, text_col, "n_subwords long",
+        lambda text: (
+            sum(len(_maxmatch(w, vset, lens)) for w in text.split(" ")),
+        ),
     )
-
-
-def subword_tokenize_arrow(
-    docs: DataFrame,
-    vocab: tuple[str, ...] | list[str] = SUBWORD_VOCAB,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Arrow tier: same MaxMatch semantics via ``mapInPandas`` with a
-    hash-set vocab — O(maxlen) set probes per character regardless of
-    vocabulary size, the tier for production 30k+-entry vocabs.
-
-    ``vocab`` is a driver-scale list by contract (collect it from a
-    vocab table the way x32 collects centroid frames).  Output is
-    bitwise-identical to :func:`subword_tokenize` (twin-equivalence
-    test-pinned).  Map-only like the JVM tier: the Arrow exchange is
-    per-batch, no shuffle."""
-    vset = frozenset(vocab)
-    lens = sorted({len(t) for t in vset}, reverse=True)
-    out_schema = (
-        f"{id_col} string, n_words long, n_subwords long, toks string"
-    )
-
-    id_dtype = dict(docs.dtypes)[id_col]
-
-    def _tok_word(w: str) -> list[str]:
-        toks, pos, n = [], 0, len(w)
-        while pos < n:
-            for L in lens:
-                cand = w[pos : pos + L]
-                if len(cand) == L and cand in vset:
-                    toks.append(cand)
-                    pos += L
-                    break
-            else:
-                toks.append(w[pos])
-                pos += 1
-        return toks
-
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                words = text.split(" ")
-                per = [_tok_word(w) for w in words]
-                rows.append(
-                    (
-                        str(did),
-                        len(words),
-                        sum(len(t) for t in per),
-                        " ".join("|".join(t) for t in per),
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=[id_col, "n_words", "n_subwords", "toks"]
-            )
-
-    out = docs.select(id_col, text_col).mapInPandas(_batches, out_schema)
-    # mapInPandas schemas are strings; restore the id column's real type
-    return out.withColumn(id_col, F.col(id_col).cast(id_dtype))
-
-
-def subword_counts_arrow(
-    docs: DataFrame,
-    vocab: tuple[str, ...] | list[str] = SUBWORD_VOCAB,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Arrow tier of the counting-only path: (id, n_subwords) via
-    ``mapInPandas`` with a hash-set vocab — same MaxMatch advance as
-    :func:`subword_tokenize_arrow` but no token strings materialized.
-    Map-only; twin-equivalence to the JVM counting loop is test-pinned."""
-    vset = frozenset(vocab)
-    lens = sorted({len(t) for t in vset}, reverse=True)
-    out_schema = f"{id_col} string, n_subwords long"
-    id_dtype = dict(docs.dtypes)[id_col]
-
-    def _count_word(w: str) -> int:
-        cnt, pos, n = 0, 0, len(w)
-        while pos < n:
-            for L in lens:
-                if pos + L <= n and w[pos : pos + L] in vset:
-                    pos += L
-                    break
-            else:
-                pos += 1
-            cnt += 1
-        return cnt
-
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = [
-                (str(did), sum(_count_word(w) for w in text.split(" ")))
-                for did, text in zip(pdf[id_col], pdf[text_col])
-            ]
-            yield pd.DataFrame(rows, columns=[id_col, "n_subwords"])
-
-    out = docs.select(id_col, text_col).mapInPandas(_batches, out_schema)
-    return out.withColumn(id_col, F.col(id_col).cast(id_dtype))
 
 
 # -- x37: registry entry + DuckDB recursive-CTE oracle ---------------------
@@ -431,11 +294,9 @@ ORDER BY doc_id, n_words, n_subwords, toks"""
 @register("x37_subword_tokenize", _X37_ORACLE)
 def x37_subword_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X37 greedy-MaxMatch subword tokenization over the documents
-    table, JVM tier — map-only, vocab as a plan literal.  The JVM tier
-    is pinned HERE (the library default dispatches to Arrow): this
-    entry is the oracle witness that the codegen'd HOF loop implements
-    MaxMatch exactly, and x37b is the same witness for the Arrow tier."""
-    return subword_tokenize_jvm(load(spark, sf_dir, "documents")).orderBy(
+    table — map-only.  The oracle witness that :func:`_maxmatch`
+    implements MaxMatch exactly; x37b registers this same function."""
+    return subword_tokenize(load(spark, sf_dir, "documents")).orderBy(
         "doc_id", "n_words", "n_subwords", "toks"
     )
 
@@ -489,32 +350,18 @@ def x17b_subword_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic md5 order."""
     from cubefs_hadoop_spark.extensions.curation import token_budget_sample
 
-    docs = load(spark, sf_dir, "documents")
-    # JVM counting loop pinned here (library default is Arrow): this
-    # entry doubles as the oracle + plan-gate witness for the codegen'd
-    # counting HOF, exactly like x37 vs x37b
-    words = F.split(F.col("text"), " ")
-    n_sub = F.aggregate(
-        F.transform(words, _subword_count_word),
-        F.lit(0),
-        lambda acc, c: acc + c,
-    ).cast("long")
+    # the JVM count keeps this plan zero-Python (plan-gated) and is the
+    # oracle witness for _subword_count
     return token_budget_sample(
-        docs, budget=_X17B_BUDGET, tokens=n_sub
+        load(spark, sf_dir, "documents"),
+        budget=_X17B_BUDGET,
+        tokens=_subword_count(F.col("text")),
     ).orderBy("source", "cum_before", "doc_id", "tokens")
 
 
-# The Arrow tier under the driver's gate too: same oracle (the tiers are
-# semantically identical — twin-equivalence is also test-pinned), so a
-# hash mismatch here isolates a Python-tier regression specifically.
-@register("x37b_subword_tokenize_arrow", _X37_ORACLE)
-def x37b_subword_tokenize_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X37b greedy-MaxMatch subword tokenization, Arrow mapInPandas tier
-    (hash-set vocab, O(maxlen) probes per char — the production path for
-    30k+-entry vocabs)."""
-    return subword_tokenize_arrow(load(spark, sf_dir, "documents")).orderBy(
-        "doc_id", "n_words", "n_subwords", "toks"
-    )
+# the same tokenizer under a second name: sweep hashes and bench rows key
+# on x37b
+register("x37b_subword_tokenize_arrow", _X37_ORACLE)(x37_subword_tokenize)
 
 
 # -- x14b: sequence packing in SUBWORD units -------------------------------
@@ -568,18 +415,9 @@ def x14b_subword_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     else bucket-parallel)."""
     from cubefs_hadoop_spark.extensions.packing import sequence_pack
 
-    docs = load(spark, sf_dir, "documents")
-    # JVM counting loop pinned here for the same reason as x17b
-    words = F.split(F.col("text"), " ")
-    with_counts = docs.select(
-        "doc_id",
-        F.aggregate(
-            F.transform(words, _subword_count_word),
-            F.lit(0),
-            lambda acc, c: acc + c,
-        )
-        .cast("long")
-        .alias("subtok"),
+    # JVM count for the same reason as x17b
+    with_counts = load(spark, sf_dir, "documents").select(
+        "doc_id", _subword_count(F.col("text")).alias("subtok")
     )
     return sequence_pack(
         with_counts, seq_len=_X14B_S, tokens_col="subtok"
@@ -604,11 +442,11 @@ def x14b_subword_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
 # construction — the corpus is read exactly ONCE, into a (word, freq)
 # sufficient-statistics frame via one partial-aggregated groupBy (hot
 # words combine map-side; same additive-state idea as x33b's DSIR
-# vocabulary).  The m merge iterations then run entirely over that
-# vocab-scale frame: each iteration is one map-only pair explode, one
-# partial-aggregated pair count, a 1-row argmax collect (driver-sized
-# by definition — it is the learned merge), and one literal-param JVM
-# higher-order projection applying the merge.  Nothing corpus-sized is
+# vocabulary).  The m merges are then learned in rounds entirely over
+# that vocab-scale frame: each round is one map-only pair explode, one
+# partial-aggregated pair count, a top-of-list collect (driver-sized —
+# at most a few dozen pairs), and literal-param JVM higher-order
+# projections applying the round's merges.  Nothing corpus-sized is
 # ever shuffled again, broadcast, or collected.  Encoding (x39b) joins
 # the corpus word stream to the vocab-scale final segmentation with a
 # BROADCAST hash join — map-side, no corpus shuffle before the per-doc
@@ -647,77 +485,6 @@ def _apply_merge(syms: Column, lhs: str, rhs: str) -> Column:
     )
 
 
-def bpe_train(
-    docs: DataFrame,
-    text_col: str = "text",
-    n_merges: int = _X39_M,
-) -> tuple[list[tuple[int, str, str, str, int]], DataFrame]:
-    """Learn ``n_merges`` BPE merges from a document corpus.
-
-    Returns ``(merges, syms)``: the merge table as driver-side rows
-    ``(rank, lhs, rhs, merged, cnt)`` — driver-sized by definition, one
-    row per learned merge — and the final vocab-scale segmentation
-    frame ``(word, freq, syms: array<string>)`` (persisted; concat(syms)
-    == word always, test-pinned).  Stops early if no adjacent pair
-    remains (every word fused to one symbol)."""
-    wf = (
-        docs.select(F.explode(F.split(text_col, " ")).alias("word"))
-        .where(F.length("word") > 0)
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).cast("long").alias("freq"))
-    )
-    syms = wf.withColumn(
-        "syms",
-        F.transform(
-            F.sequence(F.lit(1), F.length("word")),
-            lambda i: F.col("word").substr(i, F.lit(1)),
-        ),
-    ).persist()
-
-    merges: list[tuple[int, str, str, str, int]] = []
-    prev: DataFrame | None = None
-    for rank in range(1, n_merges + 1):
-        pair = F.transform(
-            F.slice(F.col("syms"), 1, F.size("syms") - 1),
-            lambda s, i: F.struct(
-                s.alias("lhs"),
-                F.element_at(F.col("syms"), i + F.lit(2)).alias("rhs"),
-            ),
-        )
-        best = (
-            syms.where(F.size("syms") >= 2)
-            .select("freq", F.explode(pair).alias("p"))
-            .groupBy("p.lhs", "p.rhs")
-            .agg(F.sum("freq").cast("long").alias("cnt"))
-            .orderBy(F.desc("cnt"), "lhs", "rhs")
-            .limit(1)
-            .collect()
-        )
-        # the argmax job above just materialized `syms` into the cache,
-        # so the previous round's frame can be released here — the old
-        # per-round nxt.count() materialization job is gone (r14: one
-        # dedicated job per merge -> one per training run, measured
-        # 3.66 s -> 2.46 s at sf0.1, merge table bit-identical)
-        if prev is not None:
-            prev.unpersist()
-            prev = None
-        if not best:
-            break
-        lhs, rhs, cnt = best[0]["lhs"], best[0]["rhs"], best[0]["cnt"]
-        merges.append((rank, lhs, rhs, lhs + rhs, int(cnt)))
-        nxt = syms.withColumn(
-            "syms", _apply_merge(F.col("syms"), lhs, rhs)
-        ).persist()
-        prev, syms = syms, nxt
-    if prev is not None:
-        # materialize the final segmentation once so the parent cache
-        # can be dropped — callers receive a frame served from its own
-        # cached blocks (same post-return cache state as before)
-        syms.count()
-        prev.unpersist()
-    return merges, syms
-
-
 def _accept_batch(
     cand: list[tuple[str, str, int]], cap: int, complete: bool
 ) -> list[tuple[str, str, int]]:
@@ -732,8 +499,8 @@ def _accept_batch(
     (conflict, cap, or truncation point); finally drop trailing accepts
     whose count is <= bound.
 
-    Why this is EXACT (witness-tested against the sequential trainer and
-    the pure-Python reference, including the tie corpus below): applying
+    Why this is EXACT (witness-tested against the pure-Python reference
+    and the DuckDB unroll, including the tie corpus in the tests): applying
     a merge (a,b)->ab only touches pairs whose symbols intersect
     {a,b,ab} — disjoint pairs keep their counts, conflicting pairs only
     lose occurrences, and every NEW pair is count-bounded by an old
@@ -767,27 +534,32 @@ def _accept_batch(
     return accepted
 
 
-def bpe_train_batched(
+def bpe_train(
     docs: DataFrame,
     text_col: str = "text",
     n_merges: int = _X39_M,
     batch: int = 8,
 ) -> tuple[list[tuple[int, str, str, str, int]], DataFrame]:
-    """``bpe_train`` with up to ``batch`` merges learned per Spark round
-    — same return value, bit-identical merge table (witness-tested).
+    """Learn ``n_merges`` BPE merges from a document corpus, up to
+    ``batch`` merges per Spark round.
 
-    The sequential trainer costs one pair-count job + one argmax collect
-    PER MERGE: fine at m=8, but a production 30k-merge vocabulary is
-    30k sequential Spark jobs — days of fixed per-job latency even
-    though each job is only vocab-scale (VERDICT r8 "What's wrong" #3).
-    This variant collects the top of the pair list once per round and
-    accepts every merge that provably IS the next run of sequential
-    argmaxes (see ``_accept_batch``), cutting the job count by ~batch
-    while keeping the learned table exact.  Pathological tie-dense
-    corpora degrade gracefully to one merge per round, never to a wrong
-    table.  For the remaining latency regime, train on a sample and
-    apply distributed — the industry recipe documented in SCALE.md
-    ("BPE at a production vocabulary size")."""
+    Returns ``(merges, syms)``: the merge table as driver-side rows
+    ``(rank, lhs, rhs, merged, cnt)`` — driver-sized by definition, one
+    row per learned merge — and the final vocab-scale segmentation
+    frame ``(word, freq, syms: array<string>)`` (persisted; concat(syms)
+    == word always, test-pinned).  Stops early if no adjacent pair
+    remains (every word fused to one symbol).
+
+    Each round collects the top of the pair list once and accepts every
+    merge that provably IS the next run of one-at-a-time argmaxes (see
+    ``_accept_batch``), so the table equals sequential BPE's exactly
+    (witness-tested against a pure-Python reference and the DuckDB
+    unroll) at ~1/batch of its Spark jobs — a 30k-merge vocabulary is
+    not 30k sequential jobs.  Tie-dense corpora degrade gracefully to
+    one merge per round, never to a wrong table.  For the remaining
+    latency regime, train on a sample and apply distributed — the
+    industry recipe documented in SCALE.md ("BPE at a production
+    vocabulary size")."""
     wf = (
         docs.select(F.explode(F.split(text_col, " ")).alias("word"))
         .where(F.length("word") > 0)
@@ -823,9 +595,8 @@ def bpe_train_batched(
             .limit(top + 1)
             .collect()
         )
-        # the pair-count job above just materialized `syms`; release the
-        # previous round's cache without a dedicated count() job (r14,
-        # same restructure as bpe_train)
+        # the pair-count job above just materialized `syms`, so the
+        # previous round's cache is released without a dedicated job
         if prev is not None:
             prev.unpersist()
             prev = None
@@ -842,6 +613,9 @@ def bpe_train_batched(
         nxt = syms.withColumn("syms", col).persist()
         prev, syms = syms, nxt
     if prev is not None:
+        # materialize the final segmentation once so the parent cache
+        # can be dropped — callers receive a frame served from its own
+        # cached blocks
         syms.count()
         prev.unpersist()
     return merges, syms
@@ -917,10 +691,12 @@ def x39_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     merges learned from the documents corpus, (rank, lhs, rhs, merged,
     cnt).  Iterative algorithm in x03c's class — but the DuckDB twin
     recomputes every argmax independently (nothing pinned): the oracle
-    unrolls the 8 iterations as a generated gaps-and-islands CTE chain.
-    See the module section comment for the scale design (corpus read
-    once into vocab-scale sufficient statistics; merge loop never
-    touches the corpus again)."""
+    unrolls the 8 one-merge-at-a-time iterations as a generated
+    gaps-and-islands CTE chain, so a hash match witnesses that
+    ``bpe_train``'s batched rounds learn sequential BPE's table.  x39c
+    registers this same function.  See the module section comment for
+    the scale design (corpus read once into vocab-scale sufficient
+    statistics; merge rounds never touch the corpus again)."""
     merges, syms = bpe_train(load(spark, sf_dir, "documents"))
     syms.unpersist()
     return spark.createDataFrame(
@@ -945,11 +721,12 @@ GROUP BY wd.doc_id ORDER BY doc_id"""
 
 @register("x39b_bpe_encode", _X39B_ORACLE)
 def x39b_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X39b encode-with-learned-merges: train 8 BPE merges (x39), then
-    tokenize the corpus with them — per doc, whitespace-word and BPE
-    token counts.  The trained segmentation IS the per-word token
-    count, so encoding is a vocab-scale BROADCAST join against the
-    exploded word stream (map-side; the only corpus shuffle is the
+    """X39b encode-with-learned-merges: train 8 BPE merges (x39's
+    ``bpe_train`` call), then tokenize the corpus with them — per doc,
+    whitespace-word and BPE token counts; its oracle witnesses the final
+    segmentation, not just the merge table.  The trained segmentation
+    IS the per-word token count, so encoding is a vocab-scale BROADCAST
+    join against the exploded word stream (map-side; the only corpus shuffle is the
     per-doc rollup).  Every corpus word hits the join by construction
     (trained on the same corpus)."""
     docs = load(spark, sf_dir, "documents")
@@ -1037,7 +814,7 @@ def fertility_stats(
     docs: DataFrame,
     group_col: str = "source",
     text_col: str = "text",
-    tier: str = "arrow",
+    vocab: tuple[str, ...] | list[str] = SUBWORD_VOCAB,
 ) -> DataFrame:
     """(source, n_docs, n_words, n_subwords, n_chars): the ADDITIVE
     sufficient statistics behind the fertility audit — associative+
@@ -1045,79 +822,18 @@ def fertility_stats(
     persisted state by plain addition (the S21 streaming twin's merge
     law, same contract as x31b/x33b).
 
-    Same tier rule as :func:`subword_tokenize` (default: Arrow — the
-    r9 sf1 probe measured the JVM counting loop at 10.3x/51.8 s on 10x
-    data vs Arrow's batch loop, the same economics that made Arrow the
-    x37 default in r8); the tiers count identically (MaxMatch twin
-    equivalence is test-pinned), so the oracle hash holds for both."""
-    _check_tier(tier)
-    if tier == "arrow":
-        return fertility_stats_arrow(docs, group_col, text_col)
-    return fertility_stats_jvm(docs, group_col, text_col)
-
-
-def fertility_stats_jvm(
-    docs: DataFrame,
-    group_col: str = "source",
-    text_col: str = "text",
-) -> DataFrame:
-    """JVM tier: the codegen'd counting HOF rides the scan (zero
-    Python); one partial-agg'd groupBy."""
-    words = F.split(F.col(text_col), " ")
-    per_doc = docs.select(
-        F.col(group_col).alias("grp"),
-        F.size(F.filter(words, lambda w: F.length(w) > 0))
-        .cast("long")
-        .alias("nw"),
-        F.aggregate(
-            F.transform(words, _subword_count_word),
-            F.lit(0),
-            lambda acc, c: acc + c,
-        )
-        .cast("long")
-        .alias("ns"),
-        F.length(text_col).cast("long").alias("nc"),
-    )
-    return (
-        per_doc.groupBy("grp")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.sum("nw").cast("long").alias("n_words"),
-            F.sum("ns").cast("long").alias("n_subwords"),
-            F.sum("nc").cast("long").alias("n_chars"),
-        )
-        .withColumnRenamed("grp", group_col)
-    )
-
-
-def fertility_stats_arrow(
-    docs: DataFrame,
-    group_col: str = "source",
-    text_col: str = "text",
-    vocab: tuple[str, ...] | list[str] = SUBWORD_VOCAB,
-) -> DataFrame:
-    """Arrow tier: one ``mapInPandas`` pass emits PER-BATCH per-source
-    partial sums (a hand-rolled map-side combine — each Arrow batch
-    collapses to at most |sources| rows), then one tiny groupBy folds
-    the partials.  Hash-set vocab, O(maxlen) probes per character."""
-    vset = frozenset(vocab)
-    lens = sorted({len(t) for t in vset}, reverse=True)
+    One ``mapInPandas`` pass emits PER-BATCH per-source partial sums (a
+    hand-rolled map-side combine — each Arrow batch collapses to at most
+    |sources| rows), then one tiny groupBy folds the partials.  A null
+    text counts as "" — one document with zero words, subwords and
+    chars — rather than null as in :func:`subword_counts`: 0 is the
+    identity of the sink's additive merge, so a null row adds its
+    document and nothing else."""
+    vset, lens = _probe_set(vocab)
     schema = (
         f"{group_col} string, n_docs long, n_words long,"
         " n_subwords long, n_chars long"
     )
-
-    def _count_word(w: str) -> int:
-        cnt, pos, n = 0, 0, len(w)
-        while pos < n:
-            for L in lens:
-                if pos + L <= n and w[pos : pos + L] in vset:
-                    pos += L
-                    break
-            else:
-                pos += 1
-            cnt += 1
-        return cnt
 
     def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -1128,7 +844,7 @@ def fertility_stats_arrow(
                 r = acc.setdefault(g, [0, 0, 0, 0])
                 r[0] += 1
                 r[1] += len(ws)
-                r[2] += sum(_count_word(w) for w in ws)
+                r[2] += sum(len(_maxmatch(w, vset, lens)) for w in ws)
                 r[3] += len(text)
             yield pd.DataFrame(
                 [(g, *v) for g, v in acc.items()],
@@ -1189,28 +905,15 @@ def x58_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X58 per-source tokenizer fertility/compression audit over the
     frozen subword vocabulary: the table that prices a tokenizer before
     a run commits to it (fertility skews token-denominated mixtures and
-    packing efficiency).  Runs the library-default tier (Arrow since
-    the r9 sf1 probe — x37b's precedent), which hash-checks against the
-    same recursive-CTE oracle because the tiers count identically
-    (twin equivalence test-pinned; the JVM tier stays gated by the
-    plan-shape test)."""
+    packing efficiency); the oracle witness for ``fertility_stats``."""
     return tokenizer_fertility(load(spark, sf_dir, "documents")).orderBy(
         "source"
     )
 
 
-@register("x39c_bpe_train_batched", _X39_ORACLE)
-def x39c_bpe_train_batched(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X39c the BATCHED BPE trainer under the driver's gate: same merge
-    table as x39 by the _accept_batch exactness argument (see SCALE.md
-    "BPE at a production vocabulary size"), so it shares x39's oracle
-    verbatim — a hash mismatch here isolates a batching regression
-    specifically, the same twin-pinning idea as x37 vs x37b."""
-    merges, syms = bpe_train_batched(load(spark, sf_dir, "documents"))
-    syms.unpersist()
-    return spark.createDataFrame(
-        merges, "rank long, lhs string, rhs string, merged string, cnt long"
-    ).orderBy("rank")
+# the same trainer under a second name: sweep hashes and bench rows key
+# on x39c
+register("x39c_bpe_train_batched", _X39_ORACLE)(x39_bpe_train)
 
 
 # -- x66: vocabulary growth curve (Heaps-law capacity planning) --------------

@@ -433,16 +433,14 @@ def test_subword_layout_pipeline(spark, tmp_path):
     )
     from cubefs_hadoop_spark.extensions.packing import sequence_pack
     from cubefs_hadoop_spark.extensions.tokenize import (
-        _subword_count_word,
+        _subword_count,
         subword_counts,
     )
 
     docs = load(spark, SF_SMOKE, "documents")
-    words = F.split(F.col("text"), " ")
-    n_sub = F.aggregate(
-        F.transform(words, _subword_count_word), F.lit(0), lambda a, c: a + c
-    ).cast("long")
-    picked = token_budget_sample(docs, budget=700, tokens=n_sub)
+    picked = token_budget_sample(
+        docs, budget=700, tokens=_subword_count(F.col("text"))
+    )
     packed = sequence_pack(
         picked.select("doc_id", F.col("tokens").alias("subtok")),
         seq_len=64,

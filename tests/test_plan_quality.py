@@ -413,30 +413,15 @@ def test_x36_ncm_is_broadcast_argmin(spark):
     assert not a.has_python_eval
 
 
-def test_x37_tokenize_is_map_only(spark):
-    """x37's generic path (no presentation sort) must be pure map work:
-    the MaxMatch aggregate-HOF loop rides the scan — zero exchanges,
-    zero joins, zero Python; the vocab is a plan literal, not a join.
-    (The JVM tier explicitly — the dispatcher defaults to Arrow.)"""
-    from cubefs_hadoop_spark.catalog import load
-    from cubefs_hadoop_spark.extensions.tokenize import subword_tokenize_jvm
-
-    spark.catalog.clearCache()
-    a = audit_plan(subword_tokenize_jvm(load(spark, SF_SMOKE, "documents")))
-    assert a.shuffles == 0
-    assert a.broadcast_joins + a.sort_merge_joins + a.nested_loop_joins == 0
-    assert not a.has_python_eval
-
-
 def test_x37_arrow_tier_is_shuffle_free(spark):
-    """The Arrow tier is the documented Python path (ArrowEvalPython via
-    mapInPandas) but still map-only — no shuffle, no join: per-batch
-    Arrow transfer only."""
+    """The tokenizer is the documented Python path (mapInPandas) but
+    still map-only — no shuffle, no join: per-batch Arrow transfer
+    only."""
     from cubefs_hadoop_spark.catalog import load
-    from cubefs_hadoop_spark.extensions.tokenize import subword_tokenize_arrow
+    from cubefs_hadoop_spark.extensions.tokenize import subword_tokenize
 
     spark.catalog.clearCache()
-    a = audit_plan(subword_tokenize_arrow(load(spark, SF_SMOKE, "documents")))
+    a = audit_plan(subword_tokenize(load(spark, SF_SMOKE, "documents")))
     assert a.shuffles == 0
     assert a.broadcast_joins + a.sort_merge_joins + a.nested_loop_joins == 0
 

@@ -1,12 +1,12 @@
 """Subword tokenization (x37/x17b): MaxMatch semantics, conservation,
-determinism, JVM/Arrow twin equivalence, and budget-variant behavior."""
+determinism, null handling, and budget-variant behavior; BPE training
+(x39) against independent references."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_ORACLE, SF_SMOKE
 
 
 def _toks(spark, rows):
@@ -83,32 +83,17 @@ def test_repartition_stability(spark):
     assert a == b
 
 
-def test_arrow_tier_twin_equivalence(spark):
-    """The mapInPandas (hash-set) tier and the JVM (literal-scan) tier
-    produce bitwise-identical frames on the fixture corpus."""
-    from cubefs_hadoop_spark.catalog import load
-    from cubefs_hadoop_spark.extensions.tokenize import (
-        subword_tokenize_arrow,
-        subword_tokenize_jvm,
-    )
-
-    docs = load(spark, SF_SMOKE, "documents")
-    jvm = {tuple(r) for r in subword_tokenize_jvm(docs).collect()}
-    arrow = {tuple(r) for r in subword_tokenize_arrow(docs).collect()}
-    assert jvm == arrow
-
-
 def test_arrow_tier_custom_vocab(spark):
-    """The Arrow tier honors a caller-supplied vocab list (the
+    """The tokenizer honors a caller-supplied vocab list (the
     production path: collect a driver-scale vocab table, pass it in)."""
-    from cubefs_hadoop_spark.extensions.tokenize import subword_tokenize_arrow
+    from cubefs_hadoop_spark.extensions.tokenize import subword_tokenize
 
     df = spark.createDataFrame(
         [("a", "abcabc"), ("b", "xyz")], "doc_id string, text string"
     )
     out = {
         r.doc_id: r.toks
-        for r in subword_tokenize_arrow(df, vocab=("abc", "xy")).collect()
+        for r in subword_tokenize(df, vocab=("abc", "xy")).collect()
     }
     assert out["a"] == "abc|abc"
     assert out["b"] == "xy|z"
@@ -127,12 +112,39 @@ def test_subword_counts_match_tokenize(spark):
     full = {r.doc_id: r.n_subwords for r in subword_tokenize(docs).collect()}
     cnt = {r.doc_id: r.n_subwords for r in subword_counts(docs).collect()}
     assert full == cnt
-    # ... on BOTH tiers of the counting loop
-    jcnt = {
-        r.doc_id: r.n_subwords
-        for r in subword_counts(docs, tier="jvm").collect()
+
+
+def test_null_and_empty_text_rows(spark):
+    """A null text yields nulls (never a worker crash), "" yields zero
+    subwords, and per row the Arrow count equals the JVM count helper
+    (nulls included) and the tokenizer's n_subwords; an empty frame
+    gives an empty result."""
+    from cubefs_hadoop_spark.extensions.tokenize import (
+        _subword_count,
+        subword_counts,
+        subword_tokenize,
+    )
+
+    docs = spark.createDataFrame(
+        [("n", None), ("e", ""), ("z", "zzz x"), ("w", "the window scan")],
+        "doc_id string, text string",
+    )
+    cnt = {r.doc_id: r.n_subwords for r in subword_counts(docs).collect()}
+    jvm = {
+        r.doc_id: r.n
+        for r in docs.select(
+            "doc_id", _subword_count(F.col("text")).alias("n")
+        ).collect()
     }
-    assert jcnt == cnt
+    tok = {r.doc_id: tuple(r)[1:] for r in subword_tokenize(docs).collect()}
+    assert cnt == jvm == {"n": None, "e": 0, "z": 4, "w": 5}
+    assert {d: t[1] for d, t in tok.items()} == cnt
+    assert tok["n"] == (None, None, None)
+    assert tok["e"] == (1, 0, "")
+
+    empty = docs.limit(0)
+    assert subword_counts(empty).collect() == []
+    assert subword_tokenize(empty).collect() == []
 
 
 def test_x17b_budget_semantics(spark):
@@ -270,31 +282,41 @@ def test_bpe_train_matches_python_reference_on_fixture(spark):
     assert got_syms == ref_syms
 
 
-def test_bpe_batched_matches_sequential_on_fixture(spark):
-    """The batched trainer's merge table and final segmentation are
-    bit-identical to the sequential trainer AND the pure-Python
-    reference on the real sf0.001 corpus — the equivalence witness for
-    the k-merges-per-round optimization (VERDICT r8 item 4)."""
+def test_bpe_batched_matches_sequential_on_fixture(spark, duck):
+    """At every batch width the trainer's merge table and final
+    segmentation equal one-merge-at-a-time BPE as computed by two
+    independent references over the same corpus files: the pure-Python
+    ``_py_bpe`` and DuckDB running the ``_bpe_cte`` unroll."""
     from cubefs_hadoop_spark.catalog import load
-    from cubefs_hadoop_spark.extensions.tokenize import (
-        bpe_train,
-        bpe_train_batched,
-    )
+    from cubefs_hadoop_spark.extensions.tokenize import _bpe_cte, bpe_train
 
-    docs = load(spark, SF_SMOKE, "documents")
-    seq_merges, seq_syms = bpe_train(docs, n_merges=8)
-    seq = {r.word: tuple(r.syms) for r in seq_syms.collect()}
-    seq_syms.unpersist()
-    for batch in (1, 3, 8):
-        merges, syms = bpe_train_batched(docs, n_merges=8, batch=batch)
-        assert merges == seq_merges, f"batch={batch}"
-        got = {r.word: tuple(r.syms) for r in syms.collect()}
-        syms.unpersist()
-        assert got == seq, f"batch={batch}"
-    ref_merges, _ = _py_bpe(
+    docs = load(spark, SF_ORACLE, "documents")
+    ref_merges, ref_syms = _py_bpe(
         [r.text for r in docs.select("text").collect()], 8
     )
-    assert seq_merges == ref_merges
+    cte = "WITH " + _bpe_cte(8)
+    duck_merges = duck.sql(
+        cte
+        + " UNION ALL ".join(
+            f" SELECT {k}, lhs, rhs, lhs || rhs, cnt FROM b{k}"
+            for k in range(1, 9)
+        )
+        + " ORDER BY 1"
+    ).fetchall()
+    duck_syms = dict(
+        duck.sql(
+            cte + " SELECT word, list(sym ORDER BY pos) FROM s8 GROUP BY word"
+        ).fetchall()
+    )
+    assert len(ref_merges) == 8
+    assert duck_merges == ref_merges
+    assert {w: tuple(s) for w, s in duck_syms.items()} == ref_syms
+    for batch in (1, 3, 8):
+        merges, syms = bpe_train(docs, n_merges=8, batch=batch)
+        got = {r.word: tuple(r.syms) for r in syms.collect()}
+        syms.unpersist()
+        assert merges == ref_merges, f"batch={batch}"
+        assert got == ref_syms, f"batch={batch}"
 
 
 def test_bpe_batched_tie_corpus_drops_unsafe_accepts(spark):
@@ -303,10 +325,7 @@ def test_bpe_batched_tie_corpus_drops_unsafe_accepts(spark):
     10 and wins the lexical tie-break — so ('c','d') must NOT ride the
     first batch even though it is disjoint from ('a','z').  Pins the
     drop-ties-with-the-bound rule in _accept_batch."""
-    from cubefs_hadoop_spark.extensions.tokenize import (
-        _accept_batch,
-        bpe_train_batched,
-    )
+    from cubefs_hadoop_spark.extensions.tokenize import _accept_batch, bpe_train
 
     texts = ["azq " * 10 + "az " * 15 + "cd " * 10]
     df = spark.createDataFrame([(t,) for t in texts], "text string")
@@ -315,7 +334,7 @@ def test_bpe_batched_tie_corpus_drops_unsafe_accepts(spark):
     assert [(m[1], m[2]) for m in ref_merges] == [
         ("a", "z"), ("az", "q"), ("c", "d")
     ]
-    merges, syms = bpe_train_batched(df, n_merges=3, batch=3)
+    merges, syms = bpe_train(df, n_merges=3, batch=3)
     assert merges == ref_merges
     got = {r.word: tuple(r.syms) for r in syms.collect()}
     syms.unpersist()
@@ -419,17 +438,19 @@ from hypothesis import strategies as st  # noqa: E402
         max_size=30,
     ),
     n_merges=st.integers(0, 6),
+    batch=st.sampled_from((1, 2, 8)),
 )
-def test_bpe_train_property_matches_reference(spark, words, n_merges):
+def test_bpe_train_property_matches_reference(spark, words, n_merges, batch):
     """x39 property: for ANY corpus over a tiny alphabet (maximally
-    tie- and overlap-prone: repeated symbols, nested merges), the Spark
-    trainer's merge table AND final segmentation equal the pure-Python
-    reference, and concat(syms) == word on every row."""
+    tie- and overlap-prone: repeated symbols, nested merges) and any
+    batch width, the Spark trainer's merge table AND final segmentation
+    equal the pure-Python reference, and concat(syms) == word on every
+    row — random ties exercise ``_accept_batch``'s tie-drop rule."""
     from cubefs_hadoop_spark.extensions.tokenize import bpe_train
 
     text = " ".join(words)
     df = spark.createDataFrame([(text,)], "text string")
-    merges, syms = bpe_train(df, n_merges=n_merges)
+    merges, syms = bpe_train(df, n_merges=n_merges, batch=batch)
     ref_merges, ref_syms = _py_bpe([text], n_merges)
     got = {r.word: tuple(r.syms) for r in syms.collect()}
     syms.unpersist()
@@ -439,10 +460,8 @@ def test_bpe_train_property_matches_reference(spark, words, n_merges):
 
 
 def test_tier_dispatch_defaults_to_arrow(spark):
-    """VERDICT r7 item 3: the scale-safe tier IS the default.  The
-    dispatcher's default plan carries the Arrow mapInPandas node;
-    tier='jvm' carries none; a custom vocab on the JVM tier refuses
-    loudly (its vocab is a frozen plan literal)."""
+    """The scale-safe hash-set kernel is the only tokenizer: the
+    tokenize and counts plans carry the Arrow mapInPandas node."""
     from cubefs_hadoop_spark.extensions.tokenize import (
         subword_counts,
         subword_tokenize,
@@ -454,21 +473,14 @@ def test_tier_dispatch_defaults_to_arrow(spark):
     )
     assert audit_plan(subword_tokenize(docs)).has_pandas_map
     assert audit_plan(subword_counts(docs)).has_pandas_map
-    assert not audit_plan(subword_tokenize(docs, tier="jvm")).has_pandas_map
-    assert not audit_plan(subword_counts(docs, tier="jvm")).has_pandas_map
-
-    with pytest.raises(ValueError, match="frozen SUBWORD_VOCAB"):
-        subword_tokenize(docs, tier="jvm", vocab=("ab",))
-    with pytest.raises(ValueError, match="tier must be"):
-        subword_tokenize(docs, tier="gpu")
 
 
 def test_counts_arrow_twin_and_custom_vocab(spark):
-    """The Arrow counting tier equals the JVM counting loop on crafted
-    rows and honors a caller vocab (the production 30k-vocab path)."""
+    """The Arrow count equals the JVM count helper on crafted rows and
+    honors a caller vocab (the production 30k-vocab path)."""
     from cubefs_hadoop_spark.extensions.tokenize import (
+        _subword_count,
         subword_counts,
-        subword_counts_arrow,
     )
 
     docs = spark.createDataFrame(
@@ -477,13 +489,15 @@ def test_counts_arrow_twin_and_custom_vocab(spark):
     )
     arrow = {r.doc_id: r.n_subwords for r in subword_counts(docs).collect()}
     jvm = {
-        r.doc_id: r.n_subwords
-        for r in subword_counts(docs, tier="jvm").collect()
+        r.doc_id: r.n
+        for r in docs.select(
+            "doc_id", _subword_count(F.col("text")).alias("n")
+        ).collect()
     }
     assert arrow == jvm
     custom = {
         r.doc_id: r.n_subwords
-        for r in subword_counts_arrow(docs, vocab=("the", "cust")).collect()
+        for r in subword_counts(docs, vocab=("the", "cust")).collect()
     }
     # "the window scan": the + 10 single chars = 11; "zzz x" -> 4;
     # "customer" -> cust|o|m|e|r = 5
@@ -503,7 +517,7 @@ def test_tokenizer_fertility_conservation(spark):
     from cubefs_hadoop_spark.catalog import load
     from cubefs_hadoop_spark.extensions.tokenize import (
         _MAXLEN,
-        subword_counts_jvm,
+        subword_counts,
         tokenizer_fertility,
     )
 
@@ -512,7 +526,7 @@ def test_tokenizer_fertility_conservation(spark):
     assert rows
     assert sum(r.n_docs for r in rows) == docs.count()
     total_sub = sum(r.n_subwords for r in rows)
-    ref = subword_counts_jvm(docs).agg({"n_subwords": "sum"}).first()[0]
+    ref = subword_counts(docs).agg({"n_subwords": "sum"}).first()[0]
     assert total_sub == ref
     for r in rows:
         assert float(r.subwords_per_word) >= 1.0, r
@@ -520,38 +534,14 @@ def test_tokenizer_fertility_conservation(spark):
 
 
 def test_tokenizer_fertility_plan_is_map_plus_one_agg(spark):
-    """x58 plan gates, both tiers: no joins, ONE aggregation exchange,
-    no second corpus pass; the JVM tier additionally proves the
-    zero-Python codegen path (the Arrow tier IS a mapInPandas by
-    design)."""
+    """x58 plan gate: no joins, ONE aggregation exchange, no second
+    corpus pass (the count IS a mapInPandas by design)."""
     from cubefs_hadoop_spark.catalog import load
-    from cubefs_hadoop_spark.extensions.tokenize import (
-        fertility_stats_arrow,
-        fertility_stats_jvm,
-    )
+    from cubefs_hadoop_spark.extensions.tokenize import fertility_stats
     from cubefs_hadoop_spark.plans.audit import audit_plan
 
     spark.catalog.clearCache()
     docs = load(spark, SF_SMOKE, "documents")
-    j = audit_plan(fertility_stats_jvm(docs), executed=True)
-    assert j.broadcast_joins + j.sort_merge_joins + j.nested_loop_joins == 0
-    assert not j.has_python_eval
-    assert j.shuffles <= 1
-    a = audit_plan(fertility_stats_arrow(docs), executed=True)
+    a = audit_plan(fertility_stats(docs), executed=True)
     assert a.broadcast_joins + a.sort_merge_joins + a.nested_loop_joins == 0
     assert a.shuffles <= 1
-
-
-def test_tokenizer_fertility_tier_twin_equivalence(spark):
-    """The Arrow (library default) and JVM fertility tiers produce
-    bitwise-identical per-source sums on the fixture corpus."""
-    from cubefs_hadoop_spark.catalog import load
-    from cubefs_hadoop_spark.extensions.tokenize import (
-        fertility_stats_arrow,
-        fertility_stats_jvm,
-    )
-
-    docs = load(spark, SF_SMOKE, "documents")
-    a = {tuple(r) for r in fertility_stats_arrow(docs).collect()}
-    j = {tuple(r) for r in fertility_stats_jvm(docs).collect()}
-    assert a == j
