@@ -2335,25 +2335,28 @@ def session_depth_from_state(
     (depth, n) cells PLUS each user's still-open session at its current
     depth — together exactly the sessions a batch x110 over everything
     ingested would count; identical share math."""
+    from cubefs_hadoop_spark.fs import warehouse_fs
     from cubefs_hadoop_spark.streaming.state_sink import (
         _latest_snapshot_batch,
-        _read_ledger,
         read_state,
     )
-    import os as _os
+    from cubefs_hadoop_spark.versioning import last_committed_batch
 
     cells = read_state(spark, state_dir).select("depth", "n")
-    # Bound the open-session snapshot to the COMMITTED ledger batch: the
-    # snapshot for batch N is published inside stats_fn before the ledger
+    # Bound the open-session snapshot to the COMMITTED batch: the
+    # snapshot for batch N is published inside stats_fn before the state
     # commits, so an unbounded read during an in-flight commit (or after
-    # a crash between snapshot publish and ledger publish) would pair
+    # a crash between snapshot publish and state publish) would pair
     # batch-N open rows with batch-(N-1) closed cells and transiently
     # drop sessions closed by batch N (ADVICE r13).
-    committed = _read_ledger(state_dir)["batch_id_max"]
-    b = _latest_snapshot_batch(open_dir, before=committed + 1)
+    committed = last_committed_batch(
+        state_dir, warehouse_fs(spark, state_dir)
+    )
+    fs = warehouse_fs(spark, open_dir)
+    b = _latest_snapshot_batch(fs, open_dir, before=committed + 1)
     if b is not None:
         open_counts = (
-            spark.read.parquet(_os.path.join(open_dir, f"batch={b}"))
+            spark.read.parquet(fs.join(open_dir, f"batch={b}"))
             .groupBy("depth")
             .agg(F.count(F.lit(1)).cast("long").alias("n"))
         )

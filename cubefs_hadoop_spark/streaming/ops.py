@@ -446,73 +446,44 @@ def versioned_batch_committer(
     the first micro-batch on — no OPTIMIZE pass needed before selective
     reads work.
 
-    Exactly-once: each micro-batch commits as a versioned APPEND carrying
-    the batch-id WATERMARK (Structured Streaming batch ids are
-    monotonically increasing per checkpoint, so "already committed" is
-    exactly ``batch_id <= watermark``).  A replayed batch (foreachBatch is
-    at-least-once around checkpoint boundaries) is skipped; the watermark
-    is one O(1) metadata read that survives version GC.  The commit
-    itself is the atomic no-overwrite manifest publish (versioning.py)."""
+    Exactly-once: each micro-batch commits as a versioned APPEND through
+    ``versioning.commit_batch``, which skips a replayed batch id (at or
+    under the batch-id watermark every manifest carries — one O(1)
+    metadata read that survives version GC) and stamps the new one.  The
+    commit itself is the atomic no-overwrite manifest publish
+    (versioning.py).  With ``branch`` (WAP streaming) the whole run
+    stages on an audit branch that must already exist
+    (create_table_branch is the explicit fork step); the watermark rides
+    the BRANCH chain, so replays skip there too, and publish carries the
+    final watermark onto main."""
     from cubefs_hadoop_spark import versioning
 
     def _commit(batch_df: DataFrame, batch_id: int) -> None:
         path = engine._table_path(table)
-        prev_max = None
-        if branch is not None:
-            # WAP streaming: stage the whole run on an audit branch (the
-            # branch must already exist — create_table_branch is the
-            # explicit fork step); the watermark ledger rides the BRANCH
-            # chain, so replayed batches skip there too, and publish
-            # carries the final watermark onto main
-            prev_max = versioning.last_committed_batch(
-                path, engine.fs, branch=branch
-            )
-            if prev_max is not None and int(batch_id) <= prev_max:
-                return
-            versioning.commit_version(
-                batch_df,
-                path,
-                mode="append",
-                fs=engine.fs,
-                stats_cols=stats_cols,
-                branch=branch,
-                extra={
-                    "batch_id": int(batch_id),
-                    "batch_id_max": max(
-                        int(batch_id),
-                        prev_max if prev_max is not None else -1,
-                    ),
-                },
-            )
-            return
-        if engine.fs.exists(path):
-            if not versioning.is_versioned(path, engine.fs):
-                # a PLAIN parquet table already lives here: once a manifest
-                # publishes, reads serve only the manifest snapshot, so
-                # first adopt the existing files as version 1 or every
-                # pre-existing row silently vanishes (ADVICE r04).  An
-                # empty directory (no data files) has nothing to shadow.
-                try:
-                    versioning.adopt_plain_table(path, engine.fs)
-                except versioning.EngineIOError:
-                    pass  # empty dir: nothing to adopt
-                except versioning.VersionConflictError:
-                    pass  # concurrent committer already adopted
-            prev_max = versioning.last_committed_batch(path, engine.fs)
-            if prev_max is not None and int(batch_id) <= prev_max:
-                return  # replayed batch: already durable, skip
-        versioning.commit_version(
-            batch_df,
+        if (
+            branch is None
+            and engine.fs.exists(path)
+            and not versioning.is_versioned(path, engine.fs)
+        ):
+            # a PLAIN parquet table already lives here: once a manifest
+            # publishes, reads serve only the manifest snapshot, so
+            # first adopt the existing files as version 1 or every
+            # pre-existing row silently vanishes (ADVICE r04).  An
+            # empty directory (no data files) has nothing to shadow.
+            try:
+                versioning.adopt_plain_table(path, engine.fs)
+            except versioning.EngineIOError:
+                pass  # empty dir: nothing to adopt
+            except versioning.VersionConflictError:
+                pass  # concurrent committer already adopted
+        versioning.commit_batch(
+            lambda: batch_df,
             path,
+            batch_id,
             mode="append",
             fs=engine.fs,
             stats_cols=stats_cols,
-            extra={
-                "batch_id": int(batch_id),
-                "batch_id_max": max(
-                    int(batch_id), prev_max if prev_max is not None else -1
-                ),
-            },
+            branch=branch,
         )
 
     return _commit

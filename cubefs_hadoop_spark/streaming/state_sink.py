@@ -1,73 +1,57 @@
 """Streaming ingest of ADDITIVE sufficient-statistics state (VERDICT r6
 item 5): a foreachBatch sink that folds each micro-batch into the
-persisted x31b centroid state / x33b DSIR vocabulary with the S14
-exactly-once batch-id ledger.
+persisted x31b centroid state / x33b DSIR vocabulary (and the other
+S16-S39 sketches) exactly once.
 
 The incremental operators (semantic.centroid_state_fold,
 search.dsir_state_fold) already prove fold == full-recompute for BATCH
 ingest; this module closes the loop for STREAMING ingest: embeddings or
-documents arriving as a stream fold into the same state files with
+documents arriving as a stream fold into the same state with
 exactly-once semantics across checkpoint restarts and replayed batches.
 
-Exactly-once mechanics (same watermark idea as ops.sink_versioned /
-versioning's batch ledger): Structured Streaming batch ids increase
-monotonically per checkpoint and foreachBatch is at-least-once around
-checkpoint boundaries, so "already folded" is exactly ``batch_id <=
-ledger max``.  Each successful fold writes a NEW state generation
-directory (``gen=N+1``) and then atomically publishes the ledger (write
-temp + rename — rename-as-commit, the same primitive the reference's
-create path leans on, ``CubefsFileSystem.java:221-223``); a replayed
-batch sees its id under the watermark and no-ops, so state is never
-double-counted.  Readers resolve the ledger first, then read that
-generation — a crash between state write and ledger publish leaves an
-orphan generation that the next fold overwrites, never a half-applied
-state.
+Exactly-once mechanics: every state directory is a versioned table
+(versioning.py), and each fold commits through
+``versioning.commit_batch`` — the same protocol as ops.sink_versioned.
+Structured Streaming batch ids increase monotonically per checkpoint and
+foreachBatch is at-least-once around checkpoint boundaries, so "already
+folded" is exactly ``batch_id <= versioning.last_committed_batch``; a
+replayed batch no-ops before its stats run, so state is never
+double-counted.  A fold reads the current version, merges the batch's
+statistics into it and publishes the result as a new OVERWRITE version
+through the atomic no-overwrite manifest publish (versioning.py; the
+reference's false-if-dst-exists contract,
+``CubefsFileSystem.java:221-223``).  Readers
+resolve the latest manifest, so they never see a half-applied fold; a
+crash before the publish leaves staged files no manifest references,
+which ``versioning.expire_versions`` reaps.  Every filesystem call goes
+through ``fs.warehouse_fs``, so a state directory (and the sinks'
+side snapshot directories) may be a bare path or any Hadoop-FS URI.
 
 Scale (100 TB stream): per batch the work is O(batch) map + a
 state-sized merge — centroid state is labels x dims rows, DSIR state is
 vocabulary-sized; both metadata-scale next to the stream.  The corpus
 is never re-read (the whole point of additive sufficient statistics).
-The ledger is one tiny JSON per state dir, an O(1) read per batch.
+The watermark is one manifest read per batch.  Superseded versions stay
+on disk for time travel until ``expire_versions`` drops them.
 """
 
 from __future__ import annotations
 
-import json
-import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-LEDGER = "ledger.json"
-
-
-def _read_ledger(state_dir: str) -> dict:
-    p = os.path.join(state_dir, LEDGER)
-    if not os.path.exists(p):
-        return {"gen": 0, "batch_id_max": -1}
-    with open(p) as f:
-        return json.load(f)
-
-
-def _publish_ledger(state_dir: str, gen: int, batch_id_max: int) -> None:
-    tmp = os.path.join(state_dir, LEDGER + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump({"gen": gen, "batch_id_max": batch_id_max}, f)
-    os.replace(tmp, os.path.join(state_dir, LEDGER))  # atomic commit
-
-
-def _gen_path(state_dir: str, gen: int) -> str:
-    return os.path.join(state_dir, f"gen={gen}")
+from cubefs_hadoop_spark import versioning
+from cubefs_hadoop_spark.fs import WarehouseFS, warehouse_fs
 
 
 def read_state(spark: SparkSession, state_dir: str) -> DataFrame:
-    """Current state snapshot: resolve the ledger, read that generation."""
-    led = _read_ledger(state_dir)
-    if led["gen"] == 0:
-        raise FileNotFoundError(f"no state generation published in {state_dir}")
-    return spark.read.parquet(_gen_path(state_dir, led["gen"]))
+    """Current state snapshot: the latest committed version."""
+    return versioning.read_version(
+        spark, state_dir, fs=warehouse_fs(spark, state_dir)
+    )
 
 
 def _ledger_committer(
@@ -76,29 +60,36 @@ def _ledger_committer(
     merge_fn: "Callable[[DataFrame | None, DataFrame], DataFrame]",
 ) -> Callable[[DataFrame, int], None]:
     """The ONE exactly-once fold protocol every state sink shares:
-    ledger read -> batch-id watermark skip -> merge with the previous
-    generation -> new generation write -> atomic ledger publish.  Only
-    the MERGE LAW varies by sink (counter addition, set union), so only
-    ``merge_fn(prev_or_None, batch_stats)`` is pluggable — a fix to the
-    exactly-once mechanics lands once, for every sink."""
-    os.makedirs(state_dir, exist_ok=True)
+    batch-id watermark skip -> merge with the current version -> publish
+    the merged frame as a new version (``versioning.commit_batch``).
+    Only the MERGE LAW varies by sink (counter addition, set union), so
+    only ``merge_fn(prev_or_None, batch_stats)`` is pluggable — a fix to
+    the exactly-once mechanics lands once, for every sink."""
 
     def _commit(batch_df: DataFrame, batch_id: int) -> None:
-        led = _read_ledger(state_dir)
-        if int(batch_id) <= led["batch_id_max"]:
-            return  # replayed batch: already folded, skip
-        batch_stats = stats_fn(batch_df)
-        prev = None
-        if led["gen"] > 0:
-            prev = batch_df.sparkSession.read.parquet(
-                _gen_path(state_dir, led["gen"])
-            )
-        merged = merge_fn(prev, batch_stats)
-        new_gen = led["gen"] + 1
-        merged.write.mode("overwrite").parquet(_gen_path(state_dir, new_gen))
-        _publish_ledger(state_dir, new_gen, int(batch_id))
+        spark = batch_df.sparkSession
+        fs = warehouse_fs(spark, state_dir)
+
+        def merged() -> DataFrame:
+            batch_stats = stats_fn(batch_df)
+            prev = None
+            if versioning.list_versions(state_dir, fs):
+                prev = versioning.read_version(spark, state_dir, fs=fs)
+            return merge_fn(prev, batch_stats)
+
+        versioning.commit_batch(
+            merged, state_dir, batch_id, mode="overwrite", fs=fs
+        )
 
     return _commit
+
+
+def _with_prev(prev: DataFrame | None, batch_stats: DataFrame) -> DataFrame:
+    """The batch's statistics under the current state's rows (in the
+    state's column order), or alone on the first fold."""
+    if prev is None:
+        return batch_stats
+    return prev.unionByName(batch_stats.select(*prev.columns))
 
 
 def additive_state_committer(
@@ -117,12 +108,7 @@ def additive_state_committer(
     batches (the incremental-op contract x31b/x33b hash-prove)."""
 
     def merge(prev: DataFrame | None, batch_stats: DataFrame) -> DataFrame:
-        both = (
-            prev.unionByName(batch_stats.select(*prev.columns))
-            if prev is not None
-            else batch_stats
-        )
-        return both.groupBy(*key_cols).agg(
+        return _with_prev(prev, batch_stats).groupBy(*key_cols).agg(
             *[F.sum(c).alias(c) for c in sum_cols]
         )
 
@@ -358,9 +344,9 @@ def union_state_committer(
     key_cols: list[str],
 ) -> Callable[[DataFrame, int], None]:
     """foreachBatch function folding IDEMPOTENT-UNION state (distinct
-    key rows) into the persisted state, exactly once — the same ledger
+    key rows) into the persisted state, exactly once — the same commit
     mechanics as ``additive_state_committer`` with set union instead of
-    counter addition.  The fold is replay-safe twice over: the ledger
+    counter addition.  The fold is replay-safe twice over: the watermark
     skips replayed batch ids AND union is idempotent, so even a
     key present in many batches lands exactly one row.  This is the
     merge law of Bloom filters (OR of bit vectors) expressed
@@ -534,18 +520,16 @@ def _mirror_batch_cells(
     (doc_id, source) map.  Publishes this batch's bands and source rows
     under per-batch overwrite subdirectories.
 
-    Crash-replay contract (ADVICE r11): a batch the ledger has already
+    Crash-replay contract (ADVICE r11): a batch the state has already
     committed is skipped entirely by ``_ledger_committer`` — stats_fn
     never re-runs, so the overwrite path is only reached when the
     process died BETWEEN publishing this batch's files and committing
-    the ledger.  On that replay the index reads would see attempt 1's
-    own ``batch=N`` files, so both reads partition-prune to
+    the state version.  On that replay the index reads would see attempt
+    1's own ``batch=N`` files, so both reads partition-prune to
     ``batch < batch_id`` (free — no data scanned) before unioning this
     batch's rows: without the source-map prune, pair attribution would
     join a doubled (doc_id, source) map and inflate every cell 2-4x,
     breaking the exactly-once / bit-equals-batch contract."""
-    import os as _os
-
     from cubefs_hadoop_spark.extensions.dedup import (
         _probe_delta,
         lsh_bands,
@@ -555,8 +539,9 @@ def _mirror_batch_cells(
     from cubefs_hadoop_spark.plans.materialize import barrier
 
     spark = batch.sparkSession
-    bands_dir = _os.path.join(index_dir, "bands")
-    src_dir = _os.path.join(index_dir, "sources")
+    fs = warehouse_fs(spark, index_dir)
+    bands_dir = fs.join(index_dir, "bands")
+    src_dir = fs.join(index_dir, "sources")
     new_bands = barrier(
         lsh_bands(minhash_signature(batch.select("doc_id", text_col))),
         eager=False,
@@ -566,9 +551,9 @@ def _mirror_batch_cells(
     )
     idx = None
     src_all = new_src
-    if _os.path.exists(bands_dir):
+    if fs.exists(bands_dir):
         # read only PRIOR batches' files: on a crash-replay (died after
-        # publishing attempt 1's batch=N files but before the ledger
+        # publishing attempt 1's batch=N files but before the state
         # commit) the directory already holds THIS batch's rows — the
         # partition filter prunes them (free: no data read), so the
         # index never double-counts the replaying batch (ADVICE r11)
@@ -595,10 +580,10 @@ def _mirror_batch_cells(
     pairs = barrier(_probe_delta(new_bands, "doc_id", idx), eager=True)
     cells = mirror_pair_cells(pairs, src_all)
     new_bands.write.mode("overwrite").parquet(
-        _os.path.join(bands_dir, f"batch={batch_id}")
+        fs.join(bands_dir, f"batch={batch_id}")
     )
     new_src.write.mode("overwrite").parquet(
-        _os.path.join(src_dir, f"batch={batch_id}")
+        fs.join(src_dir, f"batch={batch_id}")
     )
     return cells
 
@@ -617,7 +602,7 @@ def sink_mirror_state(
     full-corpus pair surfaces exactly once, when its later member
     arrives), attributes them by unordered source pair, and folds the
     (source_a, source_b, n_pairs) cells into ``state_dir`` exactly once
-    under the shared ledger protocol.  The streamed counts bit-equal a
+    under the shared commit protocol.  The streamed counts bit-equal a
     batch ``mirror_matrix`` rollup over everything ever ingested, and
     ``dedup.mirror_from_counts`` serves the live mirror table (exact
     milli shares) at any moment — the ingest-time answer to "which
@@ -639,18 +624,16 @@ def sink_mirror_state(
     _drain(sdf, commit, checkpoint_dir)
 
 
-def _latest_snapshot_batch(snap_dir: str, before: int) -> int | None:
-    """Highest committed ``batch=K`` subdirectory with K < before, or
-    None.  Listing the filesystem (not reading data) keeps the replay
+def _latest_snapshot_batch(
+    fs: WarehouseFS, snap_dir: str, before: int
+) -> int | None:
+    """Highest ``batch=K`` subdirectory of ``snap_dir`` with K < before,
+    or None.  Listing the filesystem (not reading data) keeps the replay
     contract exact: a crashed batch's own attempt-1 snapshot (K ==
     before) is never its own input."""
-    import os as _os
-
-    if not _os.path.isdir(snap_dir):
-        return None
     best = None
-    for name in _os.listdir(snap_dir):
-        if not name.startswith("batch="):
+    for name, is_dir in fs.list_dir(snap_dir):
+        if not (is_dir and name.startswith("batch=")):
             continue
         try:
             k = int(name.split("=", 1)[1])
@@ -675,11 +658,9 @@ def _transition_batch_cells(
     the cross-batch BOUNDARY transition from each user's persisted last
     event to their first event in this batch.  Publishes the merged
     per-user last-event snapshot under ``last_dir/batch=N`` (overwrite,
-    so the crash-replay of a batch that died pre-ledger re-publishes
+    so the crash-replay of a batch that died pre-commit re-publishes
     identical files and reads only batch < N — the S23 prune
     contract)."""
-    import os as _os
-
     from cubefs_hadoop_spark.plans.materialize import barrier
 
     spark = batch.sparkSession
@@ -701,7 +682,8 @@ def _transition_batch_cells(
     within = s.filter(F.col("nxt").isNotNull()).select(
         F.col("y").alias("ft"), F.col("nxt").alias("tt")
     )
-    prior = _latest_snapshot_batch(last_dir, int(batch_id))
+    fs = warehouse_fs(spark, last_dir)
+    prior = _latest_snapshot_batch(fs, last_dir, int(batch_id))
     pairs = within
     last_in = ev.groupBy("u").agg(
         F.max(F.struct("t", "i", "y")).alias("last")
@@ -709,7 +691,7 @@ def _transition_batch_cells(
     merged = last_in.select("u", "last")
     if prior is not None:
         prev = spark.read.parquet(
-            _os.path.join(last_dir, f"batch={prior}")
+            fs.join(last_dir, f"batch={prior}")
         ).select("u", "last")
         first = s.filter(F.col("rn") == 1).select(
             "u",
@@ -721,7 +703,7 @@ def _transition_batch_cells(
         # than the user's persisted last event means arrival order
         # broke event-time order — the boundary transition (and the
         # counts already folded) would be wrong, so fail the batch
-        # loudly BEFORE the ledger commits (exactly-once preserved)
+        # loudly BEFORE the state commits (exactly-once preserved)
         # instead of silently folding a corrupt matrix.  assert_true
         # returns NULL on success, so the filter keeps every valid row
         # and the optimizer cannot prune the check.  The guard compares
@@ -766,7 +748,7 @@ def _transition_batch_cells(
         eager=True,
     )
     merged.write.mode("overwrite").parquet(
-        _os.path.join(last_dir, f"batch={batch_id}")
+        fs.join(last_dir, f"batch={batch_id}")
     )
     return cells
 
@@ -785,8 +767,8 @@ def sink_transition_state(
     micro-batch folds its within-batch transition counts PLUS the
     cross-batch boundary transitions (persisted per-user last event ->
     the user's first event this batch) into ``state_dir`` exactly once
-    under the shared ledger, and advances the per-user last-event
-    snapshot in ``last_dir``.  ``behavior.transitions_from_counts``
+    under the shared commit protocol, and advances the per-user
+    last-event snapshot in ``last_dir``.  ``behavior.transitions_from_counts``
     serves the live matrix (exact milli shares) at any moment — the
     ingest-time answer to "which paths are hot RIGHT NOW".
 
@@ -830,8 +812,8 @@ def sink_rfm_state(
     """Stream events into the x87 RFM metric state (S26): each
     micro-batch's per-user (last_day, frequency, monetary_cents)
     sufficient statistics fold into ``state_dir`` exactly once under
-    the shared ledger — the merge law is (MAX date, SUM, SUM), all
-    associative+commutative, so the folded state bit-equals the batch
+    the shared commit protocol — the merge law is (MAX date, SUM, SUM),
+    all associative+commutative, so the folded state bit-equals the batch
     ``rfm_metric_frame`` over everything ever ingested REGARDLESS of
     how the stream sliced events into batches (no ordering contract,
     unlike S25).  ``behavior.rfm_from_metrics`` serves the live
@@ -846,12 +828,7 @@ def sink_rfm_state(
         )
 
     def merge(prev: DataFrame | None, batch_stats: DataFrame) -> DataFrame:
-        both = (
-            prev.unionByName(batch_stats.select(*prev.columns))
-            if prev is not None
-            else batch_stats
-        )
-        return both.groupBy("user_id").agg(
+        return _with_prev(prev, batch_stats).groupBy("user_id").agg(
             F.max("last_day").alias("last_day"),
             F.sum("frequency").cast("long").alias("frequency"),
             F.sum("monetary_cents").cast("long").alias("monetary_cents"),
@@ -942,8 +919,6 @@ def _trigram_batch_cells(
     Publishes the merged per-user snapshot under ``last2_dir/batch=N``
     (overwrite — the S23 crash-replay prune contract: a replayed batch
     reads only batch < N and re-publishes identical files)."""
-    import os as _os
-
     from cubefs_hadoop_spark.plans.materialize import barrier
 
     spark = batch.sparkSession
@@ -980,12 +955,13 @@ def _trigram_batch_cells(
         ),
         F.max(F.when(F.col("rd") == 2, F.col("y"))).alias("last2_y"),
     )
-    prior = _latest_snapshot_batch(last2_dir, int(batch_id))
+    fs = warehouse_fs(spark, last2_dir)
+    prior = _latest_snapshot_batch(fs, last2_dir, int(batch_id))
     trigs = within
     merged = snap_in
     if prior is not None:
         prev = spark.read.parquet(
-            _os.path.join(last2_dir, f"batch={prior}")
+            fs.join(last2_dir, f"batch={prior}")
         ).select("u", "last1", "last2_y")
         f1 = s.filter(F.col("rn") == 1).select(
             "u",
@@ -1054,7 +1030,7 @@ def _trigram_batch_cells(
         eager=True,
     )
     merged.write.mode("overwrite").parquet(
-        _os.path.join(last2_dir, f"batch={batch_id}")
+        fs.join(last2_dir, f"batch={batch_id}")
     )
     return cells
 
@@ -1072,8 +1048,8 @@ def sink_trigram_state(
     """Stream events into the x98 trigram state (S28): each micro-batch
     folds its within-batch trigram counts PLUS the cross-batch boundary
     trigrams (stitched from the persisted per-user last-TWO-events
-    snapshot) into ``state_dir`` exactly once under the shared ledger,
-    and advances the snapshot in ``last2_dir``.
+    snapshot) into ``state_dir`` exactly once under the shared commit
+    protocol, and advances the snapshot in ``last2_dir``.
     ``behavior.trigrams_from_counts`` serves the live top-k path table
     at any moment — the ingest-time "which 3-step journeys are hot
     RIGHT NOW" view.
@@ -1132,7 +1108,7 @@ def sink_user_funnel_state(
     The append-log contract is ENFORCED like S25/S28: the state carries
     each user's (hw_t, hw_i) last-seen-event high-water mark, and a
     batch holding a step event at or before it fails in-plan before the
-    ledger commits.  State: one row per user seen, user-grain."""
+    state commits.  State: one row per user seen, user-grain."""
 
     def stats(batch: DataFrame) -> DataFrame:
         # the batch's step events, event grain (bounded by the batch)
@@ -1296,12 +1272,7 @@ def sink_conversion_state(
         )
 
     def merge(prev: DataFrame | None, batch_stats: DataFrame) -> DataFrame:
-        both = (
-            prev.unionByName(batch_stats.select(*prev.columns))
-            if prev is not None
-            else batch_stats
-        )
-        return both.groupBy("u").agg(
+        return _with_prev(prev, batch_stats).groupBy("u").agg(
             F.min("e0").cast("long").alias("e0"),
             F.min("ep").cast("long").alias("ep"),
         )
@@ -1384,8 +1355,6 @@ def _session_batch_cells(
     folds to the same histogram), ENFORCED in-plan (open_end <= first
     batch event).  Publishes the snapshot under ``open_dir/batch=N``
     (overwrite — the S23 replay-prune contract)."""
-    import os as _os
-
     from cubefs_hadoop_spark.extensions.behavior import _epoch_us
     from cubefs_hadoop_spark.plans.materialize import barrier
 
@@ -1412,7 +1381,8 @@ def _session_batch_cells(
     )
     bounds = s.groupBy("u").agg(F.max("sess").alias("s1"))
     s = s.join(bounds, "u")
-    prior = _latest_snapshot_batch(open_dir, int(batch_id))
+    fs = warehouse_fs(spark, open_dir)
+    prior = _latest_snapshot_batch(fs, open_dir, int(batch_id))
     if prior is None:
         closed = s.filter(F.col("sess") < F.col("s1")).select("depth")
         open_new = s.filter(F.col("sess") == F.col("s1")).select(
@@ -1420,7 +1390,7 @@ def _session_batch_cells(
         )
     else:
         prev = spark.read.parquet(
-            _os.path.join(open_dir, f"batch={prior}")
+            fs.join(open_dir, f"batch={prior}")
         ).select(
             "u",
             F.col("end_us").alias("p_end"),
@@ -1478,7 +1448,7 @@ def _session_batch_cells(
         eager=True,
     )
     open_new.write.mode("overwrite").parquet(
-        _os.path.join(open_dir, f"batch={batch_id}")
+        fs.join(open_dir, f"batch={batch_id}")
     )
     return cells
 
@@ -1710,12 +1680,7 @@ def sink_user_span_state(
         )
 
     def merge(prev: DataFrame | None, batch_stats: DataFrame) -> DataFrame:
-        both = (
-            prev.unionByName(batch_stats.select(*prev.columns))
-            if prev is not None
-            else batch_stats
-        )
-        return both.groupBy("u").agg(
+        return _with_prev(prev, batch_stats).groupBy("u").agg(
             F.min("e0").cast("long").alias("e0"),
             F.max("e1").cast("long").alias("e1"),
         )

@@ -44,6 +44,7 @@ import json
 import re
 import time
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -389,6 +390,57 @@ def last_committed_batch(
     return max(seen) if seen else None
 
 
+def _stamp_watermark(manifest: dict, *parents: dict) -> None:
+    """Set ``manifest``'s ``batch_id_max`` to the highest of the parents'
+    watermarks and the manifest's own ``batch_id``.  Every commit path
+    calls this, so the streaming exactly-once watermark rides every
+    version: a manual commit, a compaction or a branch publish between
+    batches never drops it."""
+    marks = [int(p["batch_id_max"]) for p in parents if "batch_id_max" in p]
+    if manifest.get("batch_id") is not None:
+        marks.append(int(manifest["batch_id"]))
+    if marks:
+        manifest["batch_id_max"] = max(marks)
+
+
+def commit_batch(
+    frame_fn: Callable[[], DataFrame],
+    table_path: str,
+    batch_id: int,
+    mode: str = "append",
+    fs: WarehouseFS | None = None,
+    stats_cols: list[str] | None = None,
+    branch: str | None = None,
+) -> int | None:
+    """Commit one Structured Streaming micro-batch exactly once — the
+    protocol every streaming sink shares (``streaming.ops`` appends batch
+    rows, ``streaming.state_sink`` overwrites folded state).
+
+    foreachBatch is at-least-once around checkpoint boundaries and batch
+    ids increase per checkpoint, so "already committed" is exactly
+    ``batch_id <= last_committed_batch``: such a replay returns None
+    BEFORE ``frame_fn`` runs, so a frame with side effects is never
+    rebuilt for a committed batch.  Otherwise ``frame_fn()`` commits as
+    a new version stamped with ``batch_id`` and the advanced watermark,
+    and the version number is returned.  A crash before the manifest
+    publishes leaves the watermark where it was — the replay commits
+    again, and the dead attempt's staged files are orphans that
+    ``expire_versions`` reaps."""
+    fs = _fs(fs)
+    mark = last_committed_batch(table_path, fs, branch)
+    if mark is not None and int(batch_id) <= mark:
+        return None
+    return commit_version(
+        frame_fn(),
+        table_path,
+        mode=mode,
+        fs=fs,
+        extra={"batch_id": int(batch_id)},
+        stats_cols=stats_cols,
+        branch=branch,
+    )
+
+
 def tag_version(
     table_path: str,
     tag: str,
@@ -621,9 +673,9 @@ def create_branch(
             "partition_by",
             "schema",
             "schema_ops",
-            "batch_id_max",
         )
     }
+    _stamp_watermark(manifest, bm)
     manifest.update(
         {
             "version": 1,
@@ -729,16 +781,9 @@ def fast_forward(
             "schema_ops",
         )
     }
-    watermarks = [
-        m["batch_id_max"]
-        for m in (
-            bh,
-            read_manifest(table_path, main_head, fs, light=True),
-        )
-        if "batch_id_max" in m
-    ]
-    if watermarks:
-        manifest["batch_id_max"] = max(watermarks)
+    _stamp_watermark(
+        manifest, bh, read_manifest(table_path, main_head, fs, light=True)
+    )
     v = main_head + 1
     manifest.update(
         {
@@ -1228,10 +1273,6 @@ def commit_staged_files(
                         "merge-schema path, type changes are not)",
                         table_path,
                     )
-            if "batch_id_max" in pm:
-                # the streaming exactly-once watermark rides every commit
-                # so a manual commit between batches never drops it
-                inherited["batch_id_max"] = pm["batch_id_max"]
             if mode == "append" and pm.get("schema_ops"):
                 # the op chain must keep conforming the parent's files;
                 # the appended files (new schema) pass through it
@@ -1291,6 +1332,7 @@ def commit_staged_files(
             **inherited,
             **(extra or {}),
         }
+        _stamp_watermark(manifest, *([pm] if parent else []))
         try:
             return _commit_manifest(
                 table_path, manifest, parent + 1, fs, branch
@@ -1352,8 +1394,7 @@ def commit_delete(
                 {"stats": pm["stats"]} if pm.get("stats") else {}
             ),
         }
-        if "batch_id_max" in pm:
-            manifest["batch_id_max"] = pm["batch_id_max"]
+        _stamp_watermark(manifest, pm)
         try:
             return _commit_manifest(table_path, manifest, v, fs)
         except VersionConflictError:
@@ -1424,8 +1465,7 @@ def commit_merge(
                 {"stats": pm["stats"]} if pm.get("stats") else {}
             ),
         }
-        if "batch_id_max" in pm:
-            manifest["batch_id_max"] = pm["batch_id_max"]
+        _stamp_watermark(manifest, pm)
         try:
             return _commit_manifest(table_path, manifest, v, fs)
         except VersionConflictError:
@@ -1824,8 +1864,7 @@ def alter_schema(
         "schema_ops": list(pm.get("schema_ops", [])) + list(ops),
         **({"stats": stats} if stats else {}),
     }
-    if "batch_id_max" in pm:
-        manifest["batch_id_max"] = pm["batch_id_max"]
+    _stamp_watermark(manifest, pm)
     return _commit_manifest(table_path, manifest, v, fs)
 
 
@@ -1926,8 +1965,7 @@ def rollback(
             else {}
         ),
     }
-    if "batch_id_max" in pm:
-        manifest["batch_id_max"] = pm["batch_id_max"]
+    _stamp_watermark(manifest, pm)
     return _commit_manifest(table_path, manifest, parent + 1, fs)
 
 
@@ -1993,8 +2031,7 @@ def compact_version(
         "schema": df.schema.jsonValue(),
         **({"stats": stats} if stats else {}),
     }
-    if "batch_id_max" in pm:
-        manifest["batch_id_max"] = pm["batch_id_max"]
+    _stamp_watermark(manifest, pm)
     return _commit_manifest(table_path, manifest, v, fs)
 
 
@@ -2119,8 +2156,7 @@ def binpack_version(
         "schema": pm["schema"],
         **({"stats": stats} if stats else {}),
     }
-    if "batch_id_max" in pm:
-        manifest["batch_id_max"] = pm["batch_id_max"]
+    _stamp_watermark(manifest, pm)
     return _commit_manifest(table_path, manifest, v, fs)
 
 

@@ -1,7 +1,7 @@
 """Streaming additive-state ingest (VERDICT r6 item 5): folding x31b
 centroid state and x33b DSIR vocabulary per micro-batch with the S14
-exactly-once ledger — folded state == full recompute across a checkpoint
-restart, and a replayed batch is a no-op."""
+exactly-once batch-id watermark — folded state == full recompute across
+a checkpoint restart, and a replayed batch is a no-op."""
 
 from __future__ import annotations
 
@@ -70,21 +70,21 @@ def test_streamed_centroid_state_equals_full_recompute(spark, tmp_path):
         for r in label_centroids(load(spark, SF_SMOKE, "embeddings")).collect()
     }
     assert got == want
-    # 4 generations published (one per non-empty batch)
-    from cubefs_hadoop_spark.streaming.state_sink import _read_ledger
+    # the state is a versioned table carrying the batch-id watermark
+    from cubefs_hadoop_spark import versioning
 
-    led = _read_ledger(state)
-    assert led["gen"] >= 1 and led["batch_id_max"] >= 0
+    assert versioning.list_versions(state)
+    assert versioning.last_committed_batch(state) >= 0
 
 
 def test_restart_and_replay_are_noops(spark, tmp_path):
     """Re-running the drained stream with the SAME checkpoint adds no
     batches; manually replaying an already-folded batch id leaves the
-    ledger and state untouched (exactly-once, not at-least-once)."""
+    watermark and state untouched (exactly-once, not at-least-once)."""
+    from cubefs_hadoop_spark import versioning
     from cubefs_hadoop_spark.catalog import load
     from cubefs_hadoop_spark.extensions.semantic import label_centroids
     from cubefs_hadoop_spark.streaming.state_sink import (
-        _read_ledger,
         additive_state_committer,
         read_state,
         sink_centroid_state,
@@ -95,13 +95,14 @@ def test_restart_and_replay_are_noops(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     _stage_embeddings(spark, stage)
     sink_centroid_state(_emb_stream(spark, stage), state, ckpt)
-    led1 = _read_ledger(state)
+    mark1 = versioning.last_committed_batch(state)
+    vs1 = versioning.list_versions(state)
 
     # checkpoint restart: drain again, same checkpoint -> no new data,
-    # no new generations
+    # no new versions
     sink_centroid_state(_emb_stream(spark, stage), state, ckpt)
-    led2 = _read_ledger(state)
-    assert led2 == led1
+    assert versioning.last_committed_batch(state) == mark1
+    assert versioning.list_versions(state) == vs1
 
     # replayed batch (foreachBatch at-least-once): batch_id 0 again
     emb = load(spark, SF_SMOKE, "embeddings")
@@ -113,8 +114,8 @@ def test_restart_and_replay_are_noops(spark, tmp_path):
         state, stats, ["label", "dim"], ["sum_milli", "cnt"]
     )
     committer(emb.limit(50), 0)  # id 0 <= watermark: must no-op
-    led3 = _read_ledger(state)
-    assert led3 == led1
+    assert versioning.last_committed_batch(state) == mark1
+    assert versioning.list_versions(state) == vs1
     # and the state still matches the full recompute
     got = {
         (r.label, r.dim): (r.sum_milli, r.cnt)
@@ -125,6 +126,129 @@ def test_restart_and_replay_are_noops(spark, tmp_path):
         for r in label_centroids(emb).collect()
     }
     assert got == want
+
+
+def _centroid_committer(state: str):
+    from cubefs_hadoop_spark.extensions.semantic import label_centroids
+    from cubefs_hadoop_spark.streaming.state_sink import (
+        additive_state_committer,
+    )
+
+    def stats(b):
+        return label_centroids(b).select("label", "dim", "sum_milli", "cnt")
+
+    return additive_state_committer(
+        state, stats, ["label", "dim"], ["sum_milli", "cnt"]
+    )
+
+
+def _state_rows(spark, state: str) -> list:
+    from cubefs_hadoop_spark.streaming.state_sink import read_state
+
+    return sorted(map(tuple, read_state(spark, state).collect()))
+
+
+def test_crash_before_publish_then_replay(spark, tmp_path, monkeypatch):
+    """A fold that dies after staging its files but before its manifest
+    publishes: readers keep the previous version exactly, replaying the
+    batch id folds to state bit-equal to a clean run, and
+    expire_versions reaps the dead attempt's staged files."""
+    from cubefs_hadoop_spark import versioning
+    from cubefs_hadoop_spark.catalog import load
+
+    emb = load(spark, SF_SMOKE, "embeddings")
+    mid = (emb.agg(F.max("vec_id")).first()[0] + 1) // 2
+    batches = [
+        emb.filter(F.col("vec_id") < mid),
+        emb.filter(F.col("vec_id") >= mid),
+    ]
+    clean = str(tmp_path / "clean")
+    for bid, b in enumerate(batches):
+        _centroid_committer(clean)(b, bid)
+
+    state = str(tmp_path / "state")
+    data = os.path.join(state, "data")
+    fold = _centroid_committer(state)
+    fold(batches[0], 0)
+    v1_rows = _state_rows(spark, state)
+    v1_stages = set(os.listdir(data))
+
+    real = versioning._commit_manifest
+    crashed = []
+
+    def crash_once(*args, **kwargs):
+        if not crashed:
+            crashed.append(True)
+            raise OSError("simulated crash before the manifest publish")
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(versioning, "_commit_manifest", crash_once)
+    with pytest.raises(OSError, match="simulated crash"):
+        fold(batches[1], 1)
+    orphans = set(os.listdir(data)) - v1_stages
+    assert len(orphans) == 1  # staged, never published
+    assert versioning.list_versions(state) == [1]
+    assert versioning.last_committed_batch(state) == 0
+    assert _state_rows(spark, state) == v1_rows
+
+    fold(batches[1], 1)  # the replay of the crashed batch id folds
+    assert versioning.last_committed_batch(state) == 1
+    assert _state_rows(spark, state) == _state_rows(spark, clean)
+
+    versioning.expire_versions(state, orphan_grace_ms=0)
+    assert not orphans & set(os.listdir(data))
+    assert _state_rows(spark, state) == _state_rows(spark, clean)
+
+
+def test_state_gc_keeps_watermark_and_folds_on(spark, tmp_path):
+    """expire_versions(keep_last=1) on a drained multi-batch centroid
+    state leaves only the last version's data files and the same state;
+    a replayed batch id is still a no-op and a new batch id still folds
+    (the state-sink twin of test_s14_ledger_survives_version_gc)."""
+    from cubefs_hadoop_spark import versioning
+    from cubefs_hadoop_spark.catalog import load
+    from cubefs_hadoop_spark.extensions.semantic import label_centroids
+    from cubefs_hadoop_spark.streaming.state_sink import sink_centroid_state
+
+    stage = str(tmp_path / "stage")
+    state = str(tmp_path / "state")
+    _stage_embeddings(spark, stage)
+    sink_centroid_state(
+        _emb_stream(spark, stage), state, str(tmp_path / "ckpt")
+    )
+    vs = versioning.list_versions(state)
+    assert len(vs) >= 2
+    mark = versioning.last_committed_batch(state)
+    before = _state_rows(spark, state)
+
+    versioning.expire_versions(state, keep_last=1, orphan_grace_ms=0)
+    assert versioning.list_versions(state) == vs[-1:]
+    on_disk = {
+        os.path.relpath(os.path.join(d, f), state)
+        for d, _dirs, files in os.walk(os.path.join(state, "data"))
+        for f in files
+    }
+    assert on_disk == set(versioning.read_manifest(state, vs[-1])["files"])
+    assert _state_rows(spark, state) == before
+    assert versioning.last_committed_batch(state) == mark
+
+    emb = load(spark, SF_SMOKE, "embeddings")
+    fold = _centroid_committer(state)
+    fold(emb, 0)  # replay: no-op
+    assert versioning.list_versions(state) == vs[-1:]
+    assert _state_rows(spark, state) == before
+
+    extra = emb.filter(F.col("vec_id") < 50)
+    fold(extra, mark + 1)  # a new batch id folds on top of the GC'd chain
+    want = sorted(
+        map(
+            tuple,
+            label_centroids(emb.unionByName(extra))
+            .select("label", "dim", "sum_milli", "cnt")
+            .collect(),
+        )
+    )
+    assert _state_rows(spark, state) == want
 
 
 def test_streamed_dsir_state_scores_match_batch_x33(spark, tmp_path):
@@ -855,6 +979,53 @@ def test_streamed_transition_state_bit_equals_batch_x85(spark, tmp_path):
 
     live = sorted(
         map(tuple, transitions_from_counts(read_state(spark, state)).collect())
+    )
+    batch_rows = QUERIES["x85_event_transitions"](spark, SF_SMOKE).collect()
+    assert live == sorted(map(tuple, batch_rows))
+
+
+def test_transition_state_over_hadoop_fs_uris(spark, tmp_path):
+    """S25 with ``file://`` URIs for the state and last-event snapshot
+    directories (the HadoopFS backend): the folded cells bit-equal the
+    bare-path run and the batch x85 counts, boundary transitions
+    included."""
+    from cubefs_hadoop_spark import versioning
+    from cubefs_hadoop_spark.extensions.behavior import (
+        transition_counts,
+        transitions_from_counts,
+    )
+    from cubefs_hadoop_spark.queries import QUERIES
+    from cubefs_hadoop_spark.streaming.state_sink import (
+        read_state,
+        sink_transition_state,
+    )
+
+    ev, _slices, data = _stage_event_slices(spark, tmp_path)
+    runs = {}
+    for name, scheme in (("bare", ""), ("uri", "file://")):
+        root = tmp_path / name
+        state = scheme + str(root / "state")
+        sink_transition_state(
+            spark.readStream.schema(ev.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(data),
+            state,
+            str(root / "ckpt"),
+            scheme + str(root / "last_event"),
+        )
+        runs[name] = {
+            (r.ft, r.tt): r.n for r in read_state(spark, state).collect()
+        }
+    full = {(r.ft, r.tt): r.n for r in transition_counts(ev).collect()}
+    assert runs["uri"] == runs["bare"] == full
+    assert len(versioning.list_versions(str(tmp_path / "uri" / "state"))) == 3
+    live = sorted(
+        map(
+            tuple,
+            transitions_from_counts(
+                read_state(spark, "file://" + str(tmp_path / "uri" / "state"))
+            ).collect(),
+        )
     )
     batch_rows = QUERIES["x85_event_transitions"](spark, SF_SMOKE).collect()
     assert live == sorted(map(tuple, batch_rows))
