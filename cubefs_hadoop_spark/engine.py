@@ -991,19 +991,8 @@ class Engine:
             if verb == "INTO":
                 self.append(df, name)
             else:
-                # INSERT OVERWRITE may SELECT from the target itself, and
-                # Spark refuses to overwrite a path it is lazily reading
-                # from — plain tables stage-and-swap; versioned tables'
-                # manifest commit writes new files first, so direct
-                # overwrite is already self-read-safe.
-                from cubefs_hadoop_spark import versioning
-
-                path = self._table_path(name)
-                if versioning.is_versioned(path, self.fs):
-                    self.write_table(df, name, mode="overwrite")
-                else:
-                    self._swap_rewrite(name, df)
-                    self._mark_dirty(name)
+                # INSERT OVERWRITE may SELECT from the target itself
+                self._rewrite(name, df)
             return None
         m = re.match(
             r"CREATE\s+(OR\s+REPLACE\s+)?MATERIALIZED\s+VIEW\s+(\w+)\s+"
@@ -1298,12 +1287,7 @@ class Engine:
         if strategy != "cow":
             raise EngineIOError(f"invalid merge strategy {strategy!r}")
         kept = current.join(df.select(*keys).distinct(), keys, "left_anti")
-        merged = kept.unionByName(df)
-        if versioning.is_versioned(path, self.fs):
-            versioning.commit_version(merged, path, mode="overwrite", fs=self.fs)
-        else:
-            self._swap_rewrite(name, merged)
-        self._mark_dirty(name)
+        self._rewrite(name, kept.unionByName(df))
 
     def delete_from(
         self, name: str, predicate: str, strategy: str = "cow"
@@ -1339,16 +1323,12 @@ class Engine:
         # SQL DELETE semantics: remove rows where the predicate IS TRUE;
         # rows where it evaluates NULL are KEPT (a bare ~pred would drop
         # them — three-valued logic)
-        remaining = self.table(name).filter(
-            ~F.coalesce(F.expr(predicate), F.lit(False))
+        self._rewrite(
+            name,
+            self.table(name).filter(
+                ~F.coalesce(F.expr(predicate), F.lit(False))
+            ),
         )
-        if versioning.is_versioned(path, self.fs):
-            versioning.commit_version(
-                remaining, path, mode="overwrite", fs=self.fs
-            )
-        else:
-            self._swap_rewrite(name, remaining)
-        self._mark_dirty(name)
 
     def update_table(
         self,
@@ -1370,7 +1350,6 @@ class Engine:
         partitioned.  A merge-on-read tier for UPDATE would need
         positional deletes (out of scope; use merge_table(strategy='mor')
         with full replacement rows for that cadence)."""
-        from cubefs_hadoop_spark import versioning
         from pyspark.sql import functions as F
 
         current = self.table(name)
@@ -1392,12 +1371,7 @@ class Engine:
                 for c in current.columns
             ]
         )
-        path = self._table_path(name)
-        if versioning.is_versioned(path, self.fs):
-            versioning.commit_version(updated, path, mode="overwrite", fs=self.fs)
-        else:
-            self._swap_rewrite(name, updated)
-        self._mark_dirty(name)
+        self._rewrite(name, updated)
 
     def truncate_table(self, name: str) -> None:
         """TRUNCATE TABLE: drop every row, keep the table and its schema
@@ -1405,14 +1379,21 @@ class Engine:
         tables get an empty snapshot — history and time travel to the
         pre-truncate versions stay intact, exactly the Iceberg behavior
         the reference's Trino/Spark users rely on."""
+        self._rewrite(name, self.table(name).limit(0))
+
+    def _rewrite(self, name: str, df: DataFrame) -> None:
+        """Copy-on-write commit of ``df`` as the whole of ``name``: a
+        versioned table gets an overwrite version (the manifest commit
+        stages new files first, so ``df`` may read the target itself); a
+        plain table keeps the staged rename swap — the Hive-compatible
+        layout of the N10 contract."""
         from cubefs_hadoop_spark import versioning
 
-        empty = self.table(name).limit(0)
         path = self._table_path(name)
         if versioning.is_versioned(path, self.fs):
-            versioning.commit_version(empty, path, mode="overwrite", fs=self.fs)
+            versioning.commit_version(df, path, mode="overwrite", fs=self.fs)
         else:
-            self._swap_rewrite(name, empty)
+            self._swap_rewrite(name, df)
         self._mark_dirty(name)
 
     def _swap_rewrite(self, name: str, df: DataFrame) -> None:
@@ -1556,22 +1537,17 @@ class Engine:
                     name,
                 )
         path = self._table_path(name)
-        props = (
-            versioning.get_properties(path, self.fs)
-            if self.fs.is_dir(path)
-            else {}
-        )
         # cfs.stats.cols resolves inside commit_version (every producer
         # inherits it); bloom is a writer option, resolved here.
         # Property-derived cols FILTER to the written schema (a
         # merge-schema append legitimately lacks some columns); only an
         # EXPLICIT bloom_cols argument still validates strictly.
-        if bloom_cols is None and props.get("cfs.bloom.cols"):
-            bloom_cols = [
-                c.strip()
-                for c in props["cfs.bloom.cols"].split(",")
-                if c.strip() and c.strip() in df.columns
-            ]
+        if bloom_cols is None and self.fs.is_dir(path):
+            props = versioning.get_properties(path, self.fs)
+            if props.get("cfs.bloom.cols"):
+                bloom_cols = versioning._prop_cols(
+                    props, "cfs.bloom.cols", df.columns
+                )
         v = versioning.commit_version(
             df,
             path,
@@ -1598,11 +1574,10 @@ class Engine:
         touching a data page — parquet-native, works at any scale, and
         costs ~1 byte/row at write time."""
         if bloom_cols is None:
-            raw = self.spark.conf.get("cfspark.write.bloom.columns", None)
-            bloom_cols = (
-                [c.strip() for c in raw.split(",") if c.strip()]
-                if raw
-                else []
+            from cubefs_hadoop_spark import versioning
+
+            bloom_cols = versioning._prop_cols(
+                self.spark.conf, "cfspark.write.bloom.columns"
             )
         bad = [c for c in bloom_cols if c not in df_cols]
         if bad:
@@ -1963,11 +1938,9 @@ class Engine:
             self.fs,
         )
         pb = [c for c in sm.get("partition_by") or [] if c in df.columns]
-        stats_cols = [
-            c.strip()
-            for c in props.get("cfs.stats.cols", "").split(",")
-            if c.strip() and c.strip() in df.columns
-        ] or sorted(
+        stats_cols = versioning._prop_cols(
+            props, "cfs.stats.cols", df.columns
+        ) or sorted(
             {
                 c
                 for st in (sm.get("stats") or {}).values()
@@ -1975,11 +1948,7 @@ class Engine:
                 if c in df.columns
             }
         )
-        bloom_cols = [
-            c.strip()
-            for c in props.get("cfs.bloom.cols", "").split(",")
-            if c.strip() and c.strip() in df.columns
-        ]
+        bloom_cols = versioning._prop_cols(props, "cfs.bloom.cols", df.columns)
         v = self.write_table_version(
             df,
             dst,
@@ -2034,8 +2003,10 @@ class Engine:
     ) -> DataFrame:
         """Snapshot metadata for a versioned table (Iceberg's ``snapshots``
         metadata-table parity): one row per committed version with mode,
-        commit timestamp, parent, and file count.  Metadata-only — never
-        touches data files."""
+        commit timestamp, parent, file count and the commit's operation
+        metrics (files added and removed against its parent; null for
+        manifests written before the metrics existed).  Metadata-only —
+        never touches data files."""
         from cubefs_hadoop_spark import versioning
 
         path = self._table_path(name)
@@ -2053,12 +2024,15 @@ class Engine:
                     # light format-2 roots carry the count, not the list
                     m.get("file_count", len(m.get("files", []))),
                     m.get("batch_id"),
+                    m.get("files_added"),
+                    m.get("files_removed"),
                 )
             )
         return self.spark.createDataFrame(
             rows,
             "version int, parent int, mode string, ts_ms bigint, "
-            "n_files int, batch_id bigint",
+            "n_files int, batch_id bigint, files_added int, "
+            "files_removed int",
         )
 
     def table_detail(self, name: str) -> DataFrame:

@@ -21,9 +21,16 @@ Commit protocol (optimistic concurrency, Iceberg-style):
      atomicity the HCFS N10 rename contract provides on CubeFS/HDFS
      (CubefsFileSystem.java:221-223 returns false when dst exists).  Two
      racing writers compute the same next version; exactly one publish
-     succeeds, the loser gets VersionConflictError (append commits retry:
-     appends commute).
-  3. Readers resolve a version (default: highest committed manifest) and
+     succeeds, the loser gets VersionConflictError.
+  3. Every versioning verb publishes through ONE loop, ``_publish``:
+     read the chain head -> copy the carried keys -> apply the verb's
+     ``build`` -> stamp version/parent/mode/ts_ms, the batch watermark
+     and the files_added/files_removed metrics -> publish -> on conflict
+     re-read and rebuild.  Retry policy: append, merge-on-read delete and
+     merge-on-read merge retry (they commute with a competing append);
+     overwrite, compact, binpack, alter, rollback, publish, branch and
+     adopt raise — the caller decides whose table wins.
+  4. Readers resolve a version (default: highest committed manifest) and
      read exactly the files it lists — they can never observe a
      half-committed version, and old versions stay readable (time travel)
      until expired.
@@ -331,6 +338,74 @@ def _commit_manifest(
     return version
 
 
+# What a commit inherits from the manifest it builds on, with the value
+# an older manifest that lacks the key reads as.  ``stats`` and
+# ``schema_ops`` are recorded only when non-empty.
+_CARRIED = {
+    "files": [],
+    "file_seq": {},
+    "deletes": [],
+    "partition_by": [],
+    "schema": None,
+    "stats": {},
+    "schema_ops": [],
+}
+
+
+def _publish(
+    table_path: str,
+    fs: WarehouseFS,
+    mode: str,
+    build: Callable[[dict | None, int], dict],
+    *,
+    branch: str | None = None,
+    retries: int = 0,
+    parent: dict | None = None,
+    source: dict | None = None,
+) -> int:
+    """The one manifest commit loop every versioning verb publishes
+    through.  Reads the chain head ``pm`` (``parent`` when the caller
+    already read it; ``{}`` when it knows the chain is empty), copies
+    the ``_CARRIED`` keys of ``source`` (a branch fork's base, a
+    fast-forwarded branch head, a rollback target) or else of the head,
+    applies ``build(pm, v)``'s overrides, stamps version, parent, mode,
+    ts_ms, the batch watermark (max over the head and the source) and
+    the files_added/files_removed metrics against the head's file list,
+    then publishes.  A conflict re-reads the head and rebuilds up to
+    ``retries`` times, then raises VersionConflictError."""
+    for attempt in range(retries + 1):
+        if parent is None:
+            vs = list_versions(table_path, fs, branch)
+            pm = read_manifest(table_path, vs[-1], fs, branch=branch) if vs else None
+        else:
+            pm = parent or None
+        v = pm["version"] + 1 if pm else 1
+        src = source or pm
+        manifest = {k: src.get(k, d) for k, d in _CARRIED.items()} if src else {}
+        manifest.update(build(pm, v))
+        for k in ("stats", "schema_ops"):
+            if not manifest.get(k):
+                manifest.pop(k, None)
+        manifest.update(
+            version=v,
+            parent=pm["version"] if pm else None,
+            mode=mode,
+            ts_ms=int(time.time() * 1000),
+        )
+        _stamp_watermark(manifest, *(m for m in (pm, source) if m))
+        before = set(pm["files"]) if pm else set()
+        after = set(manifest["files"])
+        manifest["files_added"] = len(after - before)
+        manifest["files_removed"] = len(before - after)
+        try:
+            return _commit_manifest(table_path, manifest, v, fs, branch)
+        except VersionConflictError:
+            if attempt == retries:
+                # the staged files are orphans expire_versions() reaps
+                raise
+            parent = None
+
+
 def _stage_write(
     df: DataFrame,
     table_path: str,
@@ -392,10 +467,10 @@ def last_committed_batch(
 
 def _stamp_watermark(manifest: dict, *parents: dict) -> None:
     """Set ``manifest``'s ``batch_id_max`` to the highest of the parents'
-    watermarks and the manifest's own ``batch_id``.  Every commit path
-    calls this, so the streaming exactly-once watermark rides every
-    version: a manual commit, a compaction or a branch publish between
-    batches never drops it."""
+    watermarks and the manifest's own ``batch_id``.  ``_publish`` calls
+    this on every commit, so the streaming exactly-once watermark rides
+    every version: a manual commit, a compaction or a branch publish
+    between batches never drops it."""
     marks = [int(p["batch_id_max"]) for p in parents if "batch_id_max" in p]
     if manifest.get("batch_id") is not None:
         marks.append(int(manifest["batch_id"]))
@@ -660,32 +735,15 @@ def create_branch(
         if from_version is None
         else from_version
     )
-    bm = read_manifest(table_path, base, fs)
-    manifest = {
-        k: v
-        for k, v in bm.items()
-        if k
-        in (
-            "files",
-            "file_seq",
-            "stats",
-            "deletes",
-            "partition_by",
-            "schema",
-            "schema_ops",
-        )
-    }
-    _stamp_watermark(manifest, bm)
-    manifest.update(
-        {
-            "version": 1,
-            "parent": None,
-            "mode": "branch",
-            "base_version": base,
-            "ts_ms": int(time.time() * 1000),
-        }
+    return _publish(
+        table_path,
+        fs,
+        "branch",
+        lambda pm, v: {"base_version": base},
+        branch=branch,
+        parent={},
+        source=read_manifest(table_path, base, fs),
     )
-    return _commit_manifest(table_path, manifest, 1, fs, branch)
 
 
 def list_branches(
@@ -767,35 +825,14 @@ def fast_forward(
             "fast_forward(force=True)",
             table_path,
         )
-    manifest = {
-        k: v
-        for k, v in bh.items()
-        if k
-        in (
-            "files",
-            "file_seq",
-            "stats",
-            "deletes",
-            "partition_by",
-            "schema",
-            "schema_ops",
-        )
-    }
-    _stamp_watermark(
-        manifest, bh, read_manifest(table_path, main_head, fs, light=True)
+    out = _publish(
+        table_path,
+        fs,
+        "publish",
+        lambda pm, v: {"branch": branch, "branch_version": bv},
+        parent=read_manifest(table_path, main_head, fs),
+        source=bh,
     )
-    v = main_head + 1
-    manifest.update(
-        {
-            "version": v,
-            "parent": main_head,
-            "mode": "publish",
-            "branch": branch,
-            "branch_version": bv,
-            "ts_ms": int(time.time() * 1000),
-        }
-    )
-    out = _commit_manifest(table_path, manifest, v, fs)
     if drop:
         drop_branch(table_path, branch, fs)
     return out
@@ -1065,16 +1102,14 @@ def _apply_predicates(df: DataFrame, predicates: list[tuple]) -> DataFrame:
     return df
 
 
-def _enforce_constraints(
-    df: DataFrame, table_path: str, fs: WarehouseFS
-) -> None:
+def _enforce_constraints(df: DataFrame, table_path: str, props: dict) -> None:
     """Persisted CHECK constraints (property ``cfs.checks``, a JSON
     {name: sql_expr} map — ALTER TABLE ADD CONSTRAINT): every versioned
     commit proves them in ONE distributed pass before any data stages;
     a NULL predicate counts as a violation (the row failed to prove the
     constraint).  Runs on every producer that commits a DataFrame —
     engine verbs, the streaming sink, direct commit_version callers."""
-    raw = get_properties(table_path, fs).get("cfs.checks")
+    raw = props.get("cfs.checks")
     if not raw:
         return
     checks = json.loads(raw)
@@ -1100,22 +1135,45 @@ def _enforce_constraints(
         )
 
 
-def _prop_write_opts(
-    table_path: str, df: DataFrame, fs: WarehouseFS
-) -> dict | None:
+def _prop_cols(props, key: str, columns=None) -> list[str]:
+    """Column names from the comma-list property ``key`` of ``props`` (a
+    table's property map, or any mapping with ``.get`` such as the
+    session conf), keeping only names in ``columns`` when given."""
+    names = (c.strip() for c in (props.get(key, None) or "").split(","))
+    return [c for c in names if c and (columns is None or c in columns)]
+
+
+def _prop_write_opts(props: dict, df: DataFrame) -> dict | None:
     """Parquet writer options implied by table properties: bloom filters
     for ``cfs.bloom.cols`` (columns present in the written frame)."""
-    raw = get_properties(table_path, fs).get("cfs.bloom.cols")
-    if not raw:
-        return None
-    cols = [
-        c.strip()
-        for c in raw.split(",")
-        if c.strip() and c.strip() in df.columns
-    ]
     return {
-        f"parquet.bloom.filter.enabled#{c}": "true" for c in cols
+        f"parquet.bloom.filter.enabled#{c}": "true"
+        for c in _prop_cols(props, "cfs.bloom.cols", df.columns)
     } or None
+
+
+def _commit_props(table_path: str, fs: WarehouseFS) -> dict:
+    """The property sidecar a commit consults — read once per commit,
+    and not at all before the table's first commit."""
+    if not fs.is_dir(_manifest_dir(table_path, fs)):
+        return {}
+    return get_properties(table_path, fs)
+
+
+def _declared_stats(
+    table_path: str, files: list[str], props: dict, fs: WarehouseFS
+) -> dict:
+    """Per-file stats for the table's declared tier (``cfs.stats.cols``)
+    harvested straight from the staged parquet FOOTERS — metadata-only
+    IO, so producers with no Spark session (the cfstable Arrow writer)
+    get them too.  String/decimal columns (footer bounds truncatable)
+    stay un-statted here; the distributed scan in _collect_file_stats is
+    the exact tier for those."""
+    cols = _prop_cols(props, "cfs.stats.cols")
+    if not cols or not files:
+        return {}
+    footer, _fallback = _footer_stats(table_path, files, cols, fs)
+    return {f: st for f, st in footer.items() if st}
 
 
 def commit_version(
@@ -1147,24 +1205,19 @@ def commit_version(
     fs = _fs(fs)
     if mode not in ("overwrite", "append"):
         raise EngineIOError(f"invalid version commit mode {mode!r}")
-    if fs.is_dir(_manifest_dir(table_path, fs)):
-        # table-property defaults: EVERY producer (engine, streaming
-        # sink, direct callers) inherits the table's declared layout
-        # contract — stats tier and bloom columns
-        props = get_properties(table_path, fs)
-        if stats_cols is None and props.get("cfs.stats.cols"):
-            stats_cols = [
-                c.strip()
-                for c in props["cfs.stats.cols"].split(",")
-                if c.strip()
-            ]
-        if write_opts is None and props.get("cfs.bloom.cols"):
-            write_opts = _prop_write_opts(table_path, df, fs)
-        _enforce_constraints(df, table_path, fs)
+    # table-property defaults: EVERY producer (engine, streaming sink,
+    # direct callers) inherits the table's declared layout contract —
+    # stats tier, bloom columns and CHECK constraints
+    props = _commit_props(table_path, fs)
+    if stats_cols is None:
+        stats_cols = _prop_cols(props, "cfs.stats.cols")
+    if write_opts is None:
+        write_opts = _prop_write_opts(props, df)
+    _enforce_constraints(df, table_path, props)
     stage, files = _stage_write(df, table_path, partition_by, fs, write_opts)
     new_stats = _collect_file_stats(
-        df.sparkSession, table_path, stage, files, stats_cols or [], fs
-    )
+        df.sparkSession, table_path, stage, files, stats_cols, fs
+    ) or _declared_stats(table_path, files, props, fs)
     return commit_staged_files(
         table_path,
         files,
@@ -1198,7 +1251,8 @@ def commit_staged_files(
     that stage bytes themselves (the ``cfstable`` DataSource writer
     stages parquet via pyarrow on the executors, then commits here).
     Same optimistic-concurrency semantics: appends retry (they commute),
-    overwrite conflicts raise."""
+    overwrite conflicts raise.  ``new_stats=None`` harvests the table's
+    declared stats tier from the staged footers (_declared_stats)."""
     fs = _fs(fs)
     if mode not in ("overwrite", "append"):
         raise EngineIOError(f"invalid version commit mode {mode!r}")
@@ -1209,140 +1263,106 @@ def commit_staged_files(
             f"branch {branch!r} does not exist; create_branch first",
             table_path,
         )
-    new_stats = new_stats or {}
-    if not new_stats and files and fs.is_dir(_manifest_dir(table_path, fs)):
-        # producers that stage bytes themselves (the cfstable Arrow
-        # writer) have no Spark session here, but the table's declared
-        # stats tier (cfs.stats.cols) can still harvest the NUMERIC
-        # tier straight from the staged parquet FOOTERS — metadata-only
-        # IO.  String/decimal columns (footer bounds truncatable) stay
-        # un-statted on this path; the engine write path's distributed
-        # scan is the exact tier for those.
-        raw = get_properties(table_path, fs).get("cfs.stats.cols")
-        if raw:
-            cols = [c.strip() for c in raw.split(",") if c.strip()]
-            footer, _fallback = _footer_stats(table_path, files, cols, fs)
-            new_stats = {f: st for f, st in footer.items() if st}
-    attempt = 0
-    while True:
-        vs = list_versions(table_path, fs, branch)
-        parent = vs[-1] if vs else 0
-        base_files: list[str] = []
-        inherited: dict = {}
-        if parent:
-            pm = read_manifest(table_path, parent, fs, branch=branch)
-            if mode == "append":
-                base_files = pm["files"]
-                if base_files and _layout_partitioned(
-                    base_files
-                ) != bool(partition_by):
-                    raise EngineIOError(
-                        "append layout mismatch: parent version is "
-                        f"{'partitioned' if _layout_partitioned(base_files) else 'unpartitioned'} "
-                        f"but this append is {'partitioned' if partition_by else 'unpartitioned'}; "
-                        "match partition_by or overwrite the table",
-                        table_path,
-                    )
-            if (
-                mode == "append"
-                and pm.get("schema")
-                and schema_json
-                and schema_json.get("fields") is not None
-            ):
-                # SCHEMA ENFORCEMENT (the Delta write-path contract): a
-                # mismatched append would SILENTLY corrupt — extra
-                # columns vanish (reads serve the manifest schema) and
-                # missing columns read as NULL.  Evolution is explicit:
-                # ALTER TABLE first, then append in the evolved shape.
-                # Only TYPE CONFLICTS refuse: a column present on both
-                # sides with different types is unrecoverable (the mixed
-                # parquet read crashes or silently nulls).  Column
-                # add/remove across appends stays allowed — that is the
-                # documented merge-schema contract (Engine.table /
-                # read_version(merge_schema=True) reconcile them).
-                want = _schema_shape(pm["schema"])
-                got = _schema_shape(schema_json)
-                changed = sorted(
-                    c for c in set(want) & set(got) if want[c] != got[c]
+    if new_stats is None and files:
+        new_stats = _declared_stats(
+            table_path, files, _commit_props(table_path, fs), fs
+        )
+
+    def build(pm: dict | None, v: int) -> dict:
+        # overwrite replaces the file set wholesale: an empty base resets
+        # the sequence map, pending deletes, stats and the op chain
+        base = pm if pm and mode == "append" else {}
+        base_files = base.get("files", [])
+        if base_files and _layout_partitioned(base_files) != bool(
+            partition_by
+        ):
+            raise EngineIOError(
+                "append layout mismatch: parent version is "
+                f"{'partitioned' if _layout_partitioned(base_files) else 'unpartitioned'} "
+                f"but this append is {'partitioned' if partition_by else 'unpartitioned'}; "
+                "match partition_by or overwrite the table",
+                table_path,
+            )
+        if (
+            base.get("schema")
+            and schema_json
+            and schema_json.get("fields") is not None
+        ):
+            # SCHEMA ENFORCEMENT (the Delta write-path contract): a
+            # mismatched append would SILENTLY corrupt — extra
+            # columns vanish (reads serve the manifest schema) and
+            # missing columns read as NULL.  Evolution is explicit:
+            # ALTER TABLE first, then append in the evolved shape.
+            # Only TYPE CONFLICTS refuse: a column present on both
+            # sides with different types is unrecoverable (the mixed
+            # parquet read crashes or silently nulls).  Column
+            # add/remove across appends stays allowed — that is the
+            # documented merge-schema contract (Engine.table /
+            # read_version(merge_schema=True) reconcile them).
+            want = _schema_shape(base["schema"])
+            got = _schema_shape(schema_json)
+            changed = sorted(
+                c for c in set(want) & set(got) if want[c] != got[c]
+            )
+            if changed:
+                raise EngineIOError(
+                    f"append type conflict on column(s) {changed}: "
+                    "the table's and the append's types disagree; "
+                    "align the writer (column add/remove is the "
+                    "merge-schema path, type changes are not)",
+                    table_path,
                 )
-                if changed:
-                    raise EngineIOError(
-                        f"append type conflict on column(s) {changed}: "
-                        "the table's and the append's types disagree; "
-                        "align the writer (column add/remove is the "
-                        "merge-schema path, type changes are not)",
-                        table_path,
-                    )
-            if mode == "append" and pm.get("schema_ops"):
-                # the op chain must keep conforming the parent's files;
-                # the appended files (new schema) pass through it
-                # untouched because apply_schema_ops is idempotent —
-                # EXCEPT a dropped name physically reintroduced by this
-                # append: the inherited drop op would silently null the
-                # new rows' values (idempotence holds for add/rename,
-                # not drop-then-readd), so refuse instead
-                readded = sorted(
-                    {f["name"] for f in schema_json.get("fields", [])}
-                    & {
-                        c["name"]
-                        for c in pm["schema_ops"]
-                        if c["op"] == "drop"
-                    }
-                )
-                if readded:
-                    raise EngineIOError(
-                        f"append reintroduces dropped column(s) "
-                        f"{readded}; compact_version first (the pending "
-                        "drop op would silently null the appended "
-                        "values)",
-                        table_path,
-                    )
-                inherited["schema_ops"] = pm["schema_ops"]
+        # the op chain must keep conforming the parent's files; the
+        # appended files (new schema) pass through it untouched because
+        # apply_schema_ops is idempotent — EXCEPT a dropped name
+        # physically reintroduced by this append: the inherited drop op
+        # would silently null the new rows' values (idempotence holds
+        # for add/rename, not drop-then-readd), so refuse instead
+        drops = {
+            c["name"] for c in base.get("schema_ops", []) if c["op"] == "drop"
+        }
+        readded = drops and sorted(
+            drops & {f["name"] for f in schema_json.get("fields", [])}
+        )
+        if readded:
+            raise EngineIOError(
+                f"append reintroduces dropped column(s) "
+                f"{readded}; compact_version first (the pending "
+                "drop op would silently null the appended "
+                "values)",
+                table_path,
+            )
         # sequence-number bookkeeping (Iceberg v2 analog): every data file
         # remembers the version that ADDED it, so a merge-on-read delete
         # (commit_delete) can scope itself to rows that existed when it
-        # committed.  Appends inherit the parent's pending deletes;
-        # overwrite replaces the file set wholesale, so deletes reset.
-        v = parent + 1
-        file_seq: dict[str, int] = {}
-        deletes: list = []
-        if parent and mode == "append":
-            file_seq = dict(pm.get("file_seq", {}))
-            deletes = list(pm.get("deletes", []))
-        for f in files:
-            file_seq[f] = v
-        # appended files keep the parent's per-file stats (stats ride the
-        # FILE, not the version); overwrite starts a fresh stats map
-        stats_all: dict = {}
-        if parent and mode == "append":
-            stats_all = dict(pm.get("stats", {}))
-        stats_all.update(new_stats)
-        manifest = {
-            "version": v,
-            "parent": parent or None,
-            "mode": mode,
+        # committed.  Appended files keep the parent's per-file stats
+        # (stats ride the FILE, not the version).
+        return {
             **({"stage": stage} if stage else {}),
             "partition_by": list(partition_by or []),
             "files": sorted(base_files + files),
-            "file_seq": file_seq,
-            "deletes": deletes,
-            "ts_ms": int(time.time() * 1000),
+            "file_seq": {**base.get("file_seq", {}), **dict.fromkeys(files, v)},
+            "deletes": list(base.get("deletes", [])),
             "schema": schema_json,
-            **({"stats": stats_all} if stats_all else {}),
-            **inherited,
+            "stats": {**base.get("stats", {}), **(new_stats or {})},
+            "schema_ops": base.get("schema_ops", []),
             **(extra or {}),
         }
-        _stamp_watermark(manifest, *([pm] if parent else []))
-        try:
-            return _commit_manifest(
-                table_path, manifest, parent + 1, fs, branch
-            )
-        except VersionConflictError:
-            attempt += 1
-            if mode != "append" or attempt > max_retries:
-                # surface the conflict; the staged files are orphans that
-                # expire_versions() will reap
-                raise
+
+    return _publish(
+        table_path,
+        fs,
+        mode,
+        build,
+        branch=branch,
+        retries=max_retries if mode == "append" else 0,
+    )
+
+
+def _require_head(pm: dict | None, table_path: str) -> dict:
+    if pm is None:
+        raise TableNotFoundError("no committed versions", table_path)
+    return pm
 
 
 def commit_delete(
@@ -1365,42 +1385,14 @@ def commit_delete(
     reads pay one extra filter per pending delete until compaction.
     Retries through append conflicts (a delete observes whatever state it
     lands on)."""
-    fs = _fs(fs)
-    attempt = 0
-    while True:
-        vs = list_versions(table_path, fs)
-        if not vs:
-            raise TableNotFoundError("no committed versions", table_path)
-        parent = vs[-1]
-        pm = read_manifest(table_path, parent, fs)
-        v = parent + 1
-        manifest = {
-            "version": v,
-            "parent": parent,
-            "mode": "delete",
-            "partition_by": pm.get("partition_by", []),
-            "files": pm["files"],
-            "file_seq": pm.get("file_seq", {}),
-            "deletes": list(pm.get("deletes", []))
-            + [{"seq": v, "pred": predicate}],
-            "ts_ms": int(time.time() * 1000),
-            "schema": pm.get("schema"),
-            **(
-                {"schema_ops": pm["schema_ops"]}
-                if pm.get("schema_ops")
-                else {}
-            ),
-            **(
-                {"stats": pm["stats"]} if pm.get("stats") else {}
-            ),
+
+    def build(pm: dict | None, v: int) -> dict:
+        pm = _require_head(pm, table_path)
+        return {
+            "deletes": pm.get("deletes", []) + [{"seq": v, "pred": predicate}]
         }
-        _stamp_watermark(manifest, pm)
-        try:
-            return _commit_manifest(table_path, manifest, v, fs)
-        except VersionConflictError:
-            attempt += 1
-            if attempt > max_retries:
-                raise
+
+    return _publish(table_path, _fs(fs), "delete", build, retries=max_retries)
 
 
 def commit_merge(
@@ -1427,13 +1419,10 @@ def commit_merge(
     _kstage, kfiles = _stage_write(
         df.select(*keys).distinct(), table_path, None, fs
     )
-    attempt = 0
-    while True:
-        vs = list_versions(table_path, fs)
-        if not vs:
-            raise TableNotFoundError("no committed versions", table_path)
-        parent = vs[-1]
-        pm = read_manifest(table_path, parent, fs)
+    schema = df.schema.jsonValue()
+
+    def build(pm: dict | None, v: int) -> dict:
+        pm = _require_head(pm, table_path)
         if _layout_partitioned(pm["files"]):
             raise EngineIOError(
                 "merge-on-read upsert onto a Hive-partitioned layout is "
@@ -1441,37 +1430,19 @@ def commit_merge(
                 "partition column); compact_version first",
                 table_path,
             )
-        v = parent + 1
-        manifest = {
-            "version": v,
-            "parent": parent,
-            "mode": "merge",
+        # parent files keep their prune stats; the merge batch's new
+        # files simply have no entries (conservative: never pruned)
+        return {
             "stage": stage,
             "partition_by": [],
             "files": sorted(pm["files"] + files),
-            "file_seq": {**pm.get("file_seq", {}), **{f: v for f in files}},
-            "deletes": list(pm.get("deletes", []))
+            "file_seq": {**pm.get("file_seq", {}), **dict.fromkeys(files, v)},
+            "deletes": pm.get("deletes", [])
             + [{"seq": v, "eq_cols": keys, "eq_files": kfiles}],
-            "ts_ms": int(time.time() * 1000),
-            "schema": df.schema.jsonValue(),
-            **(
-                {"schema_ops": pm["schema_ops"]}
-                if pm.get("schema_ops")
-                else {}
-            ),
-            # parent files keep their prune stats; the merge batch's new
-            # files simply have no entries (conservative: never pruned)
-            **(
-                {"stats": pm["stats"]} if pm.get("stats") else {}
-            ),
+            "schema": schema,
         }
-        _stamp_watermark(manifest, pm)
-        try:
-            return _commit_manifest(table_path, manifest, v, fs)
-        except VersionConflictError:
-            attempt += 1
-            if attempt > max_retries:
-                raise
+
+    return _publish(table_path, fs, "merge", build, retries=max_retries)
 
 
 def adopt_plain_table(table_path: str, fs: WarehouseFS | None = None) -> int:
@@ -1496,15 +1467,13 @@ def adopt_plain_table(table_path: str, fs: WarehouseFS | None = None) -> int:
         files.append(rel)
     if not files:
         raise EngineIOError("no plain data files to adopt", table_path)
-    manifest = {
-        "version": 1,
-        "parent": None,
-        "mode": "adopt",
-        "files": sorted(files),
-        "ts_ms": int(time.time() * 1000),
-        "schema": None,
-    }
-    return _commit_manifest(table_path, manifest, 1, fs)
+    return _publish(
+        table_path,
+        fs,
+        "adopt",
+        lambda pm, v: {"files": sorted(files), "schema": None},
+        parent={},
+    )
 
 
 def _read_files(
@@ -1763,11 +1732,7 @@ def alter_schema(
     first (exactly Iceberg's name-mapping caveat).  Renames/drops remap
     the per-file prune stats so file skipping keeps working."""
     fs = _fs(fs)
-    vs = list_versions(table_path, fs)
-    if not vs:
-        raise TableNotFoundError("no committed versions", table_path)
-    parent = vs[-1]
-    pm = read_manifest(table_path, parent, fs)
+    pm = read_manifest(table_path, current_version(table_path, fs), fs)
     if pm.get("deletes"):
         raise EngineIOError(
             "schema alter with pending merge-on-read deletes is not "
@@ -1850,22 +1815,17 @@ def alter_schema(
                 f"unknown schema op {op.get('op')!r}", table_path
             )
         chain.append(op)
-    v = parent + 1
-    manifest = {
-        "version": v,
-        "parent": parent,
-        "mode": "alter",
-        "files": pm["files"],
-        "file_seq": pm.get("file_seq", {}),
-        "deletes": [],
-        "partition_by": pm.get("partition_by", []),
-        "ts_ms": int(time.time() * 1000),
-        "schema": {"type": "struct", "fields": fields},
-        "schema_ops": list(pm.get("schema_ops", [])) + list(ops),
-        **({"stats": stats} if stats else {}),
-    }
-    _stamp_watermark(manifest, pm)
-    return _commit_manifest(table_path, manifest, v, fs)
+    return _publish(
+        table_path,
+        fs,
+        "alter",
+        lambda pm, v: {
+            "schema": {"type": "struct", "fields": fields},
+            "schema_ops": chain,
+            "stats": stats,
+        },
+        parent=pm,
+    )
 
 
 def read_changes(
@@ -1941,32 +1901,17 @@ def rollback(
     history stays append-only (Iceberg rollback semantics), so the bad
     version remains inspectable."""
     fs = _fs(fs)
+    # restore the TARGET's file, delete and sequence state: rolling back
+    # past a merge-on-read delete must resurrect its rows
     m = read_manifest(table_path, to_version, fs)
-    vs = list_versions(table_path, fs)
-    parent = vs[-1]
-    pm = read_manifest(table_path, parent, fs)
-    manifest = {
-        "version": parent + 1,
-        "parent": parent,
-        "mode": "rollback",
-        "rollback_of": to_version,
-        "files": m["files"],
-        # restore the TARGET's delete/sequence state too: rolling back
-        # past a merge-on-read delete must resurrect its rows
-        "file_seq": m.get("file_seq", {}),
-        "deletes": m.get("deletes", []),
-        "partition_by": m.get("partition_by", []),
-        "ts_ms": int(time.time() * 1000),
-        "schema": m.get("schema"),
-        **({"stats": m["stats"]} if m.get("stats") else {}),
-        **(
-            {"schema_ops": m["schema_ops"]}
-            if m.get("schema_ops")
-            else {}
-        ),
-    }
-    _stamp_watermark(manifest, pm)
-    return _commit_manifest(table_path, manifest, parent + 1, fs)
+    return _publish(
+        table_path,
+        fs,
+        "rollback",
+        lambda pm, v: {"rollback_of": to_version},
+        parent=read_manifest(table_path, current_version(table_path, fs), fs),
+        source=m,
+    )
 
 
 def compact_version(
@@ -1995,6 +1940,7 @@ def compact_version(
     parent = current_version(table_path, fs)
     pm = read_manifest(table_path, parent, fs)
     df = read_version(spark, table_path, parent, fs)
+    props = get_properties(table_path, fs)
     # size the rewrite from the actual on-disk bytes of the parent set
     sizes = {rel: size for rel, size, _m in fs.walk_files(table_path)}
     est = sum(sizes.get(f, 0) for f in pm["files"])
@@ -2006,33 +1952,29 @@ def compact_version(
     else:
         out_df = df.repartition(n)
     stage, files = _stage_write(
-        out_df, table_path, None, fs, _prop_write_opts(table_path, out_df, fs)
+        out_df, table_path, None, fs, _prop_write_opts(props, out_df)
     )
     if stats_cols is None:
-        raw = get_properties(table_path, fs).get("cfs.stats.cols")
-        if raw:
-            stats_cols = [c.strip() for c in raw.split(",") if c.strip()]
-    stats = _collect_file_stats(
-        spark, table_path, stage, files, stats_cols or [], fs
+        stats_cols = _prop_cols(props, "cfs.stats.cols")
+    stats = _collect_file_stats(spark, table_path, stage, files, stats_cols, fs)
+    # the rewrite read applied pending MoR deletes and the op chain, so
+    # both are now MATERIALIZED: fresh sequence numbers, no deletes, no ops
+    return _publish(
+        table_path,
+        fs,
+        "compact",
+        lambda pm, v: {
+            "stage": stage,
+            "files": files,
+            "file_seq": dict.fromkeys(files, v),
+            "deletes": [],
+            "partition_by": [],
+            "schema": df.schema.jsonValue(),
+            "stats": stats,
+            "schema_ops": [],
+        },
+        parent=pm,
     )
-    v = parent + 1
-    manifest = {
-        "version": v,
-        "parent": parent,
-        "mode": "compact",
-        "stage": stage,
-        "files": files,
-        # the rewrite read applied pending MoR deletes, so they are now
-        # MATERIALIZED: fresh sequence numbers, empty delete list
-        "file_seq": {f: v for f in files},
-        "deletes": [],
-        "partition_by": [],
-        "ts_ms": int(time.time() * 1000),
-        "schema": df.schema.jsonValue(),
-        **({"stats": stats} if stats else {}),
-    }
-    _stamp_watermark(manifest, pm)
-    return _commit_manifest(table_path, manifest, v, fs)
 
 
 def binpack_version(
@@ -2113,51 +2055,45 @@ def binpack_version(
     out_df = df.repartition(n) if not partition_by else df.repartition(
         n, *partition_by
     )
+    props = get_properties(table_path, fs)
     stage, new_files = _stage_write(
         out_df,
         table_path,
         partition_by or None,
         fs,
-        _prop_write_opts(table_path, out_df, fs),
+        _prop_write_opts(props, out_df),
     )
     old_stats = pm.get("stats") or {}
     if stats_cols is None:
         # re-harvest whatever the parent snapshot tracked; if it tracked
         # nothing (e.g. string-typed cols through the footer-only staged
         # path), fall back to the table's declared tier like compact does
-        stats_cols = sorted({c for st in old_stats.values() for c in st})
-        if not stats_cols:
-            raw = get_properties(table_path, fs).get("cfs.stats.cols")
-            if raw:
-                stats_cols = [
-                    c.strip() for c in raw.split(",") if c.strip()
-                ]
+        stats_cols = sorted(
+            {c for st in old_stats.values() for c in st}
+        ) or _prop_cols(props, "cfs.stats.cols")
     new_stats = _collect_file_stats(
         spark, table_path, stage, new_files, stats_cols, fs
     )
-    v = parent + 1
-    files = keep + new_files
     seqs = pm.get("file_seq") or {}
-    stats = {f: old_stats[f] for f in keep if f in old_stats}
-    stats.update(new_stats)
-    manifest = {
-        "version": v,
-        "parent": parent,
-        "mode": "binpack",
-        "stage": stage,
-        "files": files,
-        "file_seq": {
-            **{f: seqs.get(f, parent) for f in keep},
-            **{f: v for f in new_files},
+    # kept files inherit their sequence number and stats verbatim
+    return _publish(
+        table_path,
+        fs,
+        "binpack",
+        lambda pm, v: {
+            "stage": stage,
+            "files": keep + new_files,
+            "file_seq": {
+                **{f: seqs.get(f, parent) for f in keep},
+                **dict.fromkeys(new_files, v),
+            },
+            "stats": {
+                **{f: old_stats[f] for f in keep if f in old_stats},
+                **new_stats,
+            },
         },
-        "deletes": [],
-        "partition_by": partition_by,
-        "ts_ms": int(time.time() * 1000),
-        "schema": pm["schema"],
-        **({"stats": stats} if stats else {}),
-    }
-    _stamp_watermark(manifest, pm)
-    return _commit_manifest(table_path, manifest, v, fs)
+        parent=pm,
+    )
 
 
 def expire_versions(
