@@ -224,6 +224,20 @@ def load_baselines(repo_dir: str) -> dict[str, float]:
     return baselines
 
 
+def time_query(spark, fn, sf_dir: str, label: str) -> float:
+    """Wall seconds of one ``fn(spark, sf_dir).collect()``, its Spark
+    jobs described as ``label`` — the timed action of bench.py and the
+    profiling tools.  Any DataFrame cache a prior sample materialized
+    (x02's band table) is dropped first: each sample must pay the full
+    pipeline, not a cache hit — Spark's CacheManager matches analyzed
+    plans across the structurally-identical per-run DataFrames."""
+    spark.catalog.clearCache()
+    spark.sparkContext.setJobDescription(label)
+    t0 = time.perf_counter()
+    fn(spark, sf_dir).collect()
+    return time.perf_counter() - t0
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     repo_dir = os.path.dirname(os.path.abspath(__file__))
@@ -236,22 +250,15 @@ def main() -> None:
     baselines = load_baselines(repo_dir)
     load_start = os.getloadavg()[0]
 
-    def time_query(fn) -> float:
-        # drop any DataFrame cache a prior sample materialized (x02's
-        # band table) — each sample must pay the full pipeline, not a
-        # cache hit; Spark's CacheManager matches analyzed plans across
-        # the structurally-identical per-run DataFrames.
-        spark.catalog.clearCache()
-        t0 = time.perf_counter()
-        fn(spark, sf_dir).collect()
-        return time.perf_counter() - t0
-
     timings: dict[str, float] = {}
     adjudicated: dict[str, dict] = {}
     raw_samples: dict[str, list[float]] = {}
     for name in BENCH_QUERIES:
         fn = QUERIES[name]
-        samples = [time_query(fn) for _ in range(RUNS)]
+        samples = [
+            time_query(spark, fn, sf_dir, f"bench:{name}#{i}")
+            for i in range(RUNS)
+        ]
         raw_samples[name] = [round(s, 3) for s in samples]
         first = round(statistics.median(samples[1:]), 3)
         timings[name] = first
@@ -262,7 +269,10 @@ def main() -> None:
         # threads) settle before re-measuring — the rerun exists to
         # REMOVE ambient noise, not to sample the bench's own wake
         time.sleep(2)
-        rerun = [time_query(fn) for _ in range(ADJUDICATE_RUNS)]
+        rerun = [
+            time_query(spark, fn, sf_dir, f"bench:{name}#adj{i}")
+            for i in range(ADJUDICATE_RUNS)
+        ]
         raw_samples[name] += [round(s, 3) for s in rerun]
         med = round(statistics.median(rerun), 3)
         adjudicated[name] = {
@@ -285,7 +295,10 @@ def main() -> None:
         while os.getloadavg()[0] > FINAL_IDLE_LOAD and budget > 0:
             time.sleep(5)
             budget -= 5
-        rerun = [time_query(QUERIES[name]) for _ in range(ADJUDICATE_RUNS)]
+        rerun = [
+            time_query(spark, QUERIES[name], sf_dir, f"bench:{name}#final{i}")
+            for i in range(ADJUDICATE_RUNS)
+        ]
         raw_samples[name] += [round(s, 3) for s in rerun]
         med = round(statistics.median(rerun), 3)
         rec = adjudicated.setdefault(

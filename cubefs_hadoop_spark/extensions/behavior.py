@@ -1707,11 +1707,10 @@ def event_path_trigrams(
     k: int = _X98_K,
 ) -> DataFrame:
     """(t1, t2, t3, n, share_milli): the top-k within-user 3-step event
-    paths with exact milli shares over all trigrams."""
-    from pyspark.sql.window import Window as _W
-
-    w = _W.partitionBy(user_col).orderBy(ts_col, id_col)
-    g = (
+    paths with exact milli shares over all trigrams — the trigram counts
+    served through ``trigrams_from_counts`` (the S28 rollup)."""
+    w = Window.partitionBy(user_col).orderBy(ts_col, id_col)
+    counts = (
         events.select(
             F.col(type_col).alias("t1"),
             F.lead(type_col, 1).over(w).alias("t2"),
@@ -1721,25 +1720,14 @@ def event_path_trigrams(
         .groupBy("t1", "t2", "t3")
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
     )
-    # the share window runs over the |types|^3-bounded trigram frame
-    return (
-        g.select(
-            "t1",
-            "t2",
-            "t3",
-            "n",
-            F.expr("1000 * n div sum(n) over ()").cast("long")
-            .alias("share_milli"),
-        )
-        .orderBy(F.col("n").desc(), "t1", "t2", "t3")
-        .limit(int(k))
-    )
+    return trigrams_from_counts(counts, k)
 
 
 def trigrams_from_counts(counts: DataFrame, k: int = _X98_K) -> DataFrame:
-    """Serve the x98 table from folded (t1, t2, t3, n) trigram cells
-    (``streaming.state_sink.sink_trigram_state``): exact milli shares
-    over the |types|^3-bounded frame, top-k with the x98 tie order."""
+    """The x98 table from (t1, t2, t3, n) trigram cells, batch-counted
+    or folded by ``streaming.state_sink.sink_trigram_state``: exact
+    milli shares over the |types|^3-bounded frame, top-k with the x98
+    tie order."""
     return (
         counts.select(
             "t1",
@@ -1786,6 +1774,20 @@ FROM g CROSS JOIN t
 ORDER BY n_types, users, users_share_milli"""
 
 
+def user_type_pairs(
+    events: DataFrame,
+    user_col: str = "user_id",
+    type_col: str = "event_type",
+) -> DataFrame:
+    """The x99 statistic: (u, y) user x event-type rows.  Batch x99 rolls
+    them up as they come; S30 folds them by set union into the distinct
+    pair set.  A NULL type is kept, so a user whose only events are
+    NULL-typed still counts, at 0 types."""
+    return events.select(
+        F.col(user_col).alias("u"), F.col(type_col).alias("y")
+    )
+
+
 def user_type_diversity(
     events: DataFrame,
     user_col: str = "user_id",
@@ -1793,20 +1795,8 @@ def user_type_diversity(
 ) -> DataFrame:
     """(n_types, users, users_share_milli): the distribution of per-user
     distinct event-type counts with exact milli user shares."""
-    u = events.groupBy(F.col(user_col).alias("u")).agg(
-        F.countDistinct(type_col).cast("long").alias("n_types")
-    )
-    return (
-        u.groupBy("n_types")
-        .agg(F.count(F.lit(1)).cast("long").alias("users"))
-        # the share window runs over the |types|-bounded distribution
-        .select(
-            "n_types",
-            "users",
-            F.expr("1000 * users div sum(users) over ()")
-            .cast("long")
-            .alias("users_share_milli"),
-        )
+    return diversity_from_user_types(
+        user_type_pairs(events, user_col, type_col)
     )
 
 
@@ -2002,24 +1992,27 @@ def conversion_latency(
     """(n_converters, p50_s, p90_s): exact discrete percentiles of the
     first-touch -> first-purchase gap in integer seconds, over users
     who ever purchased."""
-    from cubefs_hadoop_spark.extensions.ranking import (
-        grouped_exact_percentiles,
+    return conversion_latency_from_state(
+        conversion_firsts(events, user_col, type_col, ts_col, purchase_type)
     )
 
+
+def conversion_firsts(
+    events: DataFrame,
+    user_col: str = "user_id",
+    type_col: str = "event_type",
+    ts_col: str = "ts",
+    purchase_type: str = "purchase",
+) -> DataFrame:
+    """The x105 statistic: per user (u, e0, ep), the epoch micros of the
+    first event and of the first purchase (NULL if none) — both firsts
+    in one user-keyed pass, MIN-mergeable (the S31 fold)."""
     us = _epoch_us(events, ts_col)
-    u = events.groupBy(F.col(user_col).alias("u")).agg(
-        F.min(us).alias("e0"),
-        F.min(F.when(F.col(type_col) == purchase_type, us)).alias("ep"),
-    )
-    g = u.filter(F.col("ep").isNotNull()).select(
-        F.expr("(ep - e0) div 1000000").cast("long").alias("gap_s")
-    )
-    return grouped_exact_percentiles(
-        g, "gap_s", group_cols=(), quantiles=(50, 90)
-    ).select(
-        F.col("n").alias("n_converters"),
-        F.col("p50").alias("p50_s"),
-        F.col("p90").alias("p90_s"),
+    return events.groupBy(F.col(user_col).alias("u")).agg(
+        F.min(us).cast("long").alias("e0"),
+        F.min(F.when(F.col(type_col) == purchase_type, us))
+        .cast("long")
+        .alias("ep"),
     )
 
 
@@ -2033,14 +2026,19 @@ def x105_conversion_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def diversity_from_user_types(pairs: DataFrame) -> DataFrame:
-    """Serve the x99 distribution from the S30 distinct (u, y) pair
-    state (``streaming.state_sink.sink_user_type_state``): the pair set
-    IS the sufficient statistic — count types per user, roll up, exact
-    milli shares (identical math to ``user_type_diversity``)."""
-    u = pairs.groupBy("u").agg(F.count(F.lit(1)).cast("long").alias("n_types"))
+    """The x99 distribution from ``user_type_pairs`` rows, raw (batch) or
+    the S30 distinct pair state
+    (``streaming.state_sink.sink_user_type_state``): one user-keyed
+    COUNT(DISTINCT y) — NULL types uncounted, and map-side over the tiny
+    type domain — then a |types|-bounded rollup with exact milli
+    shares."""
+    u = pairs.groupBy("u").agg(
+        F.countDistinct("y").cast("long").alias("n_types")
+    )
     return (
         u.groupBy("n_types")
         .agg(F.count(F.lit(1)).cast("long").alias("users"))
+        # the share window runs over the |types|-bounded distribution
         .select(
             "n_types",
             "users",
@@ -2052,9 +2050,10 @@ def diversity_from_user_types(pairs: DataFrame) -> DataFrame:
 
 
 def conversion_latency_from_state(state: DataFrame) -> DataFrame:
-    """Serve the x105 row from the S31 per-user (e0, ep) min state
-    (``streaming.state_sink.sink_conversion_state``): converters'
-    epoch-micro gaps through the same banded percentile machinery."""
+    """The x105 row from a per-user ``conversion_firsts`` frame, batch or
+    the S31 min-folded state (``streaming.state_sink.sink_conversion_state``):
+    converters' epoch-micro gaps through the banded percentile
+    machinery."""
     from cubefs_hadoop_spark.extensions.ranking import (
         grouped_exact_percentiles,
     )
@@ -2113,35 +2112,47 @@ def weekly_active_users(
     anchor_date = events.agg(F.min(F.col(ts_col).cast("date"))).first()[0]
     if anchor_date is None:
         raise ValueError("weekly_active_users: no events — no week-0 anchor")
-    anchor = anchor_date.isoformat()
-    wu = (
-        events.select(
-            F.expr(
-                f"datediff(cast({ts_col} as date), date'{anchor}') div 7"
-            ).cast("long").alias("week"),
-            F.col(user_col).alias("u"),
-        )
-        .distinct()
+    wu = week_user_pairs(events, anchor_date.isoformat(), user_col, ts_col)
+    # the pair frame feeds BOTH counts and the shift join
+    return wau_from_week_users(barrier(wu, eager=False))
+
+
+def _weeks_since(df: DataFrame, ts_col: str, anchor: str) -> DataFrame:
+    """``df`` with ``week``: whole weeks from the ISO-date ``anchor`` to
+    ``ts_col`` (x74/x89's integer-day convention), under the ONE anchor
+    guard of x107/x113 and S32/S37.  A pre-anchor event would give a
+    negative datediff, which Spark's ``div 7`` truncates toward zero and
+    DuckDB's ``//`` floors — a wrong, engine-divergent week — so it
+    fails the query loudly instead (assert_true is NULL on success, so
+    the filter keeps every valid row).  A NULL ts passes and lands in
+    the NULL week, as in DuckDB."""
+    t = F.col(ts_col)
+    return df.withColumn(
+        "week",
+        F.expr(f"datediff(cast({ts_col} as date), date'{anchor}') div 7")
+        .cast("long"),
+    ).filter(
+        F.assert_true(
+            t.isNull() | (t.cast("date") >= F.lit(anchor).cast("date")),
+            F.lit(
+                f"event precedes the pinned week-0 anchor {anchor};"
+                " re-anchor the state"
+            ),
+        ).isNull()
     )
-    wu = barrier(wu, eager=False)  # feeds BOTH counts and the shift join
-    w = wu.groupBy("week").agg(F.count(F.lit(1)).cast("long").alias("wau"))
-    prev = wu.select((F.col("week") + 1).alias("week"), "u")
-    r = (
-        wu.join(prev, ["week", "u"])
-        .groupBy("week")
-        .agg(F.count(F.lit(1)).cast("long").alias("returning_users"))
-    )
-    return (
-        w.join(r, "week", "left")
-        .select(
-            "week",
-            "wau",
-            F.coalesce("returning_users", F.lit(0)).cast("long").alias("returning_users"),
-            F.expr("1000 * coalesce(returning_users, 0) div wau")
-            .cast("long")
-            .alias("returning_share_milli"),
-        )
-    )
+
+
+def week_user_pairs(
+    events: DataFrame,
+    anchor: str,
+    user_col: str = "user_id",
+    ts_col: str = "ts",
+) -> DataFrame:
+    """The x107 statistic: the distinct (week, u) activity pairs, weeks
+    counted from ``anchor`` — batch x107 pins it to the corpus min date,
+    S32 to the caller's (a stream cannot derive the corpus min date)."""
+    ev = events.select(ts_col, F.col(user_col).alias("u"))
+    return _weeks_since(ev, ts_col, anchor).select("week", "u").distinct()
 
 
 @register("x107_weekly_active_users", _X107_ORACLE)
@@ -2194,9 +2205,21 @@ def session_depth_histogram(
     """(depth, sessions, sessions_share_milli): the distribution of
     events-per-session over x34's sessionization."""
     s = sessionize(events, gap_us=gap_us)
+    return _depth_shares(
+        s.select(
+            F.col("events").cast("long").alias("depth"),
+            F.lit(1).cast("long").alias("n"),
+        )
+    )
+
+
+def _depth_shares(cells: DataFrame) -> DataFrame:
+    """The x110 tail, shared with the S33 serve: (depth, n) session
+    cells summed per depth, exact milli shares over the depth-bounded
+    histogram."""
     return (
-        s.groupBy(F.col("events").cast("long").alias("depth"))
-        .agg(F.count(F.lit(1)).cast("long").alias("sessions"))
+        cells.groupBy("depth")
+        .agg(F.sum("n").cast("long").alias("sessions"))
         .select(
             "depth",
             "sessions",
@@ -2302,10 +2325,10 @@ def x111_engagement_concentration(
 
 
 def wau_from_week_users(pairs: DataFrame) -> DataFrame:
-    """Serve the x107 table from the S32 distinct (week, u) pair state
-    (``streaming.state_sink.sink_weekly_users_state``): identical math
-    to ``weekly_active_users`` from the pair frame down (the state IS
-    that frame, under the sink's pinned anchor)."""
+    """The x107 table from ``week_user_pairs``, batch or the S32 union
+    state (``streaming.state_sink.sink_weekly_users_state``): weekly
+    actives, and the returning count by a user-keyed shifted-week
+    equi-join."""
     w = pairs.groupBy("week").agg(
         F.count(F.lit(1)).cast("long").alias("wau")
     )
@@ -2334,7 +2357,7 @@ def session_depth_from_state(
     (``streaming.state_sink.sink_session_depth_state``): closed-session
     (depth, n) cells PLUS each user's still-open session at its current
     depth — together exactly the sessions a batch x110 over everything
-    ingested would count; identical share math."""
+    ingested would count, through the same ``_depth_shares`` tail."""
     from cubefs_hadoop_spark.fs import warehouse_fs
     from cubefs_hadoop_spark.streaming.state_sink import (
         _latest_snapshot_batch,
@@ -2361,17 +2384,7 @@ def session_depth_from_state(
             .agg(F.count(F.lit(1)).cast("long").alias("n"))
         )
         cells = cells.unionByName(open_counts)
-    return (
-        cells.groupBy("depth")
-        .agg(F.sum("n").cast("long").alias("sessions"))
-        .select(
-            "depth",
-            "sessions",
-            F.expr("1000 * sessions div sum(sessions) over ()")
-            .cast("long")
-            .alias("sessions_share_milli"),
-        )
-    )
+    return _depth_shares(cells)
 
 
 # -- x112: daily revenue spike detection -------------------------------------------
@@ -2475,34 +2488,43 @@ def catalog_turnover(
     anchor_date = events.agg(F.min(F.col(ts_col).cast("date"))).first()[0]
     if anchor_date is None:
         raise ValueError("catalog_turnover: no events — no week-0 anchor")
-    anchor = anchor_date.isoformat()
+    p = week_item_pairs(
+        events,
+        anchor_date.isoformat(),
+        type_col,
+        ts_col,
+        props_col,
+        item_path,
+        purchase_type,
+    )
+    # the pair frame feeds both rollups
+    return catalog_turnover_from_pairs(barrier(p, eager=False))
+
+
+def week_item_pairs(
+    events: DataFrame,
+    anchor: str,
+    type_col: str = "event_type",
+    ts_col: str = "ts",
+    props_col: str = "props",
+    item_path: str = "$.k",
+    purchase_type: str = "purchase",
+) -> DataFrame:
+    """The x113 statistic: the distinct (week, k) purchased-item pairs,
+    weeks counted from ``anchor`` (the ``week_user_pairs`` convention;
+    S37 folds them by set union)."""
     p = (
         events.filter(
             (F.col(type_col) == purchase_type)
             & F.col(props_col).isNotNull()
         )
         .select(
-            F.expr(
-                f"datediff(cast({ts_col} as date), date'{anchor}') div 7"
-            ).cast("long").alias("week"),
+            ts_col,
             F.get_json_object(props_col, item_path).cast("long").alias("k"),
         )
         .filter(F.col("k").isNotNull())
-        .distinct()
     )
-    p = barrier(p, eager=False)  # feeds both rollups
-    w = p.groupBy("week").agg(F.count(F.lit(1)).cast("long").alias("items"))
-    n = (
-        p.groupBy("k")
-        .agg(F.min("week").alias("week"))
-        .groupBy("week")
-        .agg(F.count(F.lit(1)).cast("long").alias("new_items"))
-    )
-    return w.join(n, "week", "left").select(
-        "week",
-        "items",
-        F.coalesce("new_items", F.lit(0)).cast("long").alias("new_items"),
-    )
+    return _weeks_since(p, ts_col, anchor).select("week", "k").distinct()
 
 
 @register("x113_catalog_turnover", _X113_ORACLE)
@@ -2557,10 +2579,9 @@ def revenue_spikes_from_cells(cells: DataFrame) -> DataFrame:
 
 
 def catalog_turnover_from_pairs(pairs: DataFrame) -> DataFrame:
-    """Serve the x113 table from the S37 distinct (week, k) pair state
-    (``streaming.state_sink.sink_catalog_week_state``): identical math
-    to ``catalog_turnover`` from the pair frame down (the state IS that
-    frame, under the sink's pinned anchor)."""
+    """The x113 table from ``week_item_pairs``, batch or the S37 union
+    state (``streaming.state_sink.sink_catalog_week_state``): weekly
+    items, and new items by a catalog-grain min-week rollup."""
     w = pairs.groupBy("week").agg(
         F.count(F.lit(1)).cast("long").alias("items")
     )
@@ -2615,11 +2636,19 @@ def user_lifespan(
     first-to-last-event span in integer seconds, over users seen more
     than an instant (span > 0 — single-event users carry no tenure
     signal and would crush the percentiles to 0)."""
+    return lifespan_from_spans(user_spans(events, user_col, ts_col))
+
+
+def user_spans(
+    events: DataFrame, user_col: str = "user_id", ts_col: str = "ts"
+) -> DataFrame:
+    """The x125 statistic: per user (u, e0, e1), the first and last
+    event's epoch micros — MIN/MAX-mergeable (the S39 fold)."""
     us = _epoch_us(events, ts_col)
-    u = events.groupBy(F.col(user_col).alias("u")).agg(
-        F.min(us).alias("e0"), F.max(us).alias("e1")
+    return events.groupBy(F.col(user_col).alias("u")).agg(
+        F.min(us).cast("long").alias("e0"),
+        F.max(us).cast("long").alias("e1"),
     )
-    return lifespan_from_spans(u)
 
 
 def lifespan_from_spans(spans: DataFrame) -> DataFrame:

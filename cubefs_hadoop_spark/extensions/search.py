@@ -316,14 +316,12 @@ def dsir_state_fold(
     scoring against it is hash-identical to x33 on the union corpus.
     O(batch) map work plus a vocabulary-scale merge; the old corpus is
     never re-tokenized."""
+    from cubefs_hadoop_spark.streaming.state_sink import fold_keyed
+
     spark = new_docs.sparkSession
     state = spark.read.parquet(index_path)
     batch = dsir_vocab(new_docs, target, text_col=text_col)
-    return (
-        state.unionByName(batch)
-        .groupBy("word")
-        .agg(F.sum("cc").alias("cc"), F.sum("ct").alias("ct"))
-    )
+    return fold_keyed(state, batch, ["word"], {"cc": "sum", "ct": "sum"})
 
 
 @register("x33_dsir_weights", _X33_ORACLE)

@@ -700,15 +700,17 @@ def centroid_state_fold(
     A production loop overwrites the state with the returned sums (write
     to a temp path, then rename — the state is labels x dims rows,
     metadata-sized)."""
+    from cubefs_hadoop_spark.streaming.state_sink import fold_keyed
+
     spark = new_emb.sparkSession
     state = spark.read.parquet(index_path)
     batch = label_centroids(
         new_emb, label_col=label_col, vec_col=vec_col
     ).select(label_col, "dim", "sum_milli", "cnt")
     return (
-        state.unionByName(batch)
-        .groupBy(label_col, "dim")
-        .agg(F.sum("sum_milli").alias("sum_milli"), F.sum("cnt").alias("cnt"))
+        fold_keyed(
+            state, batch, [label_col, "dim"], {"sum_milli": "sum", "cnt": "sum"}
+        )
         .select(
             label_col,
             "dim",

@@ -1205,22 +1205,7 @@ def doclen_percentiles(
 ) -> DataFrame:
     """(source, n_docs, p50_chars, p90_chars): exact discrete per-source
     length order statistics (rank 1+(n-1)q//100, ascending)."""
-    from cubefs_hadoop_spark.extensions.ranking import (
-        grouped_exact_percentiles,
-    )
-
-    v = docs.select(
-        F.coalesce(F.col(by), F.lit("(null)")).alias("source"),
-        F.col(len_col).cast("long").alias("c"),
-    )
-    return grouped_exact_percentiles(
-        v, "c", group_cols=["source"], quantiles=(50, 90)
-    ).select(
-        "source",
-        F.col("n").alias("n_docs"),
-        F.col("p50").alias("p50_chars"),
-        F.col("p90").alias("p90_chars"),
-    )
+    return doclen_percentiles_from_cells(doclen_cells(docs, by, len_col))
 
 
 @register("x93_doclen_percentiles", _X93_ORACLE)
@@ -1327,10 +1312,9 @@ def doclen_cells(docs: DataFrame, by: str = "source",
 
 
 def doclen_percentiles_from_cells(cells: DataFrame) -> DataFrame:
-    """Serve the x93 profile from folded (source, c, cnt) cells: the
-    shared banded percentile machinery runs at counts grain
-    (``counts_col``), so the streamed profile bit-equals the batch
-    x93 over everything ingested."""
+    """The x93 profile from ``doclen_cells``, batch or the S35 folded
+    state: the shared banded percentile machinery runs at counts grain
+    (``counts_col``)."""
     from cubefs_hadoop_spark.extensions.ranking import (
         grouped_exact_percentiles,
     )

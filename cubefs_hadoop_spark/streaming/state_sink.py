@@ -62,9 +62,10 @@ def _ledger_committer(
     """The ONE exactly-once fold protocol every state sink shares:
     batch-id watermark skip -> merge with the current version -> publish
     the merged frame as a new version (``versioning.commit_batch``).
-    Only the MERGE LAW varies by sink (counter addition, set union), so
-    only ``merge_fn(prev_or_None, batch_stats)`` is pluggable — a fix to
-    the exactly-once mechanics lands once, for every sink."""
+    Only the MERGE LAW varies by sink — ``fold_keyed`` for every keyed
+    state, S29's funnel merge otherwise — so only
+    ``merge_fn(prev_or_None, batch_stats)`` is pluggable: a fix to the
+    exactly-once mechanics lands once, for every sink."""
 
     def _commit(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -84,12 +85,44 @@ def _ledger_committer(
     return _commit
 
 
-def _with_prev(prev: DataFrame | None, batch_stats: DataFrame) -> DataFrame:
-    """The batch's statistics under the current state's rows (in the
-    state's column order), or alone on the first fold."""
-    if prev is None:
-        return batch_stats
-    return prev.unionByName(batch_stats.select(*prev.columns))
+def fold_keyed(
+    prev: DataFrame | None,
+    batch_stats: DataFrame,
+    key_cols: list[str],
+    law: dict[str, str],
+) -> DataFrame:
+    """THE merge law of every keyed state: ``prev ∪ batch_stats`` (the
+    batch under the state's column order; the batch alone on the first
+    fold) grouped by ``key_cols``, each ``law`` column folded by its
+    ``"sum"``, ``"min"`` or ``"max"``.  All three are associative and
+    commutative, so fold(state, batch) == full recompute whatever the
+    batch slicing.  An EMPTY law is set union — the distinct key rows,
+    idempotent as well, so even a key present in many batches lands one
+    row (Bloom's OR of bit vectors, expressed relationally)."""
+    both = (
+        batch_stats
+        if prev is None
+        else prev.unionByName(batch_stats.select(*prev.columns))
+    )
+    if not law:
+        return both.select(*key_cols).distinct()
+    return both.groupBy(*key_cols).agg(
+        *[getattr(F, fn)(c).alias(c) for c, fn in law.items()]
+    )
+
+
+def _keyed_committer(
+    state_dir: str,
+    stats_fn: Callable[[DataFrame], DataFrame],
+    key_cols: list[str],
+    law: dict[str, str],
+) -> Callable[[DataFrame, int], None]:
+    """The exactly-once fold of a keyed state under ``fold_keyed``."""
+    return _ledger_committer(
+        state_dir,
+        stats_fn,
+        lambda prev, batch_stats: fold_keyed(prev, batch_stats, key_cols, law),
+    )
 
 
 def additive_state_committer(
@@ -106,13 +139,9 @@ def additive_state_committer(
     fold(state, batch) == full recompute over every row ever ingested,
     to the bit, regardless of how the stream sliced the data into
     batches (the incremental-op contract x31b/x33b hash-prove)."""
-
-    def merge(prev: DataFrame | None, batch_stats: DataFrame) -> DataFrame:
-        return _with_prev(prev, batch_stats).groupBy(*key_cols).agg(
-            *[F.sum(c).alias(c) for c in sum_cols]
-        )
-
-    return _ledger_committer(state_dir, stats_fn, merge)
+    return _keyed_committer(
+        state_dir, stats_fn, key_cols, dict.fromkeys(sum_cols, "sum")
+    )
 
 
 def sink_centroid_state(
@@ -338,32 +367,6 @@ def hist_quantile_from_cells(cells: DataFrame, p_milli: int, lo: int, width: int
     raise ValueError("empty histogram state")
 
 
-def union_state_committer(
-    state_dir: str,
-    keys_fn: Callable[[DataFrame], DataFrame],
-    key_cols: list[str],
-) -> Callable[[DataFrame, int], None]:
-    """foreachBatch function folding IDEMPOTENT-UNION state (distinct
-    key rows) into the persisted state, exactly once — the same commit
-    mechanics as ``additive_state_committer`` with set union instead of
-    counter addition.  The fold is replay-safe twice over: the watermark
-    skips replayed batch ids AND union is idempotent, so even a
-    key present in many batches lands exactly one row.  This is the
-    merge law of Bloom filters (OR of bit vectors) expressed
-    relationally: the set-bit frame of stream A ∪ B IS the union of
-    the two set-bit frames.  Shares `_ledger_committer`'s exactly-once
-    protocol with the additive sinks — only the merge law differs."""
-
-    def merge(prev: DataFrame | None, batch_keys: DataFrame) -> DataFrame:
-        if prev is not None:
-            return prev.unionByName(
-                batch_keys.select(*prev.columns)
-            ).distinct()
-        return batch_keys.select(*key_cols).distinct()
-
-    return _ledger_committer(state_dir, keys_fn, merge)
-
-
 def sink_srp_bucket_state(
     sdf: DataFrame,
     state_dir: str,
@@ -441,7 +444,7 @@ def sink_bloom_state(
 
     _drain(
         sdf,
-        union_state_committer(state_dir, keys, ["pos"]),
+        _keyed_committer(state_dir, keys, ["pos"], {}),
         checkpoint_dir,
     )
 
@@ -827,14 +830,12 @@ def sink_rfm_state(
             batch, user_col, ts_col, type_col, value_col, purchase_type
         )
 
-    def merge(prev: DataFrame | None, batch_stats: DataFrame) -> DataFrame:
-        return _with_prev(prev, batch_stats).groupBy("user_id").agg(
-            F.max("last_day").alias("last_day"),
-            F.sum("frequency").cast("long").alias("frequency"),
-            F.sum("monetary_cents").cast("long").alias("monetary_cents"),
-        )
-
-    _drain(sdf, _ledger_committer(state_dir, stats, merge), checkpoint_dir)
+    law = {"last_day": "max", "frequency": "sum", "monetary_cents": "sum"}
+    _drain(
+        sdf,
+        _keyed_committer(state_dir, stats, ["user_id"], law),
+        checkpoint_dir,
+    )
 
 
 def sink_value_counts_state(
@@ -1224,21 +1225,22 @@ def sink_user_type_state(
     type_col: str = "event_type",
 ) -> None:
     """Stream events into the x99 diversity state (S30): the distinct
-    (user, event_type) pair set folds as idempotent union exactly once
+    ``behavior.user_type_pairs`` (user, event_type) pair set — the batch
+    x99 statistic, NULL types kept — folds as idempotent union exactly once
     — NO ordering contract (set union is commutative AND idempotent,
     so batch slicing and even within-contract duplicates cannot change
     the state).  ``behavior.diversity_from_user_types`` serves the live
     x99 distribution at any moment.  State: one row per (user, type)
     pair ever seen — user-grain x the tiny type domain."""
 
-    def keys(batch: DataFrame) -> DataFrame:
-        return batch.select(
-            F.col(user_col).alias("u"), F.col(type_col).alias("y")
-        ).distinct()
+    from cubefs_hadoop_spark.extensions.behavior import user_type_pairs
+
+    def pairs(batch: DataFrame) -> DataFrame:
+        return user_type_pairs(batch, user_col, type_col)
 
     _drain(
         sdf,
-        union_state_committer(state_dir, keys, ["u", "y"]),
+        _keyed_committer(state_dir, pairs, ["u", "y"], {}),
         checkpoint_dir,
     )
 
@@ -1253,31 +1255,25 @@ def sink_conversion_state(
     purchase_type: str = "purchase",
 ) -> None:
     """Stream events into the x105 conversion-latency state (S31): per
-    user the (first-event, first-purchase) epoch-micro pair folds as a
-    MIN merge exactly once — min is associative+commutative, so like
+    user the ``behavior.conversion_firsts`` (first-event,
+    first-purchase) epoch-micro pair folds as a MIN merge exactly once — min is associative+commutative, so like
     S26/S27 there is NO ordering contract; events may interleave across
     batches arbitrarily and the folded state still bit-equals the batch
     two-firsts aggregate.  ``behavior.conversion_latency_from_state``
     serves the live x105 percentile row at any moment.  State: one row
     per user seen."""
-    from cubefs_hadoop_spark.extensions.behavior import _epoch_us
+    from cubefs_hadoop_spark.extensions.behavior import conversion_firsts
 
     def stats(batch: DataFrame) -> DataFrame:
-        us = _epoch_us(batch, ts_col)
-        return batch.groupBy(F.col(user_col).alias("u")).agg(
-            F.min(us).cast("long").alias("e0"),
-            F.min(
-                F.when(F.col(type_col) == purchase_type, us)
-            ).cast("long").alias("ep"),
+        return conversion_firsts(
+            batch, user_col, type_col, ts_col, purchase_type
         )
 
-    def merge(prev: DataFrame | None, batch_stats: DataFrame) -> DataFrame:
-        return _with_prev(prev, batch_stats).groupBy("u").agg(
-            F.min("e0").cast("long").alias("e0"),
-            F.min("ep").cast("long").alias("ep"),
-        )
-
-    _drain(sdf, _ledger_committer(state_dir, stats, merge), checkpoint_dir)
+    _drain(
+        sdf,
+        _keyed_committer(state_dir, stats, ["u"], {"e0": "min", "ep": "min"}),
+        checkpoint_dir,
+    )
 
 
 def sink_weekly_users_state(
@@ -1289,8 +1285,9 @@ def sink_weekly_users_state(
     ts_col: str = "ts",
 ) -> None:
     """Stream events into the x107 WAU state (S32): the distinct
-    (week, user) pair set folds as idempotent union exactly once — no
-    ordering contract.  ``anchor`` (an ISO date) PINS week 0: a
+    ``behavior.week_user_pairs`` (week, user) pair set folds as
+    idempotent union exactly once — no ordering contract; the
+    statistic's anchor guard fails a pre-anchor event's batch.  ``anchor`` (an ISO date) PINS week 0: a
     streaming ingest cannot derive the corpus min date (earlier data
     may arrive later and silently renumber every week), so the caller
     fixes the epoch — the production convention for any calendar
@@ -1298,32 +1295,14 @@ def sink_weekly_users_state(
     table; it matches the batch query when the anchor equals the batch
     corpus' min date.  State: one row per (week, user) pair seen."""
 
-    def keys(batch: DataFrame) -> DataFrame:
-        return batch.select(
-            F.expr(
-                f"datediff(cast({ts_col} as date), date'{anchor}') div 7"
-            ).cast("long").alias("week"),
-            F.col(user_col).alias("u"),
-            F.col(ts_col).alias("_t"),
-        ).filter(
-            # anchor guard (ADVICE r13): a pre-anchor event yields a
-            # negative datediff, and Spark's `div 7` truncates toward
-            # zero while DuckDB's `//` floors — the event would land in
-            # a wrong, engine-divergent week bucket.  Fail the batch
-            # loudly instead (assert_true is NULL on success, so the
-            # filter keeps every valid row).
-            F.assert_true(
-                F.col("_t").cast("date") >= F.lit(anchor).cast("date"),
-                F.lit(
-                    "sink_weekly_users_state: event precedes the pinned"
-                    f" week-0 anchor {anchor}; re-anchor the state"
-                ),
-            ).isNull()
-        ).select("week", "u").distinct()
+    from cubefs_hadoop_spark.extensions.behavior import week_user_pairs
+
+    def pairs(batch: DataFrame) -> DataFrame:
+        return week_user_pairs(batch, anchor, user_col, ts_col)
 
     _drain(
         sdf,
-        union_state_committer(state_dir, keys, ["week", "u"]),
+        _keyed_committer(state_dir, pairs, ["week", "u"], {}),
         checkpoint_dir,
     )
 
@@ -1579,8 +1558,8 @@ def sink_catalog_week_state(
     purchase_type: str = "purchase",
 ) -> None:
     """Stream events into the x113 catalog-turnover state (S37): the
-    distinct (week, item) pair set folds as idempotent union exactly
-    once under a caller-PINNED week-0 ``anchor`` (the S32 rationale: a
+    distinct ``behavior.week_item_pairs`` (week, item) pair set folds as
+    idempotent union exactly once under a caller-PINNED week-0 ``anchor`` (the S32 rationale: a
     stream cannot derive the corpus min date).
     ``behavior.catalog_turnover_from_pairs`` serves the live
     items/new-items table — new-item attribution is exact because the
@@ -1588,43 +1567,22 @@ def sink_catalog_week_state(
     everything ingested, whatever the arrival order.  State: one row
     per (week, item) pair seen."""
 
-    def keys(batch: DataFrame) -> DataFrame:
-        return (
-            batch.filter(
-                (F.col(type_col) == purchase_type)
-                & F.col(props_col).isNotNull()
-            )
-            .select(
-                F.expr(
-                    f"datediff(cast({ts_col} as date), date'{anchor}')"
-                    " div 7"
-                ).cast("long").alias("week"),
-                F.get_json_object(props_col, item_path)
-                .cast("long")
-                .alias("k"),
-                F.col(ts_col).alias("_t"),
-            )
-            .filter(F.col("k").isNotNull())
-            .filter(
-                # anchor guard (ADVICE r13) — same rationale as S32:
-                # pre-anchor arrivals must fail the batch, not land in
-                # truncation-vs-floor-divergent week buckets.
-                F.assert_true(
-                    F.col("_t").cast("date") >= F.lit(anchor).cast("date"),
-                    F.lit(
-                        "sink_catalog_week_state: event precedes the"
-                        f" pinned week-0 anchor {anchor}; re-anchor"
-                        " the state"
-                    ),
-                ).isNull()
-            )
-            .select("week", "k")
-            .distinct()
+    from cubefs_hadoop_spark.extensions.behavior import week_item_pairs
+
+    def pairs(batch: DataFrame) -> DataFrame:
+        return week_item_pairs(
+            batch,
+            anchor,
+            type_col,
+            ts_col,
+            props_col,
+            item_path,
+            purchase_type,
         )
 
     _drain(
         sdf,
-        union_state_committer(state_dir, keys, ["week", "k"]),
+        _keyed_committer(state_dir, pairs, ["week", "k"], {}),
         checkpoint_dir,
     )
 
@@ -1665,24 +1623,19 @@ def sink_user_span_state(
     ts_col: str = "ts",
 ) -> None:
     """Stream events into the x125 tenure state (S39): per user the
-    (first, last) epoch-micro pair folds as a MIN/MAX merge exactly
+    ``behavior.user_spans`` (first, last) epoch-micro pair folds as a
+    MIN/MAX merge exactly
     once — both are associative+commutative, so like S31 there is NO
     ordering contract.  ``behavior.lifespan_from_spans`` serves the
     live x125 percentile row at any moment.  State: one row per user
     seen."""
-    from cubefs_hadoop_spark.extensions.behavior import _epoch_us
+    from cubefs_hadoop_spark.extensions.behavior import user_spans
 
     def stats(batch: DataFrame) -> DataFrame:
-        us = _epoch_us(batch, ts_col)
-        return batch.groupBy(F.col(user_col).alias("u")).agg(
-            F.min(us).cast("long").alias("e0"),
-            F.max(us).cast("long").alias("e1"),
-        )
+        return user_spans(batch, user_col, ts_col)
 
-    def merge(prev: DataFrame | None, batch_stats: DataFrame) -> DataFrame:
-        return _with_prev(prev, batch_stats).groupBy("u").agg(
-            F.min("e0").cast("long").alias("e0"),
-            F.max("e1").cast("long").alias("e1"),
-        )
-
-    _drain(sdf, _ledger_committer(state_dir, stats, merge), checkpoint_dir)
+    _drain(
+        sdf,
+        _keyed_committer(state_dir, stats, ["u"], {"e0": "min", "e1": "max"}),
+        checkpoint_dir,
+    )

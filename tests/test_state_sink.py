@@ -2156,3 +2156,90 @@ def test_streamed_user_span_state_equals_batch_x125(spark, tmp_path):
     # state grain law: one row per user
     st = read_state(spark, state)
     assert st.count() == st.select("u").distinct().count()
+
+
+def test_null_inputs_agree_across_streamed_twins(spark, tmp_path):
+    """S30/S31/S32/S37/S39 over a crafted 3-slice event log with a NULL
+    event_type, a user whose only events are NULL-typed, and a NULL-ts
+    purchase: every served view equals its batch operator on the same
+    frame.  A NULL type is not a type (COUNT(DISTINCT) semantics, as in
+    DuckDB), and a NULL ts lands in the NULL week instead of tripping
+    the week-0 anchor guard."""
+    from datetime import datetime as dt
+
+    from cubefs_hadoop_spark.extensions import behavior as B
+    from cubefs_hadoop_spark.streaming import state_sink as S
+
+    k7, k8, k9 = '{"k": 7}', '{"k": 8}', '{"k": 9}'
+    rows = [
+        (1, dt(2024, 1, 1, 10), 1, "view", None, None),
+        (2, dt(2024, 1, 1, 10, 5), 1, None, None, None),
+        (3, dt(2024, 1, 2, 9), 2, None, None, None),
+        (4, dt(2024, 1, 3, 12), 3, "view", None, None),
+        (5, dt(2024, 1, 9, 12), 3, "click", None, None),
+        (6, dt(2024, 1, 10, 8), 3, "purchase", 9.99, k7),
+        (7, None, 1, "purchase", 5.0, k8),
+        (8, dt(2024, 1, 16, 10), 1, "purchase", 3.0, k7),
+        (9, dt(2024, 1, 5, 10), 2, None, None, None),
+        (10, dt(2024, 1, 17, 11), 4, "purchase", 1.0, k9),
+        (11, dt(2024, 1, 18, 11), 4, "view", None, None),
+    ]
+    schema = (
+        "event_id long, ts timestamp, user_id long, event_type string,"
+        " value double, props string"
+    )
+    ev = spark.createDataFrame(rows, schema)
+    data = str(tmp_path / "stage" / "data")
+    for b, (lo, hi) in enumerate([(1, 4), (5, 8), (9, 11)]):
+        (
+            ev.filter(F.col("event_id").between(lo, hi))
+            .coalesce(1)
+            .write.mode("overwrite" if b == 0 else "append")
+            .parquet(data)
+        )
+    anchor = "2024-01-01"
+    twins = {
+        "S30": (
+            lambda sdf, st, ck: S.sink_user_type_state(sdf, st, ck),
+            B.diversity_from_user_types,
+            B.user_type_diversity,
+        ),
+        "S31": (
+            lambda sdf, st, ck: S.sink_conversion_state(sdf, st, ck),
+            B.conversion_latency_from_state,
+            B.conversion_latency,
+        ),
+        "S32": (
+            lambda sdf, st, ck: S.sink_weekly_users_state(sdf, st, ck, anchor),
+            B.wau_from_week_users,
+            B.weekly_active_users,
+        ),
+        "S37": (
+            lambda sdf, st, ck: S.sink_catalog_week_state(sdf, st, ck, anchor),
+            B.catalog_turnover_from_pairs,
+            B.catalog_turnover,
+        ),
+        "S39": (
+            lambda sdf, st, ck: S.sink_user_span_state(sdf, st, ck),
+            B.lifespan_from_spans,
+            B.user_lifespan,
+        ),
+    }
+    for name, (sink, serve, batch_op) in twins.items():
+        sdf = (
+            spark.readStream.schema(ev.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(data)
+        )
+        state = str(tmp_path / name / "state")
+        sink(sdf, state, str(tmp_path / name / "ckpt"))
+        live = sorted(
+            map(tuple, serve(S.read_state(spark, state)).collect()),
+            key=repr,
+        )
+        want = sorted(map(tuple, batch_op(ev).collect()), key=repr)
+        assert live == want, name
+    # the batch x99 distribution itself: u2 (NULL types only) at 0,
+    # u1 and u4 at 2, u3 at 3 — NULL never counts as a type
+    dist = B.user_type_diversity(ev).select("n_types", "users").collect()
+    assert sorted(map(tuple, dist)) == [(0, 1), (2, 2), (3, 1)]

@@ -34,7 +34,6 @@ import json
 import os
 import subprocess
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -97,32 +96,26 @@ def _x29_old_form(spark, sf_dir):
 
 
 def worker(args) -> None:
+    from bench import time_query
     from cubefs_hadoop_spark.queries import QUERIES
     from cubefs_hadoop_spark.session import get_spark
 
     spark = get_spark(f"cpu-scale-probe-{args.cpus}")
     spark.sparkContext.setLogLevel("ERROR")
-    out: dict[str, list[float]] = {}
-    for name in args.queries.split(","):
-        fn = QUERIES[name]
-        samples = []
-        for i in range(args.runs):
-            spark.catalog.clearCache()
-            spark.sparkContext.setJobDescription(f"cpuprobe:{name}#{i}")
-            t0 = time.perf_counter()
-            fn(spark, args.sf1_dir).collect()
-            samples.append(round(time.perf_counter() - t0, 3))
-        out[name] = samples
-        print(f"# {name}: {samples}", file=sys.stderr, flush=True)
+    jobs = [(name, QUERIES[name]) for name in args.queries.split(",")]
     if args.x29_old:
-        samples = []
-        for i in range(args.runs):
-            spark.catalog.clearCache()
-            spark.sparkContext.setJobDescription(f"cpuprobe:x29_old#{i}")
-            t0 = time.perf_counter()
-            _x29_old_form(spark, args.sf1_dir).collect()
-            samples.append(round(time.perf_counter() - t0, 3))
-        out["x29 (old corpus-grain distinct, probe form)"] = samples
+        jobs.append(
+            ("x29 (old corpus-grain distinct, probe form)", _x29_old_form)
+        )
+    out: dict[str, list[float]] = {}
+    for name, fn in jobs:
+        out[name] = [
+            round(
+                time_query(spark, fn, args.sf1_dir, f"cpuprobe:{name}#{i}"), 3
+            )
+            for i in range(args.runs)
+        ]
+        print(f"# {name}: {out[name]}", file=sys.stderr, flush=True)
     print(json.dumps(out), flush=True)
     spark.stop()
 

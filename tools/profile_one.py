@@ -6,7 +6,7 @@ Usage:
 
 Per query: RUNS timed executions (first discarded as warm-up, median of
 the rest reported) of ``fn(spark, sf_dir).collect()`` — the same timed
-action as bench.py so numbers are comparable with BASELINE.md — plus an
+action as bench.py (``bench.time_query``) so numbers are comparable with BASELINE.md — plus an
 optional ``.explain('formatted')`` capture for plans/r14 evidence.
 """
 
@@ -16,7 +16,6 @@ import argparse
 import os
 import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -29,6 +28,7 @@ def main() -> None:
     ap.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     args = ap.parse_args()
 
+    from bench import time_query
     from cubefs_hadoop_spark.queries import QUERIES
     from cubefs_hadoop_spark.session import get_spark
 
@@ -46,13 +46,10 @@ def main() -> None:
             )
             with open(os.path.join(args.plan, f"{name}.txt"), "w") as f:
                 f.write(txt)
-        samples = []
-        for i in range(args.runs):
-            spark.catalog.clearCache()
-            spark.sparkContext.setJobDescription(f"profile:{name}#{i}")
-            t0 = time.perf_counter()
-            fn(spark, args.sf).collect()
-            samples.append(time.perf_counter() - t0)
+        samples = [
+            time_query(spark, fn, args.sf, f"profile:{name}#{i}")
+            for i in range(args.runs)
+        ]
         med = statistics.median(samples[1:]) if len(samples) > 1 else samples[0]
         print(
             f"{name}: median {med:.3f}s  samples "
